@@ -76,16 +76,27 @@ object CatalogOps {
     }
   }
 
+  /** The catalog scan with each row's source file as an ordinary `__f`
+    * column, projected at the scan. `input_file_name()` evaluated
+    * above a join is refused when the other side reads files too and
+    * comes back empty once the join shuffles this side; a projected
+    * column survives both. */
+  private def tagged(catalog: DataFrame): DataFrame =
+    catalog.withColumn("__f", col("_metadata.file_path"))
+
   /** One aggregation answers everything the rewrite planning needs
-    * about the matched rows: which files (→ partition dirs), which
-    * collections, and how many rows — previous shape re-scanned the
-    * matched partitions once per question (4-5 jobs per call). */
+    * about the matched (file-tagged) rows: which files (→ partition
+    * dirs), which collections, and how many rows — previous shape
+    * re-scanned the matched partitions once per question (4-5 jobs per
+    * call). */
   private def matchInfo(matched: DataFrame)
   : (Seq[org.apache.hadoop.fs.Path], Seq[String], Long) = {
     val rows = matched
-      .groupBy(input_file_name().as("__f"), col("collection").as("__c"))
+      .groupBy(col("__f"), col("collection").as("__c"))
       .agg(count(lit(1)).as("__n")).collect()
-    (rows.map(r => new org.apache.hadoop.fs.Path(r.getString(0)).getParent)
+    // file_path is a URL-encoded URI string
+    (rows.map(r => new org.apache.hadoop.fs.Path(
+        new java.net.URI(r.getString(0))).getParent)
       .distinct.toIndexedSeq,
       rows.map(_.getString(1)).distinct.toIndexedSeq,
       rows.map(_.getLong(2)).sum)
@@ -97,7 +108,7 @@ object CatalogOps {
              ids: Seq[String]): Long = {
     val catalog = read(spark, catalogPath)
     val (affectedDirs, affected, removed) =
-      matchInfo(catalog.filter(col("id").isin(ids: _*)))
+      matchInfo(tagged(catalog).filter(col("id").isin(ids: _*)))
     if (affectedDirs.isEmpty) return 0L
     val remaining = catalog.filter(col("collection").isin(affected: _*))
       .filter(!col("id").isin(ids: _*))
@@ -120,7 +131,7 @@ object CatalogOps {
     }
     val catalog = read(spark, catalogPath)
     val keys = items.select(col("collection").as("__c"), col("id").as("__i"))
-    val clashing = catalog.join(keys,
+    val clashing = tagged(catalog).join(keys,
       col("collection") === col("__c") && col("id") === col("__i"), "left_semi")
     val (affectedDirs, affected, replaced) = matchInfo(clashing)
     if (affectedDirs.isEmpty) {

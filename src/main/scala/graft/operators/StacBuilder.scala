@@ -52,13 +52,14 @@ object StacBuilder {
     map_from_entries(sort_array(concat(keep, map_entries(right))))
   }
 
+  private val assetMapType =
+    "map<string,struct<href:string,media_type:string,roles:array<string>>>"
+
   /** Event-configured assets map (`{name → href}` config) as a
     * map<string, asset-struct> (reference `pystac_asset` lambdas,
     * `stac.py:75-86`/`stac.py:309-313`). */
   def eventAssets(ev: PipelineEvent): Column =
-    if (ev.assets.isEmpty)
-      lit(null).cast(
-        "map<string,struct<href:string,media_type:string,roles:array<string>>>")
+    if (ev.assets.isEmpty) lit(null).cast(assetMapType)
     else {
       val entries = ev.assets.toSeq.sortBy(_._1).map { case (name, href) =>
         struct(lit(name).as("key"),
@@ -105,7 +106,11 @@ object StacBuilder {
       case _ => Dates.extractDates(col("remote_fileurl"), ev.datetimeRange)
     }
 
-  def regexItems(objs: DataFrame, ev: PipelineEvent): DataFrame = {
+  /** RegexEvent path. `keep` names input columns carried through
+    * unchanged after the item columns (a per-row stage error the
+    * caller splits on). */
+  def regexItems(objs: DataFrame, ev: PipelineEvent,
+                 keep: Seq[String] = Nil): DataFrame = {
     graft.GraftFunctions.register(objs.sparkSession)
     val url = col("remote_fileurl")
     val dt = datetimes(ev)
@@ -128,12 +133,18 @@ object StacBuilder {
             (k, _) => k =!= "start_datetime" && k =!= "end_datetime"),
           rangeProps))
       .otherwise(baseProps)
-    val defaultAsset = map(
+    // concatenated with an empty map of the event/row asset type, the
+    // default asset takes their wider nullability: a merge below that
+    // folds away (a null-literal map) then leaves the column's type as
+    // analyzed, and a checkpoint of the build (`Runner.run`) keeps its
+    // statistics
+    val defaultAsset = map_concat(map(
       lit(ev.assetName.getOrElse("cog_default")),
       asset(url,
         coalesce(contentType(url, ev),
           lit("image/tiff; application=geotiff; profile=cloud-optimized")),
-        rolesFor(url, ev, Seq("data", "layer"))))
+        rolesFor(url, ev, Seq("data", "layer")))),
+      map().cast(assetMapType))
     val rowAssets = assetsFromMap(col("assets"), ev)
     val evAssets = eventAssets(ev)
     // `dict(stac_record.assets | pystac_assets)` — config/row assets win
@@ -142,7 +153,7 @@ object StacBuilder {
       .foldLeft(defaultAsset) { (acc, a) =>
         when(a.isNotNull, rightBiasedSortedMerge(acc, a)).otherwise(acc)
       }
-    objs.select(
+    objs.select(Seq(
       Ids.itemId(url, ev.idRegex, col("product_id")).as("id"),
       col("collection"),
       single.as("datetime"),
@@ -155,7 +166,7 @@ object StacBuilder {
       array().cast(
         "array<struct<rel:string,href:string,type:string,title:string>>")
         .as("links"),
-      dt.isNull.as("datetime_error"))
+      dt.isNull.as("datetime_error")) ++ keep.map(col): _*)
   }
 
   /** S5 integration (`stac.py:53-114` `with_proj`/`with_raster`): merge
@@ -247,9 +258,10 @@ object StacBuilder {
 
   /** CmrEvent path (`stac.py:327-367`): objs (with granule_id) joined to
     * the granule catalog — S4's per-row GranuleQuery point lookup becomes
-    * a build-side equi-join (broadcast when the granule set is small). */
+    * a build-side equi-join (broadcast when the granule set is small).
+    * `keep` as in [[regexItems]]. */
   def cmrItems(objs: DataFrame, granules: DataFrame,
-               ev: PipelineEvent): DataFrame = {
+               ev: PipelineEvent, keep: Seq[String] = Nil): DataFrame = {
     val g = granules.select(
       col("id").as("granule_id"), col("time_start"),
       col("polygons"), col("boxes"), col("links").as("cmr_links"),
@@ -277,7 +289,7 @@ object StacBuilder {
       lit("updated"), col("updated"),
       lit("collection_concept_id"), col("collection_concept_id"),
       lit("time_start"), col("time_start"))
-    joined.select(
+    joined.select(Seq(
       Ids.itemId(url, ev.idRegex, col("product_id")).as("id"),
       col("collection"),
       to_timestamp(col("time_start")).as("datetime"),
@@ -288,6 +300,6 @@ object StacBuilder {
       props.as("properties"),
       mergedAssets.as("assets"),
       cmrLinks(col("cmr_links")).as("links"),
-      lit(false).as("datetime_error"))
+      lit(false).as("datetime_error")) ++ keep.map(col): _*)
   }
 }

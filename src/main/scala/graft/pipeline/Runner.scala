@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.Materializer
 import graft.model.PipelineEvent
 import graft.operators.{Cogify, Publish, StacBuilder, Transfer}
 import graft.sources.{Cmr, Discovery}
@@ -56,7 +57,13 @@ object Runner {
 
   /** Full run: returns the built items plus the quarantine split (rows
     * whose item build failed — the reference raises per Lambda and
-    * relies on SQS redrive; here they are a DataFrame, T2). */
+    * relies on SQS redrive; here they are a DataFrame, T2). On cogify
+    * runs a failed conversion is quarantined too, with its reason in a
+    * `cog_error` column (null on rows quarantined for their date).
+    *
+    * The built frame is the `runner_items` reuse point: both outputs,
+    * and every action on them, read one computation — discovery and
+    * each file's conversion run once per run, not once per consumer. */
   def run(spark: SparkSession, ev: PipelineEvent,
           ctx: RunContext = RunContext()): RunResult = {
     var objs = discover(spark, ev, ctx)
@@ -81,14 +88,18 @@ object Runner {
 
     // STAC build: CmrEvent vs RegexEvent dispatch = presence of
     // granule_id (build-stac/handler.py:40-41)
-    val items = ev.discovery match {
+    val keep = if (ev.cogify) Seq("cog_error") else Nil
+    val items = Materializer(ev.discovery match {
       case "cmr" =>
-        StacBuilder.cmrItems(objs, granuleFrame(spark, ev, ctx), ev)
+        StacBuilder.cmrItems(objs, granuleFrame(spark, ev, ctx), ev, keep)
       case _ =>
-        StacBuilder.regexItems(objs, ev)
-    }
-    val good = items.filter(!col("datetime_error")).drop("datetime_error")
-    val bad = items.filter(col("datetime_error")).drop("datetime_error")
+        StacBuilder.regexItems(objs, ev, keep)
+    }, "runner_items")
+    val failed =
+      if (ev.cogify) col("datetime_error") || col("cog_error").isNotNull
+      else col("datetime_error")
+    val good = items.filter(!failed).drop("datetime_error", "cog_error")
+    val bad = items.filter(failed).drop("datetime_error")
     RunResult(good, bad)
   }
 

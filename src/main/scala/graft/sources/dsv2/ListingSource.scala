@@ -1,6 +1,6 @@
 package graft.sources.dsv2
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -24,6 +24,19 @@ import scala.jdk.CollectionConverters._
   * `list_objects_v2` pagination (`s3-discovery/handler.py:32-83`).
   * String predicates on `path` (startsWith / endsWith / contains) push
   * into the enumerator and drop entries before they ever become rows.
+  *
+  * How a subtree is enumerated depends on its file system
+  * ([[ListingReader.leafFiles]]). On local (`file:`) paths it is
+  * walked with one `FileSystem.listStatus` per directory:
+  * `listFiles(dir, recursive = true)` builds a `LocatedFileStatus` per
+  * file, whose constructor reads the file's permission, and without
+  * libhadoop `RawLocalFileSystem` answers that by forking `ls -ld` once
+  * per file — a 1,000-file subtree takes seconds where the walk takes
+  * milliseconds. `listStatus` on the checksummed local file system
+  * hides `.crc` sidecars exactly as `listFiles` does. Every other
+  * scheme keeps `listFiles`: on object stores such as S3A it is one
+  * flat paged LIST (about 1,000 keys a request) where a walk would
+  * send one LIST per pseudo-directory.
   *
   * Usage: `spark.read.format("graft-listing").load(rootPath)`.
   */
@@ -281,15 +294,11 @@ class ListingReader(part: ListingPartition,
 
   private val path = new Path(part.dir)
   private val fs = path.getFileSystem(conf.value)
-  private val iter: Iterator[org.apache.hadoop.fs.FileStatus] =
-    if (part.recursive) {
-      val it = fs.listFiles(path, true)
-      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-    } else {
-      // root partition: only direct (non-dir) children — subtrees are
-      // other partitions
-      fs.listStatus(path).iterator.filter(_.isFile)
-    }
+  private val iter: Iterator[FileStatus] =
+    if (part.recursive) ListingReader.leafFiles(fs, path)
+    // root partition: only direct (non-dir) children — subtrees are
+    // other partitions
+    else fs.listStatus(path).iterator.filter(_.isFile)
 
   private var current: InternalRow = _
 
@@ -307,4 +316,24 @@ class ListingReader(part: ListingPartition,
 
   override def get(): InternalRow = current
   override def close(): Unit = ()
+}
+
+object ListingReader {
+
+  /** Every file under `dir`, recursively — the entries of
+    * `fs.listFiles(dir, true)`. Local (`file:`) paths take a lazy
+    * depth-first walk with one `listStatus` per directory, which builds
+    * no per-file `LocatedFileStatus` (see [[ListingSource]]); other
+    * schemes keep `listFiles`, the flat paged listing object stores
+    * answer best. */
+  def leafFiles(fs: FileSystem, dir: Path): Iterator[FileStatus] =
+    if (fs.getScheme == "file") walk(fs, dir)
+    else {
+      val it = fs.listFiles(dir, true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+    }
+
+  private def walk(fs: FileSystem, dir: Path): Iterator[FileStatus] =
+    fs.listStatus(dir).iterator.flatMap(s =>
+      if (s.isDirectory) walk(fs, s.getPath) else Iterator.single(s))
 }

@@ -84,4 +84,46 @@ class CatalogOpsSpec extends SparkSuite {
       items(("b", "i6", "2024-01-01"))) == 0)
     assert(spark.read.parquet(path).count() == 6)
   }
+
+  test("upsert/delete tag files correctly with file-backed items and " +
+    "shuffled joins") {
+    val base = Files.createTempDirectory("catops-file")
+    // a space in the path pins the file-path decoding
+    val path = base.resolve("cat alog").toString
+    def items(rows: (String, String, String)*) = rows.toSeq
+      .toDF("collection", "id", "d")
+      .withColumn("datetime", to_timestamp(col("d"))).drop("d")
+    def files(c: String) = new java.io.File(s"$path/collection=$c")
+      .listFiles().map(f => f.getName -> f.lastModified()).toMap
+    items(("a", "i1", "2020-01-01"), ("a", "i2", "2020-06-01"),
+      ("b", "i3", "2021-01-01"))
+      .write.partitionBy("collection").parquet(path)
+    val incomingPath = base.resolve("incoming").toString
+    items(("a", "i2", "2022-12-31"), ("c", "i5", "2023-01-01"))
+      .write.parquet(incomingPath)
+    val (aBefore, bBefore) = (files("a"), files("b"))
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try {
+      assert(CatalogOps.upsert(spark, path,
+        spark.read.parquet(incomingPath)) == 1)
+      val out = spark.read.parquet(path)
+        .select(col("id"), date_format(col("datetime"), "yyyy-MM-dd"))
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(out == Map("i1" -> "2020-01-01", "i2" -> "2022-12-31",
+        "i3" -> "2021-01-01", "i5" -> "2023-01-01"))
+      assert(files("a").keySet.intersect(aBefore.keySet).isEmpty,
+        "affected partition a was not rewritten")
+      assert(files("b") == bBefore, "unaffected partition was rewritten")
+
+      val aAfter = files("a")
+      assert(CatalogOps.delete(spark, path, Seq("i5")) == 1)
+      assert(!new java.io.File(s"$path/collection=c").exists())
+      assert(files("a") == aAfter && files("b") == bBefore)
+    } finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }

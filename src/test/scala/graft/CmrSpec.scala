@@ -82,6 +82,12 @@ class CmrSpec extends SparkSuite {
     val objs = Cmr.discover(granules, ev)
       .withColumn("product_id", lit(productId))
     val items = StacBuilder.cmrItems(objs, granules, ev)
+    // stable output types: a checkpoint of the build keeps its statistics
+    for (e <- Seq(ev, event(withAssets = false))) {
+      val qe = StacBuilder.cmrItems(objs, granules, e).queryExecution
+      assert(qe.analyzed.schema.map(_.dataType) ==
+        qe.optimizedPlan.schema.map(_.dataType), e.assets)
+    }
     val r = items.select(col("id"), map_keys(col("assets")).as("ks"),
       date_format(col("datetime"), "yyyy-MM-dd").as("dt"),
       col("bbox")).collect().head

@@ -96,4 +96,99 @@ class ListingSourceSpec extends SparkSuite {
       .contains("PushedAggregates"))
     assert(avg.collect().head.getDouble(0) == 2.5)
   }
+
+  /** A tree written through Hadoop's checksummed `LocalFileSystem`
+    * (every file gets a `.crc` sidecar): depth 4, dot- and
+    * underscore-prefixed names, an empty subtree, root-level files. */
+  private lazy val hadoopRoot = {
+    import org.apache.hadoop.fs.Path
+    val fs = org.apache.hadoop.fs.FileSystem
+      .getLocal(spark.sparkContext.hadoopConfiguration)
+    val dir = Files.createTempDirectory("bucket_crc").toString
+    val files = Seq("top.tif", ".hidden_top", "_SUCCESS",
+      "a/x_2020.tif", "a/b/.dot.tif", "a/b/c/_under.tif",
+      "a/b/c/deep_2021.json", "a/b/c/d/leaf.tif", "_meta/part-0.json",
+      ".dotdir/k.tif", "z/y/w.dat")
+    files.zipWithIndex.foreach { case (f, i) =>
+      val out = fs.create(new Path(s"$dir/$f"))
+      out.write(Array.fill[Byte](i + 1)(1))
+      out.close()
+    }
+    fs.mkdirs(new Path(s"$dir/empty/nested"))
+    assert(new java.io.File(s"$dir/a/b/c/d/.leaf.tif.crc").isFile)
+    dir
+  }
+
+  /** (path, length, mtime ms) of every file under `root`, as Hadoop's
+    * recursive `listFiles` enumerates them. */
+  private def listFilesRows(root: String): Seq[(String, Long, Long)] = {
+    val p = new org.apache.hadoop.fs.Path(root)
+    val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listFiles(p, true)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .map(s => (s.getPath.toString, s.getLen, s.getModificationTime))
+      .toSeq.sortBy(_._1)
+  }
+
+  test("the per-directory walk lists exactly what listFiles does") {
+    val expected = listFilesRows(hadoopRoot)
+    assert(expected.size == 11 && !expected.exists(_._1.endsWith(".crc")))
+    val src = spark.read.format("graft-listing").load(hadoopRoot)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getTimestamp(2).getTime))
+      .toSeq.sortBy(_._1)
+    assert(rows(src) == expected)
+    val prefix = s"file:$hadoopRoot/a/b"
+    assert(rows(src.filter(col("path").startsWith(prefix))) ==
+      expected.filter(_._1.startsWith(prefix)))
+    assert(rows(src.filter(col("path").endsWith(".tif"))) ==
+      expected.filter(_._1.endsWith(".tif")))
+
+    val agg = src.filter(col("path").endsWith(".tif"))
+      .agg(count(lit(1)), sum("length"), min("length"), max("length"),
+        min("modificationTime"), max("modificationTime"))
+    assert(agg.queryExecution.executedPlan.toString
+      .contains("PushedAggregates"))
+    val tifs = expected.filter(_._1.endsWith(".tif"))
+    val r = agg.collect().head
+    assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+      r.getTimestamp(4).getTime, r.getTimestamp(5).getTime) ==
+      (tifs.size.toLong, tifs.map(_._2).sum, tifs.map(_._2).min,
+        tifs.map(_._2).max, tifs.map(_._3).min, tifs.map(_._3).max))
+  }
+
+  test("leafFiles walks local paths and keeps listFiles on other schemes") {
+    val local = org.apache.hadoop.fs.FileSystem
+      .getLocal(spark.sparkContext.hadoopConfiguration)
+    val root = new org.apache.hadoop.fs.Path(hadoopRoot)
+    val expected = listFilesRows(hadoopRoot).map(_._1)
+    def list(fs: CountingFs) = graft.sources.dsv2.ListingReader
+      .leafFiles(fs, root).map(_.getPath.toString).toSeq.sorted
+    val asLocal = new CountingFs(local, "file")
+    assert(list(asLocal) == expected)
+    assert(asLocal.listFilesCalls == 0 && asLocal.listStatusCalls > 1)
+    val asStore = new CountingFs(local, "mockstore")
+    assert(list(asStore) == expected)
+    assert(asStore.listFilesCalls == 1 && asStore.listStatusCalls == 0)
+  }
+}
+
+/** A file system over `inner` that reports `scheme` and counts the
+  * listing calls made on it. */
+class CountingFs(inner: org.apache.hadoop.fs.FileSystem, scheme: String)
+  extends org.apache.hadoop.fs.FilterFileSystem(inner) {
+  import org.apache.hadoop.fs.{FileStatus, LocatedFileStatus, Path,
+    RemoteIterator}
+  var listFilesCalls = 0
+  var listStatusCalls = 0
+  override def getScheme: String = scheme
+  override def listFiles(f: Path, recursive: Boolean)
+  : RemoteIterator[LocatedFileStatus] = {
+    listFilesCalls += 1
+    super.listFiles(f, recursive)
+  }
+  override def listStatus(f: Path): Array[FileStatus] = {
+    listStatusCalls += 1
+    super.listStatus(f)
+  }
 }

@@ -103,6 +103,91 @@ class RunnerSpec extends SparkSuite {
       Cogify.parseAffine("(__import__, 1, 2, 3, 4, 5)"))
   }
 
+  test("cogify run: failed conversions are quarantined with their " +
+    "reason, never published") {
+    val dir = Files.createTempDirectory("cogq")
+    Files.write(dir.resolve("good_2020.tif"),
+      graft.sources.RasterFixtures.stripTiff(5, 4, 0 until 20))
+    Files.write(dir.resolve("corrupt_2020.tif"), Array.fill[Byte](64)(7))
+    Files.writeString(dir.resolve("other_2020.xyz"), "x")
+    val csv = dir.resolve("inv.csv")
+    Files.writeString(csv, Seq("good_2020.tif", "corrupt_2020.tif",
+      "other_2020.xyz").map(n => dir.resolve(n).toString)
+      .mkString("s3_path\n", "\n", "\n"))
+    val ev = EventJson.parse(
+      s"""{"collection": "c", "discovery": "inventory",
+         | "inventory_url": "$csv", "cogify": true}""".stripMargin)
+    val r = Runner.run(spark, ev, Runner.RunContext(
+      cogifyTransform = new Cogify.RasterCogTransform()))
+    assert(!r.items.columns.contains("cog_error"))
+    assert(r.items.select("id").collect().map(_.getString(0)).toSeq ==
+      Seq("good_2020"))
+    val q = r.quarantined.select("id", "cog_error").collect()
+      .map(row => row.getString(0) -> row.getString(1)).toMap
+    assert(q.keySet == Set("corrupt_2020", "other_2020"))
+    assert(q("corrupt_2020").startsWith("cogify failed"), q)
+    assert(q("other_2020").contains("not supported"), q)
+  }
+
+  test("a run computes once: every output and action reads one " +
+    "build, under both materialization strategies") {
+    val n = 12
+    val csv = Files.createTempFile("once", ".csv")
+    Files.writeString(csv, ((0 until n - 1).map(k => s"s3://b/f${k}_2020.tif")
+      :+ "s3://b/nodate.tif").mkString("s3_path\n", "\n", "\n"))
+    val ev = EventJson.parse(
+      s"""{"collection": "c", "discovery": "inventory",
+         | "inventory_url": "$csv", "cogify": true}""".stripMargin)
+    def calls(): Int = {
+      CountingTransform.calls.set(0)
+      val r = Runner.run(spark, ev,
+        Runner.RunContext(cogifyTransform = new CountingTransform))
+      assert(r.items.collect().length == n - 1)
+      assert(!r.quarantined.isEmpty)
+      assert(r.quarantined.count() == 1)
+      CountingTransform.calls.get
+    }
+    assert(calls() == n)
+    val dir = Files.createTempDirectory("once_mat").toString
+    Materializer.set(Materializer.PersistedTable(dir))
+    try {
+      assert(calls() == n)
+      assert(new java.io.File(s"$dir/runner_items").isDirectory)
+    } finally {
+      Materializer.reset()
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
+  }
+
+  test("run outputs keep their plan statistics, so joins on them " +
+    "still broadcast") {
+    val csv = Files.createTempFile("stats", ".csv")
+    Files.writeString(csv, (0 until 20).map(k => s"s3://b/f${k}_2020.tif")
+      .mkString("s3_path\n", "\n", "\n"))
+    val ev = EventJson.parse(
+      s"""{"collection": "c", "discovery": "inventory",
+         | "inventory_url": "$csv"}""".stripMargin)
+    // a checkpoint keeps the plan's statistics only when the analyzed
+    // and optimized outputs have the same types
+    for (e <- Seq(ev, ev.copy(assets = Map("meta" -> "s3://b/m.json")))) {
+      val built = graft.operators.StacBuilder.regexItems(
+        Runner.discover(spark, e), e).queryExecution
+      assert(built.analyzed.schema.map(_.dataType) ==
+        built.optimizedPlan.schema.map(_.dataType), e.assets)
+    }
+    val r = Runner.run(spark, ev)
+    val size = r.items.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(size < spark.sessionState.conf.autoBroadcastJoinThreshold, size)
+    // the clash probe of CatalogOps.upsert over a catalog of these items
+    val cat = Files.createTempDirectory("stats_cat").resolve("cat").toString
+    graft.operators.CatalogOps.upsert(spark, cat, r.items)
+    val keys = r.items.select(col("collection").as("__c"), col("id").as("__i"))
+    val plan = graft.operators.CatalogOps.read(spark, cat).join(keys,
+      col("collection") === col("__c") && col("id") === col("__i"),
+      "left_semi").queryExecution.executedPlan.toString
+    assert(plan.contains("BroadcastHashJoin"), plan.take(800))
+  }
+
   test("collection dimension: load, validate, broadcast join (J2)") {
     val dir = Files.createTempDirectory("colls")
     Files.writeString(dir.resolve("c1.json"),
@@ -125,5 +210,18 @@ class RunnerSpec extends SparkSuite {
     // the join must be a broadcast, not a sort-merge
     val plan = joined.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), plan.take(500))
+  }
+}
+
+/** Passthrough conversion that counts its calls JVM-wide. */
+object CountingTransform {
+  val calls = new java.util.concurrent.atomic.AtomicInteger()
+}
+
+class CountingTransform extends Cogify.FileTransform {
+  def toCog(url: String, collection: String,
+            config: Cogify.CollectionConfig): String = {
+    CountingTransform.calls.incrementAndGet()
+    url + ".tif"
   }
 }
