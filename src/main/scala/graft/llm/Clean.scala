@@ -52,8 +52,16 @@ object Clean {
     // its semi-join probe both read them, so the (C4/Gopher/token)
     // gate — normalize+tokenize string work over the full corpus —
     // otherwise runs twice before near-dup even starts. LAZY: the
-    // exact-survivor materialization below populates these blocks
-    // inside its own job (no separate scheduled pass).
+    // exact-survivor checkpoint below is lazy too, so the first eager
+    // consumer is `Dedup.nearDuplicates`' checkpoint of its verified
+    // pairs (with a prefilter margin, its earlier signature
+    // checkpoint): that job's shingle/signature stage fills both
+    // checkpoints' blocks, with no separate scheduled pass. Caveat:
+    // when AQE turns one side of the exact stage's min-agg/semi-join
+    // into a broadcast, the broadcast build runs as its own job
+    // concurrently with the other side, and both can compute these
+    // blocks (the gate kernels run twice; "Block already exists"
+    // warnings in the log).
     d = d.localCheckpoint(false)
     // exact dedup: keep the smallest id per identical text — the
     // skew-safe min(id)-agg + semi-join shape (see

@@ -151,7 +151,11 @@ object Dsir {
     * target slice exactly — so the slice's tokenize + md5 pass (the
     * dominant per-row kernel) is never run a second time. The id list
     * comes from a text-column-pruned scan. Scores are bit-identical
-    * to `importanceScores(raw, raw.filter(targetPred), ...)`. */
+    * to `importanceScores(raw, raw.filter(targetPred), ...)` PROVIDED
+    * `idCol` is unique in `raw`: the target mass is rolled up per id,
+    * so with duplicate ids every row of an id counts as target when
+    * any one of them satisfies the predicate, where the reference
+    * form counts only the matching rows. */
   def importanceScoresSubset(raw: DataFrame, targetPred: Column,
                              idCol: String, textCol: String,
                              nBuckets: Int = 1024): DataFrame = {

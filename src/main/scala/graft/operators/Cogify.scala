@@ -25,8 +25,12 @@ import org.apache.spark.sql.types.{BooleanType, StringType, StructField, StructT
   * What is pluggable: the actual raster IO ([[FileTransform]]).
   * GDAL/rasterio are CPython-native; production wires a JNI/GDAL or
   * process-based transform, tests use [[passthroughTransform]]. The
-  * conversion is per-file local work inside `mapPartitions` —
-  * embarrassingly parallel, no shuffle (SURVEY §2.1/S6). */
+  * conversion is per-file local work inside `mapPartitions`, with no
+  * shuffle (SURVEY §2.1/S6). Within one file, [[RasterCogTransform]]'s
+  * writer ([[graft.sources.GeoTiffWriter]]) also compresses the tiles
+  * in parallel on all of the executor's cores, as the reference's
+  * `GDAL_NUM_THREADS=ALL_CPUS` does, so one large raster does not
+  * hold the stage on a single task thread. */
 object Cogify {
 
   /** F15 — affine geotransform term language (replaces the eval). */

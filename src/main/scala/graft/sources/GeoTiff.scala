@@ -481,23 +481,37 @@ object GeoTiff {
         // iterating them anyway turns an inflated tile width into a
         // per-row busy loop (same bomb class as the dims guard above)
         val xMax = math.min(segW.toLong, w.toLong - x0).toInt
+        // row by row: the row's samples as floats, with the sample read
+        // chosen once per row, not per sample (decodeOk admits uint8,
+        // uint16 and float32 only); the short-segment check above
+        // guarantees the bytes are all there
+        val rowN = math.max(0, xMax) * bandsPerSeg
+        val vals = new Array[Float](rowN)
         var y = 0
-        while (y < segH && y0 + y < h) {
-          var x = 0
-          while (x < xMax) {
-            var b = 0
-            while (b < bandsPerSeg) {
-              val i = (y * segW + x) * pixelBytes + b * sampleBytes
-              if (i + sampleBytes <= seg.length)
-                out(band0 + b)((y0 + y) * w + (x0 + x)) =
-                  (m.bitsPerSample, fmt) match {
-                    case (8, _) => (seg(i) & 0xFF).toFloat
-                    case (16, _) => (sb.getShort(i) & 0xFFFF).toFloat
-                    case _ => sb.getFloat(i)
-                  }
-              b += 1
+        while (y < rowsNeeded && rowN > 0) {
+          val at = y * segW * bandsPerSeg // first sample of the row
+          var k = 0
+          sampleBytes match {
+            case 1 => while (k < rowN) {
+              vals(k) = (seg(at + k) & 0xFF).toFloat; k += 1 }
+            case 2 => while (k < rowN) {
+              vals(k) = (sb.getShort(2 * (at + k)) & 0xFFFF).toFloat; k += 1 }
+            case _ => while (k < rowN) {
+              vals(k) = sb.getFloat(4 * (at + k)); k += 1 }
+          }
+          val row = (y0 + y) * w + x0
+          if (bandsPerSeg == 1)
+            System.arraycopy(vals, 0, out(band0), row, rowN)
+          else {
+            var x = 0
+            while (x < xMax) {
+              var b = 0
+              while (b < bandsPerSeg) {
+                out(band0 + b)(row + x) = vals(x * bandsPerSeg + b)
+                b += 1
+              }
+              x += 1
             }
-            x += 1
           }
           y += 1
         }

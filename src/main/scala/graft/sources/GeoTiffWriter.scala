@@ -2,7 +2,9 @@ package graft.sources
 
 import java.io.ByteArrayOutputStream
 import java.nio.{ByteBuffer, ByteOrder}
+import java.util.stream.IntStream
 import java.util.zip.Deflater
+import scala.collection.immutable.ArraySeq
 
 /** K3 — minimal cloud-optimized GeoTIFF writer: the inverse of
   * [[GeoTiff]]'s parser, replacing the reference's GDAL
@@ -18,7 +20,9 @@ import java.util.zip.Deflater
   * 2 per level, levels until the smallest fits the block size
   * (`get_maximum_overview_level`), each marked
   * NewSubfileType=reduced-image. Pure JVM (java.util.zip.Deflater) —
-  * no GDAL.
+  * no GDAL. Tiles compress in parallel, as GDAL_NUM_THREADS=ALL_CPUS
+  * does (see `compressLevels`), with bytes identical to a serial
+  * write.
   */
 object GeoTiffWriter {
 
@@ -71,6 +75,52 @@ object GeoTiffWriter {
   private case class Level(width: Int, height: Int, tile: Int,
                            tiles: Seq[Array[Byte]])
 
+  /** One resolution level before compression: a row-major grid per
+    * band, cut into `tile`×`tile` blocks. */
+  private case class Grid(bands: Array[Array[Float]], width: Int,
+                          height: Int, tile: Int) {
+    val tilesAcross: Int = (width + tile - 1) / tile
+    val tileCount: Int = tilesAcross * ((height + tile - 1) / tile)
+  }
+
+  /** Every resolution level of a COG, deflated: level 0 plus the
+    * nearest-neighbour overview halvings (cheap, all computed first),
+    * then every (level, tile) packed and deflated as ONE batch on the
+    * JVM's common ForkJoin pool — its workers plus the calling task
+    * thread, the counterpart of GDAL_NUM_THREADS=ALL_CPUS — so one
+    * large raster does not compress on a single thread. Each tile
+    * deflates independently and deterministically and results keep
+    * level/row/column order, so the bytes equal a one-tile-at-a-time
+    * write.
+    *
+    * @param pack packs tile (tx, ty) of a grid into its uncompressed
+    *             bytes */
+  private def compressLevels(bands: Array[Array[Float]], width: Int,
+                             height: Int, tileSize: Int, overviews: Boolean,
+                             ovrTileSize: Int,
+                             pack: (Grid, Int, Int) => Array[Byte])
+  : Seq[Level] = {
+    val nLevels = if (overviews) overviewLevels(width, height, tileSize)
+                  else 0
+    val grids = Seq.iterate(Grid(bands, width, height, tileSize),
+      nLevels + 1) { g =>
+      val halved = g.bands.map(b => halveNearest(b, g.width, g.height))
+      // overview block geometry follows GDAL_TIFF_OVR_BLOCKSIZE
+      Grid(halved.map(_._1), halved.head._2, halved.head._3, ovrTileSize)
+    }
+    val jobs = grids.flatMap(g => (0 until g.tileCount).map(g -> _))
+      .toArray
+    val tiles = new Array[Array[Byte]](jobs.length)
+    IntStream.range(0, jobs.length).parallel().forEach { i =>
+      val (g, t) = jobs(i)
+      tiles(i) = deflate(pack(g, t % g.tilesAcross, t / g.tilesAcross))
+    }
+    grids.zip(grids.scanLeft(0)(_ + _.tileCount)).map { case (g, from) =>
+      Level(g.width, g.height, g.tile,
+        ArraySeq.unsafeWrapArray(tiles.slice(from, from + g.tileCount)))
+    }
+  }
+
   /** Write a single-band float32 tiled GeoTIFF (little-endian).
     *
     * @param data row-major width*height samples
@@ -96,15 +146,10 @@ object GeoTiffWriter {
     require(data.length == width * height,
       s"${data.length} samples for ${width}x$height")
     val fillF = fill.getOrElse(0.0).toFloat
-
-    def tilesOf(d: Array[Float], w: Int, h: Int, ts: Int)
-    : Seq[Array[Byte]] = {
-      val tilesAcross = (w + ts - 1) / ts
-      val tilesDown = (h + ts - 1) / ts
-      for {
-        ty <- 0 until tilesDown
-        tx <- 0 until tilesAcross
-      } yield {
+    val levels = compressLevels(Array(data), width, height, tileSize,
+      overviews, ovrTileSize, { (g, tx, ty) =>
+        val ts = g.tile
+        val d = g.bands(0)
         val tb = ByteBuffer.allocate(ts * ts * 4)
           .order(ByteOrder.LITTLE_ENDIAN)
         var y = 0
@@ -114,29 +159,16 @@ object GeoTiffWriter {
             val gx = tx * ts + x
             val gy = ty * ts + y
             tb.putFloat(
-              if (gx < w && gy < h) d(gy * w + gx) else fillF)
+              if (gx < g.width && gy < g.height) d(gy * g.width + gx)
+              else fillF)
             x += 1
           }
           y += 1
         }
-        deflate(tb.array())
-      }
-    }
-
-    val nLevels = if (overviews) overviewLevels(width, height, tileSize)
-                  else 0
-    val levels = Seq.newBuilder[Level]
-    levels += Level(width, height, tileSize,
-      tilesOf(data, width, height, tileSize))
-    var (d, w, h) = (data, width, height)
-    (0 until nLevels).foreach { _ =>
-      val (d2, w2, h2) = halveNearest(d, w, h)
-      d = d2; w = w2; h = h2
-      // overview block geometry follows GDAL_TIFF_OVR_BLOCKSIZE
-      levels += Level(w, h, ovrTileSize, tilesOf(d, w, h, ovrTileSize))
-    }
-    assemble(levels.result(), spp = 1, bits = 32, fmt = 3,
-      photometric = 1, geo, fill)
+        tb.array()
+      })
+    assemble(levels, spp = 1, bits = 32, fmt = 3, photometric = 1, geo,
+      fill)
   }
 
   /** Write a 3-band 8-bit RGB tiled deflate COG (chunky interleaved,
@@ -170,15 +202,10 @@ object GeoTiffWriter {
     // valid black). Drop the unrepresentable tag instead.
     val fill8 = fill.filter(v => v >= 0.0 && v <= 255.0)
     val fillB = toByte(fill8.getOrElse(0.0).toFloat)
-
-    def tilesOf(bs: Array[Array[Float]], w: Int, h: Int, ts: Int)
-    : Seq[Array[Byte]] = {
-      val tilesAcross = (w + ts - 1) / ts
-      val tilesDown = (h + ts - 1) / ts
-      for {
-        ty <- 0 until tilesDown
-        tx <- 0 until tilesAcross
-      } yield {
+    val levels = compressLevels(bands, width, height, tileSize, overviews,
+      ovrTileSize, { (g, tx, ty) =>
+        val ts = g.tile
+        val bs = g.bands
         val tb = new Array[Byte](ts * ts * 3)
         var y = 0
         while (y < ts) {
@@ -187,8 +214,8 @@ object GeoTiffWriter {
             val gx = tx * ts + x
             val gy = ty * ts + y
             val o = (y * ts + x) * 3
-            if (gx < w && gy < h) {
-              val p = gy * w + gx
+            if (gx < g.width && gy < g.height) {
+              val p = gy * g.width + gx
               tb(o) = toByte(bs(0)(p))
               tb(o + 1) = toByte(bs(1)(p))
               tb(o + 2) = toByte(bs(2)(p))
@@ -197,24 +224,10 @@ object GeoTiffWriter {
           }
           y += 1
         }
-        deflate(tb)
-      }
-    }
-
-    val nLevels = if (overviews) overviewLevels(width, height, tileSize)
-                  else 0
-    val levels = Seq.newBuilder[Level]
-    levels += Level(width, height, tileSize,
-      tilesOf(bands, width, height, tileSize))
-    var (bs, w, h) = (bands, width, height)
-    (0 until nLevels).foreach { _ =>
-      val halved = bs.map(b => halveNearest(b, w, h))
-      bs = halved.map(_._1)
-      w = halved.head._2; h = halved.head._3
-      levels += Level(w, h, ovrTileSize, tilesOf(bs, w, h, ovrTileSize))
-    }
-    assemble(levels.result(), spp = 3, bits = 8, fmt = 1,
-      photometric = 2, geo, fill8)
+        tb
+      })
+    assemble(levels, spp = 3, bits = 8, fmt = 1, photometric = 2, geo,
+      fill8)
   }
 
   /** Shared COG assembly over a chain of resolution levels: header +

@@ -815,4 +815,117 @@ class CogWriterSpec extends SparkSuite {
       s"$out")
     assert(out("s3://b/skip.xyz").contains("not supported"))
   }
+
+  // ---- byte identity: the tile batch writes the serial writer's bytes --
+
+  private def sha256(b: Array[Byte]): String =
+    java.security.MessageDigest.getInstance("SHA-256").digest(b)
+      .map("%02x".format(_)).mkString
+
+  /** Seeded multi-tile rasters over every writer path. Pixels and
+    * geotransforms come from integer and IEEE arithmetic only (the
+    * NetCDF grid takes an affine override, not the EPSG:3857 default
+    * transform), so the bytes do not depend on the JVM's libm. */
+  private def digestFixtures: Seq[(String, Array[Byte])] = {
+    val rnd = new scala.util.Random(11)
+    // 1200x1100: 5x5 data tiles, overviews 600x550, 300x275, 150x138
+    val (fw, fh) = (1200, 1100)
+    val f32 = Array.tabulate(fw * fh)(i =>
+      (i % fw) * 0.37f + (i / fw) * 0.11f + rnd.nextInt(5))
+    val geo = GeoTiffWriter.Geo(Seq(-180.0, 0.3, 0.0, 90.0, 0.0, -0.3))
+    // 700x600 RGB: 3x3 tiles, overviews 350x300 and 175x150; values
+    // outside 0..255 exercise the clamp
+    val (rw, rh) = (700, 600)
+    val rgb = Array.fill(3)(Array.fill(rw * rh)(
+      (rnd.nextInt(300) - 20).toFloat))
+    val utm = GeoTiffWriter.Geo(Seq(500000.0, 30.0, 0.0, 4600000.0, 0.0,
+      -30.0), epsg = 32633, epsgIsGeographic = Some(false))
+    // 600x300 classic NetCDF grid: 3x2 tiles, one 300x150 overview
+    val (nw, nh) = (600, 300)
+    val nc = NetCdfFixtures.classic(
+      dims = Seq("lat" -> nh, "lon" -> nw),
+      vars = Seq(
+        NetCdfFixtures.CVar("lat", Seq("lat"), 6,
+          (0 until nh).map(i => -60.0 + 0.4 * i)),
+        NetCdfFixtures.CVar("lon", Seq("lon"), 6,
+          (0 until nw).map(i => -180.0 + 0.6 * i)),
+        NetCdfFixtures.CVar("precip", Seq("lat", "lon"), 5,
+          Vector.tabulate(nw * nh)(i =>
+            if (i % 173 == 0) -9999.0 else ((i * 7) % 1000) * 0.25),
+          attrs = Seq("_FillValue" -> Right(Seq(-9999.0))))))
+    val ncCfg = Cogify.CollectionConfig(variableName = Some("precip"),
+      xVariable = Some("lon"), yVariable = Some("lat"),
+      affine = Some(Cogify.parseAffine("(xmin, xres, 0, ymax, 0, -yres)")))
+    Seq(
+      "float32 write, 3 overview levels" ->
+        GeoTiffWriter.write(fw, fh, f32, geo, fill = Some(-9999.0)),
+      "RGB writeRgb, 2 overview levels" ->
+        GeoTiffWriter.writeRgb(rw, rh, rgb, utm, fill = Some(7.0)),
+      "classicNetcdfToCog" ->
+        Cogify.classicNetcdfToCog(nc, ncCfg).fold(e => fail(e), identity),
+      "float32 no overviews, no geo" ->
+        GeoTiffWriter.writeOpt(fw, fh, f32, None, fill = Some(-1.5),
+          overviews = false),
+      "RGB no overviews" ->
+        GeoTiffWriter.writeRgb(rw, rh, rgb, geo, overviews = false))
+  }
+
+  test("COG bytes match the digests recorded from the serial writer") {
+    val recorded = Map(
+      "float32 write, 3 overview levels" ->
+        "69835f1e788bc38e8c3a4bb1ed1e53d816048cd85144d58bdf35a76acab10dec",
+      "RGB writeRgb, 2 overview levels" ->
+        "7242c81be5aa8e56707ed387ce9b54c9952e51fa4e8c4d5ccc2d9a8a8b39cf0e",
+      "classicNetcdfToCog" ->
+        "377ae2fd2be5d46d86e515fa628aaee61aa6d677fca532657f42c07f120c7f16",
+      "float32 no overviews, no geo" ->
+        "91720b92c06a50989b3edca562b121cad7d811dc5ddcc5386aee23cab89066f2",
+      "RGB no overviews" ->
+        "9cdd62bbadbb41d2889687a7d464e56a56d2b354b734536dfa470b8a50af1bd5")
+    val got = digestFixtures.map { case (k, b) => k -> sha256(b) }
+    assert(got.map(_._1).toSet == recorded.keySet)
+    val changed = got.filter { case (k, d) => d != recorded(k) }
+    assert(changed.isEmpty, changed.mkString("\n"))
+  }
+
+  test("Cogify.run under local[4]: concurrent conversions write the " +
+    "bytes of a one-at-a-time tiffToCog; error text is unchanged") {
+    import graft.sources.RasterFixtures
+    val dir = Files.createTempDirectory("cog-concurrent")
+    // distinct pixels per file, so a tile landing in another file's
+    // output cannot hide behind identical inputs
+    val (w, h) = (700, 600) // 3x3 data tiles + one 350x300 overview
+    val rasters = (0 until 8).map { k =>
+      val rnd = new scala.util.Random(k)
+      val px = Vector.tabulate(w * h)(i =>
+        ((i % w) * (k + 1) + (i / w) * 3 + rnd.nextInt(9)) & 0xFF)
+      s"r$k.tif" -> RasterFixtures.stripTiffEncoded(w, h, px,
+        rowsPerStrip = 16, compression = 8, encode = RasterFixtures.deflate)
+    }
+    // a TIFF header whose first IFD lies past the end of the file
+    val corrupt = "corrupt.tif" ->
+      (Array[Byte]('I', 'I', 42, 0, 0, 0, 1, 0) ++ Array.fill[Byte](64)(5))
+    val inputs = rasters :+ corrupt
+    inputs.foreach { case (n, b) => Files.write(dir.resolve(n), b) }
+    val expected = inputs.map { case (n, b) => n -> Cogify.tiffToCog(b) }
+      .toMap
+    val rows = spark.sparkContext.parallelize(inputs.map { case (n, _) =>
+      (s"file://${dir.resolve(n)}", "c1", true, false) }, inputs.size)
+      .toDF("remote_fileurl", "collection", "cogify", "upload")
+    val out = Cogify.run(rows, new Cogify.RasterCogTransform(), Map.empty)
+      .collect()
+    assert(out.length == inputs.size)
+    out.foreach { r =>
+      val path = java.nio.file.Paths.get(r.getString(0).stripPrefix("file://"))
+      val name = path.getFileName.toString
+      expected(name) match {
+        case Right(cog) =>
+          assert(r.isNullAt(r.length - 1), s"$name: ${r.getString(r.length - 1)}")
+          assert(Files.readAllBytes(path).sameElements(cog), name)
+        case Left(e) =>
+          assert(r.getString(r.length - 1) == s"cogify failed: $e", name)
+      }
+    }
+    assert(expected.values.count(_.isLeft) == 1)
+  }
 }

@@ -38,4 +38,35 @@ class SourceLintSpec extends AnyFunSuite {
       }
     assert(hits.isEmpty, hits.mkString("\n"))
   }
+
+  test("in-task fan-out only in GeoTiffWriter's tile batch and Bench's " +
+    "file walk") {
+    // A Spark task already holds one of the executor's cores; a thread
+    // pool opened inside it multiplies the executor's threads without
+    // the scheduler knowing. The one sanctioned fan-out inside a task
+    // is the COG tile batch on the JVM's common ForkJoin pool (bounded
+    // by the core count, shared by every task); Bench's untimed
+    // page-cache warm-up walks files with a parallel collection.
+    assert(Files.isDirectory(mainSrc), s"run from the repo root: $mainSrc")
+    val banned = Seq(
+      "\\.parallel\\(\\)".r, // java.util.stream
+      "\\.parallel(Stream|SetAll|Sort|Prefix)\\(".r, // same common pool
+      "\\bForkJoinPool\\b".r,
+      "\\bExecutors\\.new".r,
+      "\\.par\\b".r) // Scala parallel collections
+    val allowed = Set(
+      "graft/sources/GeoTiffWriter.scala: \\.parallel\\(\\) x1",
+      "graft/Bench.scala: \\.par\\b x1")
+    val hits = Files.walk(mainSrc).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.sorted
+      .flatMap { p =>
+        val src = code(p)
+        banned.flatMap { r =>
+          val n = r.findAllIn(src).size
+          if (n == 0) None else Some(s"${mainSrc.relativize(p)}: $r x$n")
+        }
+      }
+    assert(hits.toSet == allowed,
+      s"found:\n${hits.mkString("\n")}\nallowed:\n${allowed.mkString("\n")}")
+  }
 }
