@@ -783,7 +783,7 @@ object LlmQueries {
       .join(comps, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
-      .localCheckpoint(false)
+      .materialized("q_dup_clusters_assigned")
     // size via map-side-combinable groupBy + join-back (the
     // keepBestPerCluster shape), NOT count-over-window: a 10⁶-member
     // viral cluster reduces to per-partition counters under the agg,
@@ -822,7 +822,7 @@ object LlmQueries {
         coalesce(col("cluster_id"), col("doc_id")))
       // lazy: keepBestPerCluster's min-agg branch populates the blocks
       // inside the final action; no separate materialization job
-      .localCheckpoint(false)
+      .materialized("q_dedup_best_clustered")
     Dedup.keepBestPerCluster(clustered, "doc_id", "cluster_id",
       col("__prio"))
       .select("doc_id")

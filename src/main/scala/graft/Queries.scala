@@ -1,5 +1,6 @@
 package graft
 
+import graft.Materializer.MaterializeOps
 import graft.functions.{Dates, Geo, Ids}
 import graft.llm.{Dedup, Similarity, Text}
 import graft.model.PipelineEvent
@@ -368,7 +369,7 @@ object Queries {
     // events scan per branch; custs is a plain pruned scan, re-reading
     // it per branch is cheaper than materializing it would be
     val users = t(s, dir, "events").select(col("user_id").as("k"))
-      .distinct().localCheckpoint(true)
+      .distinct().materialized("q_u_set_ops_users", eager = true)
     val custs = t(s, dir, "customer").select(col("c_custkey").as("k"))
     users.intersect(custs).agg(count(lit(1)).as("n_common"))
       .crossJoin(users.except(custs).agg(count(lit(1)).as("n_only_users")))
@@ -565,8 +566,8 @@ object Queries {
     graft.sources.NetCdf.scanMetadata(files).toDF()
       .select(col("path").as("fname"), col("ok"), col("format"),
         coalesce(col("varPath"), lit("")).as("var_path"),
-        element_at(col("shape"), 1).as("dim0"),
-        element_at(col("shape"), 2).as("dim1"),
+        try_element_at(col("shape"), lit(1)).as("dim0"),
+        try_element_at(col("shape"), lit(2)).as("dim1"),
         col("typeName").as("type_name"),
         col("fillValue").as("fill_value"))
       .orderBy("fname", "var_path")
@@ -581,7 +582,7 @@ object Queries {
     import s.implicits._
     import graft.sources.RasterFixtures._
     val w = 19; val h = 7
-    val vals = Seq.tabulate(w * h)(i => (i * 13 + 5) % 256)
+    val vals = IndexedSeq.tabulate(w * h)(i => (i * 13 + 5) % 256)
     val files = Seq(
       ("lzw.tif",
         stripTiffEncoded(w, h, vals, 3, 5, lzwEncodeNaive)),
@@ -685,7 +686,7 @@ object Queries {
   def s5Jpeg(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val w = 40; val h = 25
-    val px = Seq.tabulate(w * h) { i =>
+    val px = IndexedSeq.tabulate(w * h) { i =>
       val x = i % w; val y = i / w
       (x * 255 / (w - 1) + y * 255 / (h - 1)) / 2
     }

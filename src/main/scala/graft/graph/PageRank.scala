@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.Materializer.MaterializeOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -12,13 +13,13 @@ import org.apache.spark.sql.functions._
   *   - the edge table is shuffled ONCE, at build: `degEdges` is
   *     hash-partitioned by `src` before its checkpoint, and each
   *     iteration's rank state comes out of a join keyed by `node`
-  *     with the same partition count — localCheckpoint preserves
-  *     outputPartitioning, so the per-iteration contribution join
+  *     with the same partition count — the default local checkpoint
+  *     keeps outputPartitioning, so the per-iteration contribution join
   *     needs NO exchange of the (at scale, huge) edge side; only the
   *     per-edge contributions (map-side combined to ≤|V| rows per
   *     partition) and the rank state move per iteration;
   *   - out-degrees are computed once and joined back, never recomputed;
-  *   - every iteration ends in a LAZY `localCheckpoint` so the lineage
+  *   - every iteration ends in a LAZY reuse point so the lineage
   *     does not grow linearly with iterations (the plan-growth trap
   *     `Dedup.connectedComponentsStars` handles) without spending a
   *     scheduled materialization job per iteration;
@@ -77,7 +78,7 @@ object PageRank {
     // blocks inside its own materialization job, so the edge build no
     // longer pays a separate scheduled pass; nodes.count() and the
     // iterations then read the cached blocks.
-    val e = edges.select(col("src"), col("dst")).localCheckpoint(false)
+    val e = edges.select(col("src"), col("dst")).materialized("pagerank_edges")
     // the rank state comes out of shuffles at numShufflePartitions —
     // degEdges must sit at the SAME count or EnsureRequirements
     // re-shuffles the edge side inside every iteration (on a default
@@ -94,20 +95,21 @@ object PageRank {
     val nodes = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node")))
       .distinct()
-      .localCheckpoint(false)
+      .materialized("pagerank_nodes")
     val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-      .localCheckpoint(false)
+      .materialized("pagerank_outdeg")
     // partitioned by src ON PURPOSE: the per-iteration contribution
     // join reuses this layout against the node-keyed rank state
     val degEdges = e.join(outDeg, "src")
       .repartition(par, col("src"))
-      .localCheckpoint(true)
+      .materialized("pagerank_deg_edges", eager = true)
 
     val n = nodes.count()
     if (n == 0) return (nodes.withColumn("rank", lit(0L)), 0)
 
     // lazy like the per-iteration states: iteration 1's job populates
-    var ranks = nodes.withColumn("rank", lit(Scale / n)).localCheckpoint(false)
+    var ranks = nodes.withColumn("rank", lit(Scale / n))
+      .materialized("pagerank_ranks_init")
     val teleport = (3L * Scale) / (20L * n)
     var iter = 0
     var converged = false
@@ -130,12 +132,9 @@ object PageRank {
         .select(col("node"),
           (lit(teleport) +
             expr("17 * coalesce(in_mass, 0L) div 20")).as("rank"))
-        // LAZY checkpoint: still truncates lineage (materialized on
-        // first use, i.e. inside the NEXT iteration's job), but does
-        // not spend a whole scheduled job per iteration — measured
-        // ~40% of q_pagerank wall at sf0.1 was the 5 eager
-        // materialization jobs
-        .localCheckpoint(false)
+        // lazy: filled inside the NEXT iteration's job; the 5 eager
+        // jobs were ~40% of q_pagerank wall at sf0.1
+        .materialized("pagerank_ranks")
       iter += 1
       if (tolL1 > 0L) {
         // exact L1 delta: both sides are node-partitioned, so the

@@ -1,7 +1,7 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.{functions}
+import graft.Materializer.MaterializeOps
+import org.apache.spark.sql.{DataFrame, functions}
 import org.apache.spark.sql.functions._
 
 /** Triangle counting by degree-ordered edge orientation (the
@@ -36,7 +36,7 @@ object Triangles {
         greatest(col("src"), col("dst")).as("b"))
       .where(col("a") =!= col("b"))
       .distinct()
-      .localCheckpoint(true)
+      .materialized("triangles_undirected", eager = true)
 
     val deg = undirected.select(col("a").as("n"))
       .unionAll(undirected.select(col("b").as("n")))
@@ -69,7 +69,7 @@ object Triangles {
       .select(col("lo.id").as("src"), col("hi.id").as("dst"),
         col("hi.d").as("dst_d"))
       .repartition(par, col("src"))
-      .localCheckpoint(true)
+      .materialized("triangles_oriented", eager = true)
 
     // wedges from each source: unordered pair {x, y} ordered by the
     // SAME (degree, id) key the orientation used, so the closing edge

@@ -1,6 +1,6 @@
 package graft.llm
 
-
+import graft.Materializer.MaterializeOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -56,13 +56,11 @@ object Clean {
     // consumer is `Dedup.nearDuplicates`' checkpoint of its verified
     // pairs (with a prefilter margin, its earlier signature
     // checkpoint): that job's shingle/signature stage fills both
-    // checkpoints' blocks, with no separate scheduled pass. Caveat:
-    // when AQE turns one side of the exact stage's min-agg/semi-join
-    // into a broadcast, the broadcast build runs as its own job
-    // concurrently with the other side, and both can compute these
-    // blocks (the gate kernels run twice; "Block already exists"
-    // warnings in the log).
-    d = d.localCheckpoint(false)
+    // checkpoints' blocks, with no separate scheduled pass. A
+    // broadcast build running as its own job beside the other side
+    // waits on the first writer of a block in one JVM rather than
+    // computing it again (MaterializerSpec counts one compute).
+    d = d.materialized("clean_gate_survivors")
     // exact dedup: keep the smallest id per identical text — the
     // skew-safe min(id)-agg + semi-join shape (see
     // [[Dedup.dropExactDuplicates]]; a row_number window serializes a
@@ -80,7 +78,7 @@ object Clean {
     // the near-dup stage's shingle persist populate is the first
     // consumer and fills these blocks in-job; the final anti-join
     // reads them back.
-    d = d.localCheckpoint(false)
+    d = d.materialized("clean_exact_survivors")
     // near-dup removal (greedy keep-lowest-id)
     Dedup.dropNearDuplicates(d, idCol, textCol, cfg.nearDupThreshold,
       cfg.shingleK, cfg.numHashes, cfg.bands)

@@ -314,7 +314,7 @@ object Dedup {
     // shingle frame)
     val sh = reg(docs).select(col(idCol).as("jid"),
       shingleHashes(col(textCol), k).as("sh"))
-      .localCheckpoint(true)
+      .materialized("ngram_jaccard_shingles", eager = true)
     pairs
       .join(sh.withColumnRenamed("jid", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
       .join(sh.withColumnRenamed("jid", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
@@ -445,7 +445,7 @@ object Dedup {
     * of (id, shingle hashes), the standard LSH-join shape (Spark
     * MLlib's MinHashLSH does the same) — and unpersisted before
     * returning: the result (the pair set, tiny next to the corpus) is
-    * eagerly materialized via `localCheckpoint`, so no cached corpus
+    * eagerly materialized as a reuse point, so no cached corpus
     * frame leaks into the session. */
   /** @param prefilterMargin opt-in candidate pruning BEFORE the exact
     *   verify join: candidate pairs join back to signatures (64·8 B a
@@ -474,7 +474,8 @@ object Dedup {
       val pairs = prefilterMargin match {
         case None => candidates
         case Some(margin) =>
-          val sig = withSig.localCheckpoint(true) // tiny: id + 64 longs
+          // tiny: id + 64 longs
+          val sig = withSig.materialized("near_dup_signatures", eager = true)
           candidates
             .join(sig.select(col("doc_id").as("id_a"),
               col("sig").as("sig_a")), "id_a")
@@ -492,7 +493,7 @@ object Dedup {
           size(array_union(col("sh_a"), col("sh_b"))))
         .filter(col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
-        .localCheckpoint(true)
+        .materialized("near_dup_pairs", eager = true)
     } finally sh.unpersist()
   }
 
@@ -558,11 +559,11 @@ object Dedup {
     // shingle tail recomputes per action.
     val bsh = spread(reg(batch), col(idCol)).select(col(idCol).as("jid"),
       shingleHashes(col(textCol), k).as("sh"))
-      .localCheckpoint(true)
+      .materialized("catalog_dedup_batch_shingles", eager = true)
     val bsig = bsh.select(col("jid").as("doc_id"),
       minhashSignature(col("sh"), numHashes).as("sig"))
     val cand = crossCandidates(bsig, catalogSigs, numHashes, bands,
-      maxBucketSize).localCheckpoint(true)
+      maxBucketSize).materialized("catalog_dedup_candidates", eager = true)
     val needed = cand.select(col("id_cat").as(idCol)).distinct()
     // explicit repartition, not spread(): spread's width probe
     // executes the NON-adaptive sparkPlan, which for a join still
@@ -611,14 +612,14 @@ object Dedup {
     val edges = fwd.unionByName(
       fwd.select(col("dst").as("src"), col("src").as("dst")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // localCheckpoint per iteration: materializes AND truncates the
+    // a reuse point per iteration: materializes AND truncates the
     // logical plan — without it the plan tree grows with the iteration
     // count and plan analysis/stringification blows up long before the
     // data does (the classic iterative-algorithm failure mode)
     var labels = edges.groupBy("src").agg(min("dst").as("m"))
       .select(col("src").as("id"),
         least(col("src"), col("m")).as("component"))
-      .localCheckpoint(true)
+      .materialized("cc_labels_init", eager = true)
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < maxIter) {
@@ -630,7 +631,7 @@ object Dedup {
         .join(labels, "id")
         .select(col("id"),
           least(col("component"), col("nbrMin")).as("component"))
-        .localCheckpoint(true)
+        .materialized("cc_labels", eager = true)
       changed = next.join(labels.withColumnRenamed("component", "old"), "id")
         .filter(col("component") < col("old")).count()
       labels = next
@@ -710,13 +711,13 @@ object Dedup {
     // consumers (driver collect / next round / except)
     var edges = canonical(pairs.select(col("id_a").as("u"),
       col("id_b").as("v")))
-      .localCheckpoint(false)
+      .materialized("cc_stars_edges_init")
     if (edges.count() <= driverMaxEdges)
       return driverComponents(edges)
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
-      val next = smallStar(largeStar(edges)).localCheckpoint(false)
+      val next = smallStar(largeStar(edges)).materialized("cc_stars_edges")
       converged = next.count() == edges.count() &&
         next.except(edges).isEmpty
       edges = next

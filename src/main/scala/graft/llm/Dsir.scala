@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.Materializer.MaterializeOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -119,7 +120,7 @@ object Dsir {
   /** train + score against the same raw corpus in one call.
     *
     * The raw corpus is tokenized+hashed ONCE: its (id, bucket, cnt)
-    * occurrence counts are materialized (localCheckpoint — same
+    * occurrence counts are materialized (a reuse point — same
     * in-query materialization idiom as [[graft.graph.PageRank]]'s
     * edge table) and feed BOTH the raw-side bucket counts of the
     * weight table AND the scoring join. Without this the scoring
@@ -133,7 +134,7 @@ object Dsir {
                        textCol: String, nBuckets: Int = 1024): DataFrame = {
     val bc = bucketRows(raw, textCol, nBuckets, Seq(col(idCol)))
       .groupBy(col(idCol), col("bucket")).agg(count(lit(1)).as("__c"))
-      .localCheckpoint(true)
+      .materialized("dsir_bucket_counts", eager = true)
     val cr = bc.groupBy("bucket").agg(sum(col("__c")).as("nr"))
     val ct = bucketRows(target, textCol, nBuckets, Nil)
       .groupBy("bucket").agg(count(lit(1)).as("nt"))
@@ -161,7 +162,7 @@ object Dsir {
                              nBuckets: Int = 1024): DataFrame = {
     val bc = bucketRows(raw, textCol, nBuckets, Seq(col(idCol)))
       .groupBy(col(idCol), col("bucket")).agg(count(lit(1)).as("__c"))
-      .localCheckpoint(true)
+      .materialized("dsir_subset_bucket_counts", eager = true)
     val cr = bc.groupBy("bucket").agg(sum(col("__c")).as("nr"))
     val targetIds = raw.filter(targetPred).select(col(idCol))
     val ct = bc.join(targetIds, Seq(idCol), "left_semi")

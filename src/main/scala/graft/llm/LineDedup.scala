@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.Materializer.MaterializeOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -55,7 +56,7 @@ object LineDedup {
         posexplode(split(col(textCol), sepRegex)).as(Seq("pos", "line")))
       .where(length(trim(col("line"))) > 0)
       .withColumn("h", lineKey(col("line")))
-      .localCheckpoint(false)
+      .materialized("line_dedup_lines")
 
     // df over DISTINCT docs per hash: two-level aggregate keeps the
     // per-hash state bounded (a boilerplate line in 10M docs reduces

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.Materializer.MaterializeOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -50,7 +51,7 @@ object Phrases {
     // tokenize+explode pipeline feeding it — 4 full corpus passes for
     // a query that needs 2 (bigram counts + unigram counts)
     val unigrams = toks.groupBy(col("w")).agg(count(lit(1)).as("n_w"))
-      .localCheckpoint(true)
+      .materialized("pmi_unigrams", eager = true)
     val total = unigrams.agg(sum(col("n_w")).as("n_total"))
 
     bigrams

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.Materializer.MaterializeOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -468,7 +469,7 @@ object Similarity {
     val assignedM = assigned
       .withColumn("nrm", norm(col("vec")))
       .repartition(par, col("cell"))
-      .localCheckpoint(true)
+      .materialized("semdedup_cells", eager = true)
     val a = assignedM.select(col("cell"), col("id").as("id_a"),
       col("vec").as("vec_a"), col("nrm").as("nrm_a"))
     val b = assignedM.select(col("cell"), col("id").as("id_b"),

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.Materializer
+import graft.Materializer.MaterializeOps
 import graft.model.PipelineEvent
 import graft.operators.{Cogify, Publish, StacBuilder, Transfer}
 import graft.sources.{Cmr, Discovery}
@@ -89,12 +89,12 @@ object Runner {
     // STAC build: CmrEvent vs RegexEvent dispatch = presence of
     // granule_id (build-stac/handler.py:40-41)
     val keep = if (ev.cogify) Seq("cog_error") else Nil
-    val items = Materializer(ev.discovery match {
+    val items = (ev.discovery match {
       case "cmr" =>
         StacBuilder.cmrItems(objs, granuleFrame(spark, ev, ctx), ev, keep)
       case _ =>
         StacBuilder.regexItems(objs, ev, keep)
-    }, "runner_items")
+    }).materialized("runner_items")
     val failed =
       if (ev.cogify) col("datetime_error") || col("cog_error").isNotNull
       else col("datetime_error")

@@ -170,7 +170,7 @@ object RasterFixtures {
     * (deflate, LZW, PackBits…), with optional horizontal-differencing
     * predictor applied to the raw rows BEFORE encoding — fabricates
     * the compressed layouts `GeoTiff.readSamples` must undo. */
-  def stripTiffEncoded(width: Int, height: Int, values: Seq[Int],
+  def stripTiffEncoded(width: Int, height: Int, values: IndexedSeq[Int],
                        rowsPerStrip: Int, compression: Int,
                        encode: Array[Byte] => Array[Byte],
                        predictor: Int = 1): Array[Byte] = {
@@ -649,7 +649,7 @@ object RasterFixtures {
     * either self-contained interchange streams or abbreviated streams
     * with the DQT/DHT shared once through the JPEGTables tag (347) —
     * the two layouts real writers emit. */
-  def stripTiffJpeg(width: Int, height: Int, values: Seq[Int],
+  def stripTiffJpeg(width: Int, height: Int, values: IndexedSeq[Int],
                     rowsPerStrip: Int,
                     sharedTables: Boolean): Array[Byte] = {
     require(values.size == width * height)

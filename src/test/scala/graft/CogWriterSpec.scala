@@ -235,7 +235,7 @@ class CogWriterSpec extends SparkSuite {
     val w = 40; val h = 25 // multi-strip with a partial edge strip
     // smooth gradient: max-quality grayscale JPEG stays within a few
     // counts of the source (JPEG is lossy — tolerance, not equality)
-    val px = Seq.tabulate(w * h) { i =>
+    val px = IndexedSeq.tabulate(w * h) { i =>
       val x = i % w; val y = i / w
       (x * 255 / (w - 1) + y * 255 / (h - 1)) / 2
     }
@@ -256,7 +256,7 @@ class CogWriterSpec extends SparkSuite {
 
   test("JPEG interchange strips decode identically to shared-tables") {
     val w = 31; val h = 19
-    val px = Seq.tabulate(w * h) { i =>
+    val px = IndexedSeq.tabulate(w * h) { i =>
       val x = i % w; val y = i / w
       (x * 255 / (w - 1) + y * 255 / (h - 1)) / 2
     }
@@ -292,7 +292,7 @@ class CogWriterSpec extends SparkSuite {
   test("JPEG with unsupported sample type quarantines") {
     // compression 7 claimed over 16-bit samples: reject, never decode
     val w = 8; val h = 4
-    val px = Seq.tabulate(w * h)(identity)
+    val px = IndexedSeq.tabulate(w * h)(identity)
     val tiff = graft.sources.RasterFixtures.stripTiffJpeg(
       w, h, px, rowsPerStrip = 4, sharedTables = false)
     // patch BitsPerSample (tag 258, third IFD entry) from 8 to 16
@@ -625,7 +625,7 @@ class CogWriterSpec extends SparkSuite {
   test("deflate + horizontal predictor (tag 317=2) strips decode") {
     import graft.sources.RasterFixtures
     val w = 19; val h = 7
-    val vals = Seq.tabulate(w * h)(i => (i * 13 + 5) % 256)
+    val vals = IndexedSeq.tabulate(w * h)(i => (i * 13 + 5) % 256)
     def deflate(raw: Array[Byte]): Array[Byte] = {
       val d = new java.util.zip.Deflater()
       d.setInput(raw); d.finish()

@@ -132,7 +132,7 @@ class FuzzSpec extends AnyFunSuite {
       "geoTiff" -> RasterFixtures.geoTiff(),
       "stripTiff" -> RasterFixtures.stripTiff(8, 6, Seq.tabulate(48)(identity)),
       "deflate" -> RasterFixtures.stripTiffEncoded(8, 6,
-        Seq.tabulate(48)(identity), rowsPerStrip = 2, compression = 8,
+        IndexedSeq.tabulate(48)(identity), rowsPerStrip = 2, compression = 8,
         encode = RasterFixtures.deflate))
     // parse() itself is no-throw; readBands catches the parser's
     // exception set but a decoder bomb would surface — keep the sweep

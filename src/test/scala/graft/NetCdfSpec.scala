@@ -782,4 +782,16 @@ class NetCdfSpec extends SparkSuite {
     mangled(frhp) = 'X'
     assert(NetCdf.parse(mangled).isLeft)
   }
+
+  test("q_s6_netcdf: same rows with ANSI mode on (1-d and junk shapes " +
+    "have no second dimension)") {
+    def rows(): Seq[org.apache.spark.sql.Row] =
+      Queries.s6NetCdf(spark, "").collect().toSeq
+    val off = rows()
+    assert(off.exists(r => r.isNullAt(r.fieldIndex("dim1"))))
+    val key = "spark.sql.ansi.enabled"
+    spark.conf.set(key, "true")
+    try assert(rows() === off)
+    finally spark.conf.set(key, "false")
+  }
 }

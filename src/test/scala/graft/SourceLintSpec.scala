@@ -39,6 +39,24 @@ class SourceLintSpec extends AnyFunSuite {
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 
+  test("localCheckpoint only inside Materializer") {
+    // A local checkpoint cuts the lineage, so Spark's task retry cannot
+    // rebuild a lost block. Reuse points go through
+    // `df.materialized(site, eager)`, whose strategy a cluster
+    // deployment swaps for PersistedTable in one place.
+    assert(Files.isDirectory(mainSrc), s"run from the repo root: $mainSrc")
+    val allowed = mainSrc.resolve("graft/Materializer.scala")
+    val banned = "\\blocalCheckpoint\\(".r
+    val hits = Files.walk(mainSrc).iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") && p != allowed)
+      .toSeq.sorted
+      .flatMap { p =>
+        val n = banned.findAllIn(code(p)).size
+        if (n == 0) None else Some(s"${mainSrc.relativize(p)}: x$n")
+      }
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
   test("in-task fan-out only in GeoTiffWriter's tile batch and Bench's " +
     "file walk") {
     // A Spark task already holds one of the executor's cores; a thread
