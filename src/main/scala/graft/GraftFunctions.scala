@@ -1,6 +1,6 @@
 package graft
 
-import graft.expr.{CmrGeometryExpr, CmsEstimateExpr, CmsJoinSizeExpr, CmsMergeAgg, CmsSketchAgg, CosineSimExpr, DeflateRatioExpr, ExtractDatesExpr, CharEntropyExpr, FingerprintExpr, GeometryBboxExpr, GopherKeepExpr, GopherReportExpr, HllEstimateExpr, HllSketchAgg, HllUnionAgg, KllMergeAgg, KllQuantileExpr, KllSketchAgg, LshBucketExpr, Md5PrefixExpr, MinhashSigExpr, MinhashUnionAgg, MultiAssetPartsExpr, PqEncodeExpr, ShingleHashesExpr, SigAgreeExpr, SimhashExpr, SpanAnchorsExpr, VecDotExpr, VecSumAgg}
+import graft.expr.{CmrGeometryExpr, CmsEstimateExpr, CmsJoinSizeExpr, CmsMergeAgg, CmsSketchAgg, CosineSimExpr, DeflateRatioExpr, ExtractDatesExpr, CharEntropyExpr, FingerprintExpr, GeometryBboxExpr, GopherKeepExpr, GopherReportExpr, HllEstimateExpr, HllSketchAgg, HllUnionAgg, KllMergeAgg, KllQuantileExpr, KllSketchAgg, LshBucketExpr, Md5PrefixExpr, MinhashSigExpr, MinhashUnionAgg, MultiAssetPartsExpr, PqEncodeExpr, SetJaccardExpr, ShingleHashesExpr, SigAgreeExpr, SimhashExpr, SpanAnchorsExpr, VecDotExpr, VecSumAgg}
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
@@ -48,6 +48,9 @@ object GraftFunctions {
     (FunctionIdentifier("sig_agree"),
       new ExpressionInfo(classOf[SigAgreeExpr].getName, "sig_agree"),
       arity2("sig_agree", SigAgreeExpr.apply)),
+    (FunctionIdentifier("set_jaccard"),
+      new ExpressionInfo(classOf[SetJaccardExpr].getName, "set_jaccard"),
+      arity2("set_jaccard", SetJaccardExpr.apply)),
     (FunctionIdentifier("text_fingerprint"),
       new ExpressionInfo(classOf[FingerprintExpr].getName,
         "text_fingerprint"),

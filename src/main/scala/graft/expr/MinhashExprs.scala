@@ -1,6 +1,7 @@
 package graft.expr
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, BinaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
@@ -172,6 +173,57 @@ object MinhashCore extends Serializable {
       i += 1
     }
     c
+  }
+
+  private def hasNull(a: ArrayData): Boolean = {
+    var i = 0
+    while (i < a.numElements()) { if (a.isNullAt(i)) return true; i += 1 }
+    false
+  }
+
+  /** The non-null elements of `a`, sorted, in a fresh primitive array. */
+  private def sortedLongs(a: ArrayData, withNulls: Boolean): Array[Long] = {
+    val out =
+      if (!withNulls) a.toLongArray()
+      else {
+        val xs = scala.collection.mutable.ArrayBuilder.make[Long]
+        var i = 0
+        while (i < a.numElements()) {
+          if (!a.isNullAt(i)) xs += a.getLong(i)
+          i += 1
+        }
+        xs.result()
+      }
+    java.util.Arrays.sort(out)
+    out
+  }
+
+  /** Exact set Jaccard |A∩B| / |A∪B| of two `array<long>` values —
+    * the double `size(array_intersect(a, b)).cast("double") /
+    * size(array_union(a, b))` gives: duplicates count once and a null
+    * element counts as one member. NaN when both sets are empty (the
+    * expression maps it to null). Sorted primitive copies and one
+    * merge walk, where the set functions build an open hash set per
+    * pair. */
+  def setJaccard(a: ArrayData, b: ArrayData): Double = {
+    val aNull = hasNull(a)
+    val bNull = hasNull(b)
+    val xs = sortedLongs(a, aNull)
+    val ys = sortedLongs(b, bNull)
+    var inter = if (aNull && bNull) 1 else 0
+    var union = if (aNull || bNull) 1 else 0
+    var i = 0
+    var j = 0
+    while (i < xs.length || j < ys.length) {
+      val takeX = j == ys.length || (i < xs.length && xs(i) <= ys(j))
+      val takeY = i == xs.length || (j < ys.length && ys(j) <= xs(i))
+      val v = if (takeX) xs(i) else ys(j)
+      if (takeX && takeY) inter += 1
+      union += 1
+      while (i < xs.length && xs(i) == v) i += 1
+      while (j < ys.length && ys(j) == v) j += 1
+    }
+    if (union == 0) Double.NaN else inter.toDouble / union
   }
 
   /** 64-bit SimHash: bit j set when the sum over token hashes of
@@ -399,6 +451,59 @@ case class SigAgreeExpr(left: Expression, right: Expression)
         int ${ev.value} = 0;
         if (!${ev.isNull}) {
           ${ev.value} = $core.sigAgree(${a.value}, ${b.value});
+        }""")
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+/** `set_jaccard(a, b)` → double: exact set Jaccard of two
+  * `array<long>` values (see [[MinhashCore.setJaccard]]) — the
+  * near-dup verify kernel, evaluated once per candidate pair. Null
+  * when either array is null or both are empty (no 0/0, so ANSI mode
+  * cannot throw). Pinned against the `array_intersect`/`array_union`
+  * formula by NativeExprSpec. */
+case class SetJaccardExpr(left: Expression, right: Expression)
+  extends BinaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (Seq(left, right).forall(_.dataType match {
+      case ArrayType(LongType, _) => true
+      case _ => false
+    })) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"set_jaccard expects two array<bigint> arguments, got " +
+        s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
+
+  override def eval(input: InternalRow): Any = {
+    val a = left.eval(input)
+    if (a == null) return null
+    val b = right.eval(input)
+    if (b == null) return null
+    val j = MinhashCore.setJaccard(a.asInstanceOf[ArrayData],
+      b.asInstanceOf[ArrayData])
+    if (j.isNaN) null else j
+  }
+
+  override protected def doGenCode(ctx: CodegenContext,
+                                   ev: ExprCode): ExprCode = {
+    val a = left.genCode(ctx)
+    val b = right.genCode(ctx)
+    val core = ctx.addReferenceObj("minhashCore", MinhashCore,
+      MinhashCore.getClass.getName)
+    ev.copy(code =
+      code"""
+        ${a.code}
+        ${b.code}
+        boolean ${ev.isNull} = ${a.isNull} || ${b.isNull};
+        double ${ev.value} = 0.0;
+        if (!${ev.isNull}) {
+          ${ev.value} = $core.setJaccard(${a.value}, ${b.value});
+          ${ev.isNull} = Double.isNaN(${ev.value});
         }""")
   }
 

@@ -24,10 +24,59 @@ import org.apache.spark.unsafe.types.UTF8String
   *   keeps leading/trailing empty segments (limit -1), so the count is
   *   (number of maximal `\s+` runs in the space-trimmed text) + 1, and
   *   0 for space-trimmed-empty input. One byte pass, zero allocation.
+  * - `stopword_count(text)` → int: value-identical to
+  *   `size(filter(split(trim(lower(text)), "\\s+"),
+  *    w => array_contains(stopwords, w)))` — the maximal non-`\s` runs
+  *   of the lowered text that equal a [[Stopwords]] entry (the empty
+  *   segments split keeps are never stopwords, so the trim does not
+  *   matter). Lowering stays Spark's own `lower` (the expression's
+  *   child), so case mapping cannot drift; the kernel is one byte walk
+  *   over the lowered bytes with no word array and no per-word string.
   *
-  * Both are pinned against their declarative twins by NativeExprSpec.
+  * All are pinned against their declarative twins by NativeExprSpec.
   */
 object TextCore extends Serializable {
+
+  /** The fluency stopwords behind `Text.stopwordCount`. */
+  val Stopwords: Seq[String] = Seq(
+    "the", "a", "an", "and", "or", "of", "to", "in", "is", "it",
+    "that", "for", "on", "with", "as", "was", "at", "by", "be")
+
+  /** [[Stopwords]] as UTF-8 bytes, grouped by byte length. */
+  private val stopwordsByLen: Array[Array[Array[Byte]]] = {
+    val bytes = Stopwords.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    Array.tabulate(bytes.map(_.length).max + 1)(n =>
+      bytes.filter(_.length == n).toArray)
+  }
+
+  /** Words of the (already lowered) text that are [[Stopwords]]. */
+  def stopwordCount(lowered: UTF8String): Int = {
+    val b = lowered.getBytes
+    val n = b.length
+    @inline def isWs(x: Byte): Boolean =
+      x == 0x20 || (x >= 0x09 && x <= 0x0D)
+    var cnt = 0
+    var i = 0
+    while (i < n) {
+      if (isWs(b(i))) i += 1
+      else {
+        val start = i
+        while (i < n && !isWs(b(i))) i += 1
+        val len = i - start
+        if (len < stopwordsByLen.length) {
+          val cands = stopwordsByLen(len)
+          var c = 0
+          while (c < cands.length) {
+            val w = cands(c)
+            var k = 0
+            while (k < len && w(k) == b(start + k)) k += 1
+            if (k == len) { cnt += 1; c = cands.length } else c += 1
+          }
+        }
+      }
+    }
+    cnt
+  }
 
   def alphaTokens(text: UTF8String): ArrayData = {
     val lowered = text.toLowerCase
@@ -136,6 +185,14 @@ object WsTokenCount {
     ExprColumn.column(WsTokenCountExpr(ExprColumn.expression(text)))
 }
 
+object StopwordCount {
+  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.functions.lower
+  import org.apache.spark.sql.graftbridge.ExprColumn
+  def apply(text: Column): Column =
+    ExprColumn.column(StopwordCountExpr(ExprColumn.expression(lower(text))))
+}
+
 object NormWords {
   import org.apache.spark.sql.Column
   import org.apache.spark.sql.graftbridge.ExprColumn
@@ -229,6 +286,38 @@ case class WsTokenCountExpr(child: Expression) extends UnaryExpression {
         int ${ev.value} = 0;
         if (!${ev.isNull}) {
           ${ev.value} = $core.wsTokenCount(${t.value});
+        }""")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** `stopword_count(lower(text))` → int; the child is the lowered text
+  * (see [[TextCore.stopwordCount]]). */
+case class StopwordCountExpr(child: Expression) extends UnaryExpression {
+
+  override def dataType: DataType = IntegerType
+  override def nullable: Boolean = child.nullable
+
+  override def eval(input: InternalRow): Any = {
+    val t = child.eval(input)
+    if (t == null) null
+    else TextCore.stopwordCount(t.asInstanceOf[UTF8String])
+  }
+
+  override protected def doGenCode(ctx: CodegenContext,
+                                   ev: ExprCode): ExprCode = {
+    val t = child.genCode(ctx)
+    val core = ctx.addReferenceObj("textCore", TextCore,
+      TextCore.getClass.getName)
+    ev.copy(code =
+      code"""
+        ${t.code}
+        boolean ${ev.isNull} = ${t.isNull};
+        int ${ev.value} = 0;
+        if (!${ev.isNull}) {
+          ${ev.value} = $core.stopwordCount(${t.value});
         }""")
   }
 

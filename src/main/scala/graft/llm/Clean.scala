@@ -31,7 +31,10 @@ object Clean {
   /** Token/stopword-based keep predicate (quality gate). */
   def qualityKeep(text: Column, cfg: Config): Column = {
     val tc = Text.tokenCount(text)
-    val decile = floor((Text.stopwordCount(text) * 10).cast("double") / tc)
+    // null (row dropped) for a token-free doc in both ANSI modes: an
+    // unguarded x / 0 is null with ANSI off and DIVIDE_BY_ZERO with it on
+    val decile = when(tc > 0,
+      floor((Text.stopwordCount(text) * 10).cast("double") / tc))
     tc.between(cfg.minTokens, cfg.maxTokens) &&
       (decile >= cfg.minStopwordDecile)
   }

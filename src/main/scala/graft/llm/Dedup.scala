@@ -319,8 +319,7 @@ object Dedup {
       .join(sh.withColumnRenamed("jid", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
       .join(sh.withColumnRenamed("jid", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
       .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-        size(array_union(col("sh_a"), col("sh_b"))))
+        call_function("set_jaccard", col("sh_a"), col("sh_b")))
       .drop("sh_a", "sh_b")
   }
 
@@ -489,8 +488,7 @@ object Dedup {
         .join(sh.select(col("jid").as("id_a"), col("sh").as("sh_a")), "id_a")
         .join(sh.select(col("jid").as("id_b"), col("sh").as("sh_b")), "id_b")
         .withColumn("jaccard",
-          size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))))
+          call_function("set_jaccard", col("sh_a"), col("sh_b")))
         .filter(col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
         .materialized("near_dup_pairs", eager = true)
@@ -581,8 +579,7 @@ object Dedup {
       .join(csh.select(col("cid").as("id_cat"), col("csh").as("sh_cat")),
         "id_cat")
       .withColumn("jaccard",
-        size(array_intersect(col("sh_new"), col("sh_cat"))).cast("double") /
-        size(array_union(col("sh_new"), col("sh_cat"))))
+        call_function("set_jaccard", col("sh_new"), col("sh_cat")))
       .filter(col("jaccard") >= threshold)
       .select("id_new", "id_cat", "jaccard")
   }

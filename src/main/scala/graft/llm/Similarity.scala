@@ -141,14 +141,17 @@ object Similarity {
               vecCol: String = "embedding"): DataFrame = {
     val c = corpus.select(col(idCol).as("nn_id"), col(vecCol).as("nn_vec"),
       lshBucket(col(vecCol), nBits, dim).as("bucket"))
-    val qBucket = lshBucket(col(vecCol), nBits, dim)
+    // the base bucket is projected once; the probes XOR that attribute
+    // (an inline lsh_bucket would run nBits + 1 times per query)
+    val qBucket = col("q_bucket")
     val probes =
       if (multiprobe)
         array(qBucket +: (0 until nBits).map(i =>
           qBucket.bitwiseXOR(lit(1L << i))): _*)
       else array(qBucket)
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"),
-      explode(probes).as("bucket"))
+        lshBucket(col(vecCol), nBits, dim).as("q_bucket"))
+      .select(col("query_id"), col("q_vec"), explode(probes).as("bucket"))
     val scored = c.join(q, Seq("bucket"))
       .filter(col("nn_id") =!= col("query_id"))
       // a (query, candidate) pair can meet in several probe buckets

@@ -60,15 +60,15 @@ object Text {
     when(length(text) === 0, 0.0)
       .otherwise(punctCount(text).cast("double") / length(text))
 
-  /** Stopword-token fraction — a cheap fluency signal. */
-  val stopwords: Seq[String] = Seq(
-    "the", "a", "an", "and", "or", "of", "to", "in", "is", "it",
-    "that", "for", "on", "with", "as", "was", "at", "by", "be")
-
-  def stopwordCount(text: Column): Column = {
-    val set = typedlit(stopwords)
-    size(filter(words(lower(text)), w => array_contains(set, w)))
-  }
+  /** Lowercased whitespace tokens that are stopwords
+    * ([[graft.expr.TextCore.Stopwords]]) — a cheap fluency signal; native
+    * one-pass byte walk over `lower(text)`, value-identical
+    * (NativeExprSpec twin test) to
+    * `size(filter(words(lower(text)), w => array_contains(Stopwords, w)))`
+    * on non-null text, without building the word array; null text
+    * gives null. */
+  def stopwordCount(text: Column): Column =
+    graft.expr.StopwordCount(text)
 
   def stopwordRatio(text: Column): Column =
     when(tokenCount(text) === 0, 0.0)

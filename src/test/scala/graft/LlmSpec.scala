@@ -62,6 +62,62 @@ class LlmSpec extends SparkSuite {
     assert(cleaned.toSeq == Seq(1L, 3L, 4L, 5L))
   }
 
+  test("Clean quality gate drops token-free docs the same way with " +
+    "ANSI on and off") {
+    val withBlank = docs.unionByName(Seq((6L, ""), (7L, "   "),
+      (8L, "\t\n")).toDF("doc_id", "text"))
+    val cfg = graft.llm.Clean.Config(minTokens = 0, nearDupThreshold = 0.9,
+      shingleK = 3, numHashes = 64, bands = 16)
+    def run(): (Seq[Long], Seq[Long]) = (
+      withBlank.filter(graft.llm.Clean.qualityKeep(col("text"), cfg))
+        .select("doc_id").as[Long].collect().toSeq.sorted,
+      graft.llm.Clean.corpus(withBlank, "doc_id", "text", cfg)
+        .select("doc_id").as[Long].collect().toSeq.sorted)
+    val off = run()
+    // the token count trims spaces only: "\t\n" splits into two empty
+    // tokens, so it passes the gate
+    assert(off == ((1L to 5L) :+ 8L, Seq(1L, 3L, 4L, 5L, 8L)))
+    val key = "spark.sql.ansi.enabled"
+    spark.conf.set(key, "true")
+    try assert(run() == off)
+    finally spark.conf.set(key, "false")
+  }
+
+  test("lshTopK projects the query bucket once and probes Hamming " +
+    "distance <= 1") {
+    val e = Tables.t(spark, "/root/testdata/sf0.001", "embeddings")
+    val q = e.filter(col("vec_id") < 20)
+    val (k, nBits) = (2, 6)
+    val lsh = Similarity.lshTopK(e, q, k = k, dim = 64, nBits = nBits)
+    val buckets = lsh.queryExecution.optimizedPlan.flatMap(_.expressions
+      .flatMap(_.collect { case b: graft.expr.LshBucketExpr => b }))
+    assert(buckets.size == 2, "one lsh_bucket per side:\n" +
+      lsh.queryExecution.optimizedPlan)
+    // the spec, built independently: every corpus vector whose bucket
+    // is within Hamming distance 1 of the query's, ranked by cosine
+    def side(df: org.apache.spark.sql.DataFrame, id: String, v: String,
+             b: String) = df.select(col("vec_id").as(id),
+      col("embedding").as(v),
+      Similarity.lshBucket(col("embedding"), nBits, 64).as(b))
+    val expected = side(q, "query_id", "qv", "qb")
+      .crossJoin(side(e, "nn_id", "cv", "cb"))
+      .filter(col("nn_id") =!= col("query_id") &&
+        bit_count(col("qb").bitwiseXOR(col("cb"))) <= 1)
+      .select(col("query_id"), col("nn_id"),
+        Similarity.cosine(col("qv"), col("cv")).as("sim"))
+      .filter(!isnan(col("sim")))
+      .withColumn("rank", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy("query_id")
+          .orderBy(col("sim").desc, col("nn_id"))))
+      .filter(col("rank") <= k)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "nn_id", "rank").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
+    val got = rows(lsh)
+    assert(got.nonEmpty)
+    assert(got == rows(expected))
+  }
+
   test("exact dedup groups by md5") {
     val g = Dedup.exactDupGroups(docs, "doc_id", "text").collect()
     assert(g.length == 1 && g.head.getLong(1) == 2 && g.head.getLong(2) == 1L)

@@ -403,4 +403,118 @@ class NativeExprSpec extends SparkSuite {
         .toDF("remote_fileurl"), "f1\\.bin", "prod\\d+")
     assert(dup.count() === 2L)
   }
+
+  /** Runs `f` with SQL confs set, restoring the previous values. */
+  private def withConf[T](kv: (String, String)*)(f: => T): T = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  // With the legacy size-of-null (on by default with ANSI off) the set
+  // formula reads a null array as -1 / -1 = 1.0 and the filter formula
+  // reads null text as -1; the kernels return null, which is what the
+  // formulas give with it off.
+  private val noLegacySize = "spark.sql.legacy.sizeOfNull" -> "false"
+
+  private val jaccardSchema = org.apache.spark.sql.types.StructType
+    .fromDDL("a ARRAY<BIGINT>, b ARRAY<BIGINT>")
+
+  private def jaccardFormula(a: org.apache.spark.sql.Column,
+                             b: org.apache.spark.sql.Column) =
+    size(array_intersect(a, b)).cast("double") / size(array_union(a, b))
+
+  /** Rows where set_jaccard differs from the formula (null-safe). */
+  private def jaccardMismatches(df: org.apache.spark.sql.DataFrame) =
+    withConf(noLegacySize) {
+      df.select(col("a"), col("b"),
+        call_function("set_jaccard", col("a"), col("b")).as("nat"),
+        jaccardFormula(col("a"), col("b")).as("hof"))
+        .filter(!(col("nat") <=> col("hof"))).collect().toSeq
+    }
+
+  test("set_jaccard matches the array_intersect / array_union formula") {
+    import org.apache.spark.sql.Row
+    def arr(xs: Any*): Seq[Any] = xs
+    val edge = Seq(
+      Row(arr(1L, 1L, 2L), arr(2L, 3L, 3L)),      // duplicates count once
+      Row(arr(1L, null), arr(null, 2L)),          // null is one member
+      Row(arr(null, null), arr(1L)),
+      Row(arr(null), arr(null)),
+      Row(arr(), arr()),                          // empty ∪ empty: null
+      Row(arr(), arr(5L)),
+      Row(null, arr(1L)), Row(arr(1L), null), Row(null, null),
+      Row(arr(1L, 2L, 3L), arr(4L, 5L)),          // disjoint
+      Row(arr(3L, 1L, 2L), arr(2L, 3L, 1L)),      // identical sets
+      Row(arr(Long.MinValue, -1L, 0L, Long.MaxValue),
+        arr(Long.MaxValue, 0L, 7L)))
+    val edgeDf = spark.createDataFrame(
+      spark.sparkContext.parallelize(edge, 2), jaccardSchema)
+    assert(jaccardMismatches(edgeDf).isEmpty)
+    val got = edgeDf.select(call_function("set_jaccard", col("a"), col("b")))
+      .collect().map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
+    assert(got.toSeq == Seq(Some(1.0 / 3), Some(1.0 / 3), Some(0.0),
+      Some(1.0), None, Some(0.0), None, None, None, Some(0.0), Some(1.0),
+      Some(2.0 / 5)))
+    // random pairs over a small value range: overlaps, duplicates and
+    // null elements are common
+    val rnd = new scala.util.Random(17)
+    def randArr(): Seq[Any] =
+      if (rnd.nextInt(20) == 0) null
+      else Seq.fill(rnd.nextInt(14))(
+        if (rnd.nextInt(10) == 0) null else (rnd.nextInt(16) - 4).toLong)
+    val random = Seq.fill(600)(Row(randArr(), randArr()))
+    assert(jaccardMismatches(spark.createDataFrame(
+      spark.sparkContext.parallelize(random, 4), jaccardSchema)).isEmpty)
+    // real shingle sets: each document against an edited copy of itself
+    val docs = Tables.t(spark, "/root/testdata/sf0.001", "documents")
+      .select(Dedup.shingleHashes(col("text"), 3).as("a"),
+        Dedup.shingleHashes(concat(lit("tail of "), col("text")), 3).as("b"))
+    assert(jaccardMismatches(docs).isEmpty)
+    // no 0 / 0 to trip over with ANSI on
+    withConf("spark.sql.ansi.enabled" -> "true") {
+      assert(edgeDf.select(call_function("set_jaccard", col("a"), col("b")))
+        .collect().length == edge.size)
+    }
+  }
+
+  test("stopword_count matches the split/filter/array_contains formula") {
+    import graft.expr.TextCore.Stopwords
+    val formula = (t: org.apache.spark.sql.Column) =>
+      size(filter(split(trim(lower(t)), "\\s+"),
+        w => array_contains(typedlit(Stopwords), w)))
+    val edge = (texts ++ Seq(
+      "the\ta\tof", "\tthe", "the\t", "\u000Bthe\u000Ba\u000B",
+      "the\fand\ris\nit", "the\u00A0a and", "\u00A0the\u00A0",
+      "  the  a  ", " ", "", "\t", "THE The tHe AnD", "the, and. a",
+      "ΟΔΟΣ the ΣΑΣ σ ς Σ", "\u212A the \u212Aa", "\u0130t İS it",
+      "thé a\u0301 an", "that with was by be at as on for",
+      "a a a a", "thethe", "中 the 文 a"))
+      .map(Option(_)) :+ None
+    val random = {
+      val rnd = new scala.util.Random(29)
+      val pieces = Stopwords ++ Seq("THE", "And", "\u212A", "ΟΔΟΣ",
+        "word", "x", "İ", "thé", "")
+      val seps = Seq(" ", "  ", "\t", "\n", "\u000B", "\u00A0", "\r\n")
+      Seq.fill(400)(Option(Seq.fill(rnd.nextInt(12))(
+        pieces(rnd.nextInt(pieces.size)) + seps(rnd.nextInt(seps.size)))
+        .mkString))
+    }
+    val docs = Tables.t(spark, "/root/testdata/sf0.001", "documents")
+      .select(col("text").as("t"))
+    for (icu <- Seq("true", "false")) withConf(noLegacySize,
+        "spark.sql.icu.caseMappings.enabled" -> icu) {
+      for (df <- Seq((edge ++ random).toDF("t"), docs)) {
+        val bad = df.select(col("t"),
+          graft.expr.StopwordCount(col("t")).as("nat"),
+          formula(col("t")).as("hof"))
+          .filter(!(col("nat") <=> col("hof"))).collect()
+        assert(bad.isEmpty, s"icu=$icu: ${bad.take(5).mkString("; ")}")
+      }
+    }
+  }
 }

@@ -29,6 +29,17 @@ class PlanSpec extends SparkSuite {
     }
   }
 
+  test("PlanAudit prints the same text for two plannings of one query") {
+    for (q <- Seq("q_ngram_jaccard", "q_text_quality", "q_ann_lsh",
+        "q_domain_stats")) {
+      val a = PlanAudit.plan(spark, q, dir)
+      val b = PlanAudit.plan(spark, q, dir)
+      assert(a == b, s"$q plan text differs between runs")
+      assert(!"#[0-9]|plan_id=[0-9]|Lambda\\$[0-9]|RDD\\[[0-9]".r.findFirstIn(a)
+        .isDefined, s"$q plan keeps a per-run token:\n$a")
+    }
+  }
+
   test("parquet scans prune columns (ReadSchema subsets)") {
     val p = SparkEntry.queries("q_a6_counts")(spark, dir)
       .queryExecution.explainString(
