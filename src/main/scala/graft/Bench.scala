@@ -1,27 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to the machine's cores (capped at the 32 the target env
-    // documents) — a fixed low default silently under-parallelizes the
-    // driver's bench run, which does not set SPARK_GRAFT_CPUS
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(Runtime.getRuntime.availableProcessors, 32).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = GraftSession.builder()
       // the generated-class cache defaults to 100 entries; a 120+-query
       // session thrashes it and big methods (ADC/encode, PageRank
       // iterations) pay repeated Janino compiles — fixed overhead that
       // does not exist on a real cluster running few query shapes
       .config("spark.sql.codegen.cache.maxEntries", "1000")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // untimed warmup: JVM/classloading + parquet reader init are session
     // costs, not per-query costs — keep them out of the first timing.
     // benchSetup also runs here so one-time table materialization (e.g.

@@ -300,7 +300,7 @@ object LlmQueries {
     // cells ∝ corpus: k = n/300 keeps per-cell density (and with it
     // the in-cell quadratic compare) CONSTANT as the corpus grows —
     // the sf1 probe measured fixed-16 at 34-47 s vs scaled at 4.2 s
-    // with bit-identical keep sets (SemScaleProbe; exact clones
+    // with bit-identical keep sets (NOTES_r09.md; exact clones
     // co-cell at any k, assignTop=2 covers boundary near-clones).
     // n derives from the base-table count (an unfiltered count() is
     // a parquet-footer metadata read, no data scan): the constructed
@@ -876,7 +876,7 @@ object LlmQueries {
     // CORPUS-SCALED shortlist: exact-top-1 recovery through a fixed-
     // resolution quantizer needs the rerank window to grow with the
     // candidate density — 128 was tuned at 2k vectors and missed 3/25
-    // at 20k (AnnScaleProbe: n/16 ≥ 1024 recovers 25/25 there); the
+    // at 20k (NOTES_r12.md: n/16 ≥ 1024 recovers 25/25 there); the
     // floor keeps the gate-scale plans and hashes unchanged
     val n = annCorpusSize(e, dir)
     val cb = Pq.train(e, dim = 64, m = 16, k = 16, iters = 3)
@@ -895,7 +895,7 @@ object LlmQueries {
     * for all 25 queries against the shared oracle. */
   def annIvfPq(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings")
-    // CORPUS-SCALED recall knobs (AnnScaleProbe at 20k vectors:
+    // CORPUS-SCALED recall knobs (NOTES_r12.md, 20k vectors:
     // nProbe 14 plateaus at 22/25 regardless of shortlist — the
     // misses sit in unprobed cells — while nProbe 15 + shortlist
     // ≥ 512 recovers 25/25): probe one more cell per 20k vectors

@@ -48,17 +48,9 @@ object Main {
     val catalogDir = args(1)
     val quarantineDir =
       if (args.length > 2) args(2) else catalogDir + "_quarantine"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(Runtime.getRuntime.availableProcessors, 32).toString)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val builder = GraftSession.builder()
+    val spark = sys.env.get("SPARK_MASTER").fold(builder)(builder.master)
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     try run(spark, args(0), catalogDir, quarantineDir)
     finally spark.stop()
   }

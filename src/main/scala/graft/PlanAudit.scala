@@ -34,13 +34,9 @@ object PlanAudit {
         org.apache.spark.sql.execution.FormattedMode))
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder(8)
+      .config("spark.log.level", "ERROR")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.01"
     val targets =
       if (args.nonEmpty) args.toSeq

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,19 +8,7 @@ object Verify {
     // dump to those queries (local iteration; the driver passes two args)
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(Runtime.getRuntime.availableProcessors, 32).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // hash arithmetic (minhash perms, fingerprints) relies on 64-bit
-      // wrap-around multiplication, like every hash library
-      .config("spark.sql.ansi.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS); read as long and
-      // convert in Tables.t (Spark has no nanos timestamp type)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = GraftSession.builder()
       // write micros, not INT96 — the driver's pandas/DuckDB readers
       // canonicalize micros; INT96 round-trips as a different dtype
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
@@ -30,7 +17,6 @@ object Verify {
       // avoid generated-class cache thrash across 120+ query shapes
       .config("spark.sql.codegen.cache.maxEntries", "1000")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Canonicalize timestamp outputs: session-tz(UTC) instants →
     // TIMESTAMP_NTZ, so parquet carries naive micros — the same value

@@ -640,7 +640,7 @@ object Dedup {
 
   /** Default edge-count bound for the driver union-find fast path in
     * [[connectedComponentsStars]]. Measured envelope at the bound
-    * (`graft.tools.CcScaleProbe`, 16-char string ids — the expensive
+    * (NOTES_r08.md, 16-char string ids — the expensive
     * case): ~740 MB of driver heap for the 4M-edge HashMap + collected
     * rows. That fits comfortable multi-GB driver heaps (this engine's
     * target) but would crowd a default 1 GiB driver — tune DOWN via

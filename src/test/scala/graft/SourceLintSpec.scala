@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-/** Source rules for `src/main/scala` that a compiler cannot check. */
+/** Source rules for `src/main/scala` (the session rule also covers
+  * `src/test/scala`) that a compiler cannot check. */
 class SourceLintSpec extends AnyFunSuite {
 
   private val mainSrc = Paths.get("src/main/scala")
@@ -86,5 +87,25 @@ class SourceLintSpec extends AnyFunSuite {
       }
     assert(hits.toSet == allowed,
       s"found:\n${hits.mkString("\n")}\nallowed:\n${allowed.mkString("\n")}")
+  }
+
+  test("sessions are built only through GraftSession") {
+    // UTC, ANSI off (64-bit hash wrap), nanosAsLong and the core rule
+    // are one contract; a session built elsewhere drifts from it.
+    // Entry points, tools and the test session add their extras to
+    // GraftSession.builder's result.
+    val roots = Seq(mainSrc, Paths.get("src/test/scala"))
+    roots.foreach(r =>
+      assert(Files.isDirectory(r), s"run from the repo root: $r"))
+    val allowed = mainSrc.resolve("graft/GraftSession.scala")
+    val banned = "\\bSparkSession\\s*\\.\\s*builder\\b".r
+    val hits = roots.flatMap(r => Files.walk(r).iterator.asScala)
+      .filter(p => p.toString.endsWith(".scala") && p != allowed)
+      .sorted
+      .flatMap { p =>
+        val n = banned.findAllIn(code(p)).size
+        if (n == 0) None else Some(s"$p: x$n")
+      }
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

@@ -5,13 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM, one session). */
 object SparkSuite {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.ansi.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
+  lazy val session: SparkSession = GraftSession.builder(4)
     .appName("graft-tests")
     .getOrCreate()
 }
@@ -19,7 +13,6 @@ object SparkSuite {
 trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = {
     val s = SparkSuite.session
-    s.sparkContext.setLogLevel("WARN")
     GraftFunctions.register(s)
     s
   }

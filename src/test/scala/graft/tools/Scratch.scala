@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev scratchpad: profile selected SparkEntry queries at a given SF.
   * Usage: runMain graft.Scratch [sfDir] [query ...] (default: hot set) */
 object Scratch {
@@ -11,14 +9,7 @@ object Scratch {
       "q_minhash_near_dups", "q_j1_multi_asset", "q_clean_corpus",
       "q_stac_cmr_items", "q_dedup_keep", "q_g1_geometry", "q_text_stats",
       "q_f1_dates_range", "q_a5_cumulative_cap", "q_t1_event_windows")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder().getOrCreate()
     names.foreach { n =>
       val t0 = System.nanoTime()
       val c = SparkEntry.queries(n)(spark, dir).count()

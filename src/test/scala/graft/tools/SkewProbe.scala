@@ -102,15 +102,9 @@ object SkewProbe {
 
   def main(args: Array[String]): Unit = {
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.GraftSession.builder()
       .config("spark.sql.codegen.cache.maxEntries", "1000")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // an absolute-path arg overrides the data dir (baseline runs
     // against plain sf0.1 use the same noop-write harness)
     val dir = args.find(_.startsWith("/")).getOrElse(OutDir)
