@@ -33,7 +33,7 @@ object GraftFunctions {
       s"$name expects 2 arguments, got ${other.size}")
   }
 
-  private val registrations = Seq(
+  private[graft] val registrations = Seq(
     (FunctionIdentifier("extract_dates"),
       new ExpressionInfo(classOf[ExtractDatesExpr].getName,
         "extract_dates"),
@@ -213,27 +213,7 @@ object GraftFunctions {
       { exprs: Seq[Expression] =>
         require(exprs.size == 1, "deflate_ratio expects 1 argument")
         DeflateRatioExpr(exprs.head)
-      }),
-    // Spark's own Bloom expressions (used internally by runtime row
-    // filtering) surfaced as callable functions: whole-stage-codegen
-    // membership probes instead of a Scala UDF (Transfer J3 prefilter).
-    (FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "graft_bloom_agg"),
-      { exprs: Seq[Expression] =>
-        require(exprs.size == 3,
-          "graft_bloom_agg expects (child, estimatedItems, numBits)")
-        new org.apache.spark.sql.catalyst.expressions.aggregate
-          .BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
-          .toAggregateExpression()
-      }),
-    (FunctionIdentifier("graft_might_contain"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "graft_might_contain"),
-      arity2("graft_might_contain",
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain.apply)))
+      }))
 
   /** Runtime registration on an existing session: SQL functions plus
     * the graft optimizer rules (idempotent; the rules are opt-in via

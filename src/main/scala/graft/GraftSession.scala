@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
 /** The one place a graft SparkSession is configured. Every entry point
@@ -14,18 +15,31 @@ object GraftSession {
   val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
     .getOrElse(math.min(Runtime.getRuntime.availableProcessors, 32))
 
-  def builder(cores: Int = cpus): SparkSession.Builder =
-    SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
+  /** The session settings as local defaults: a key the launch conf
+    * already carries is left out, because builder options beat the
+    * launch conf and would silently turn a `spark-submit --master
+    * yarn` run into `local[cores]`. */
+  private[graft] def defaults(cores: Int, launch: SparkConf)
+  : Seq[(String, String)] =
+    Seq(
+      "spark.master" -> s"local[$cores]",
+      "spark.sql.shuffle.partitions" -> cores.toString,
+      "spark.sql.session.timeZone" -> "UTC",
       // hash arithmetic (minhash perms, fingerprints) relies on 64-bit
       // wrap-around multiplication, like every hash library
-      .config("spark.sql.ansi.enabled", "false")
+      "spark.sql.ansi.enabled" -> "false",
       // events.parquet carries TIMESTAMP(NANOS); read as long and
       // convert in Tables.t (Spark has no nanos timestamp type)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.ui.enabled" -> "false",
       // applied when the context starts: callers need no setLogLevel
-      .config("spark.log.level", "WARN")
+      "spark.log.level" -> "WARN"
+    ).filterNot { case (k, _) => launch.contains(k) }
+
+  /** `new SparkConf()` reads the `spark.*` system properties, which is
+    * how `spark-submit --master/--conf` hand their keys to the driver. */
+  def builder(cores: Int = cpus): SparkSession.Builder =
+    defaults(cores, new SparkConf()).foldLeft(SparkSession.builder()) {
+      case (b, (k, v)) => b.config(k, v)
+    }
 }

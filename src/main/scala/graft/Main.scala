@@ -48,9 +48,7 @@ object Main {
     val catalogDir = args(1)
     val quarantineDir =
       if (args.length > 2) args(2) else catalogDir + "_quarantine"
-    val builder = GraftSession.builder()
-    val spark = sys.env.get("SPARK_MASTER").fold(builder)(builder.master)
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     try run(spark, args(0), catalogDir, quarantineDir)
     finally spark.stop()
   }

@@ -446,20 +446,9 @@ object Dedup {
     * returning: the result (the pair set, tiny next to the corpus) is
     * eagerly materialized as a reuse point, so no cached corpus
     * frame leaks into the session. */
-  /** @param prefilterMargin opt-in candidate pruning BEFORE the exact
-    *   verify join: candidate pairs join back to signatures (64·8 B a
-    *   side vs ~KiB shingle sets) and survive only when the agreement
-    *   estimate is ≥ threshold − margin. On corpora with large
-    *   families of borderline-similar docs (est just under threshold)
-    *   LSH candidates go quadratic in family size and the verify join
-    *   dominates; the prefilter drops them for the price of one narrow
-    *   join. Probabilistic: a true ≥threshold pair is lost only when
-    *   its 64-hash estimate undershoots by the margin (≈4σ at
-    *   margin 0.15) — leave None where exact recall is contractual. */
   def nearDuplicates(docs: DataFrame, idCol: String, textCol: String,
                      threshold: Double = 0.8, k: Int = 5,
-                     numHashes: Int = 128, bands: Int = 32,
-                     prefilterMargin: Option[Double] = None): DataFrame = {
+                     numHashes: Int = 128, bands: Int = 32): DataFrame = {
     val sh = spread(reg(docs), col(idCol)).select(col(idCol).as("jid"),
       shingleHashes(col(textCol), k).as("sh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -470,21 +459,7 @@ object Dedup {
       // below replaces any signature-agreement estimate
       val candidates = candidatesFromSignatures(withSig, numHashes, bands,
         maxBucketSize = 1000, withEst = false)
-      val pairs = prefilterMargin match {
-        case None => candidates
-        case Some(margin) =>
-          // tiny: id + 64 longs
-          val sig = withSig.materialized("near_dup_signatures", eager = true)
-          candidates
-            .join(sig.select(col("doc_id").as("id_a"),
-              col("sig").as("sig_a")), "id_a")
-            .join(sig.select(col("doc_id").as("id_b"),
-              col("sig").as("sig_b")), "id_b")
-            .filter(call_function("sig_agree", col("sig_a"), col("sig_b"))
-              .cast("double") / numHashes >= threshold - margin)
-            .select("id_a", "id_b")
-      }
-      pairs
+      candidates
         .join(sh.select(col("jid").as("id_a"), col("sh").as("sh_a")), "id_a")
         .join(sh.select(col("jid").as("id_b"), col("sh").as("sh_b")), "id_b")
         .withColumn("jaccard",
@@ -598,46 +573,6 @@ object Dedup {
     docs.join(losers, docs(idCol) === col("__loser"), "left_anti")
   }
 
-  /** Connected components over a near-dup pair set by iterative
-    * min-label propagation: component = smallest doc id reachable.
-    * Near-dup clusters have tiny diameter, so this converges in a few
-    * iterations; at extreme scale swap in the large-star/small-star
-    * algorithm — the interface (pairs in, (id, component) out) stays.
-    * Returns ONLY ids that appear in some pair. */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    val fwd = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-    val edges = fwd.unionByName(
-      fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // a reuse point per iteration: materializes AND truncates the
-    // logical plan — without it the plan tree grows with the iteration
-    // count and plan analysis/stringification blows up long before the
-    // data does (the classic iterative-algorithm failure mode)
-    var labels = edges.groupBy("src").agg(min("dst").as("m"))
-      .select(col("src").as("id"),
-        least(col("src"), col("m")).as("component"))
-      .materialized("cc_labels_init", eager = true)
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
-      val next = edges
-        .join(labels.withColumnRenamed("id", "dst")
-          .withColumnRenamed("component", "nbr"), "dst")
-        .groupBy(col("src").as("id"))
-        .agg(min("nbr").as("nbrMin"))
-        .join(labels, "id")
-        .select(col("id"),
-          least(col("component"), col("nbrMin")).as("component"))
-        .materialized("cc_labels", eager = true)
-      changed = next.join(labels.withColumnRenamed("component", "old"), "id")
-        .filter(col("component") < col("old")).count()
-      labels = next
-      iter += 1
-    }
-    edges.unpersist()
-    labels
-  }
-
   /** Default edge-count bound for the driver union-find fast path in
     * [[connectedComponentsStars]]. Measured envelope at the bound
     * (NOTES_r08.md, 16-char string ids — the expensive
@@ -650,16 +585,17 @@ object Dedup {
     * too-small value only costs speed, never correctness. */
   val DefaultDriverMaxEdges: Long = 4000000L
 
-  /** Connected components via alternating large-star / small-star
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    * the extreme-scale path promised by [[connectedComponents]]: each
-    * round is two groupBy-explode passes over the edge list, converges
-    * in O(log n) rounds even on high-diameter graphs, and never
-    * materializes a neighborhood larger than a node's degree. Edges
-    * are kept canonical (hi, lo). Same interface: pairs in,
+  /** Connected components over a near-dup pair set: pairs in,
     * (id, component=min reachable id) out, ids restricted to those
-    * appearing in some pair. */
-  /** @param driverMaxEdges near-dup edge sets are orders smaller than
+    * appearing in some pair. Above the driver bound it runs
+    * alternating large-star / small-star (Kiveris et al., "Connected
+    * Components in MapReduce and Beyond"): each round is two
+    * groupBy-explode passes over the edge list, converges in O(log n)
+    * rounds even on high-diameter graphs, and never materializes a
+    * neighborhood larger than a node's degree. Edges are kept
+    * canonical (hi, lo).
+    *
+    * @param driverMaxEdges near-dup edge sets are orders smaller than
     *   the corpus (LSH pairs, not documents); at or below this bound
     *   the components resolve with an exact driver union-find — one
     *   collect of (u,v) keys, O(E α(E)), zero per-round scheduler

@@ -117,46 +117,27 @@ object Dsir {
       .agg(count(lit(1)).as("n_ngrams"),
         sum(col("w_e6")).as("score_e6"))
 
-  /** train + score against the same raw corpus in one call.
+  /** [[train]] + [[score]] in one call, for the in-corpus case where
+    * the target is a PREDICATE over the raw corpus itself (e.g. "the
+    * English slice"). The raw corpus is tokenized+hashed ONCE: its
+    * (id, bucket, cnt) occurrence counts are materialized (a reuse
+    * point — same in-query materialization idiom as
+    * [[graft.graph.PageRank]]'s edge table) and feed the raw-side
+    * bucket counts, the target-side bucket counts AND the scoring
+    * join. md5-per-ngram is the dominant per-row cost, so neither
+    * the scoring pass nor the target slice re-runs it: the target's
+    * bucket counts are a partial sum of the same table over the
+    * target ids (from a text-column-pruned scan), which equals
+    * re-tokenizing the slice exactly. The table is O(Σ per-doc
+    * distinct buckets) ≤ corpus token count rows of three numeric
+    * columns — shuffle-file-sized, not corpus-sized — and scores are
+    * exact integer sums: Σ_occurrences w = Σ_buckets cnt·w.
     *
-    * The raw corpus is tokenized+hashed ONCE: its (id, bucket, cnt)
-    * occurrence counts are materialized (a reuse point — same
-    * in-query materialization idiom as [[graft.graph.PageRank]]'s
-    * edge table) and feed BOTH the raw-side bucket counts of the
-    * weight table AND the scoring join. Without this the scoring
-    * pass re-ran the full tokenize+md5 pipeline over `raw` a second
-    * time — md5-per-ngram is the dominant per-row cost here. The
-    * materialized table is O(Σ per-doc distinct buckets) ≤ corpus
-    * token count rows of three numeric columns — shuffle-file-sized,
-    * not corpus-sized. Scores are exact integer sums either way:
-    * Σ_occurrences w = Σ_buckets cnt·w. */
-  def importanceScores(raw: DataFrame, target: DataFrame, idCol: String,
-                       textCol: String, nBuckets: Int = 1024): DataFrame = {
-    val bc = bucketRows(raw, textCol, nBuckets, Seq(col(idCol)))
-      .groupBy(col(idCol), col("bucket")).agg(count(lit(1)).as("__c"))
-      .materialized("dsir_bucket_counts", eager = true)
-    val cr = bc.groupBy("bucket").agg(sum(col("__c")).as("nr"))
-    val ct = bucketRows(target, textCol, nBuckets, Nil)
-      .groupBy("bucket").agg(count(lit(1)).as("nt"))
-    bc.join(broadcast(trainFromCounts(cr, ct, nBuckets)), "bucket")
-      .groupBy(col(idCol))
-      .agg(sum(col("__c")).as("n_ngrams"),
-        sum(col("__c") * col("w_e6")).as("score_e6"))
-  }
-
-  /** [[importanceScores]] for the common in-corpus case where the
-    * target is a PREDICATE over the raw corpus itself (e.g. "the
-    * English slice"). The target's bucket counts are then a partial
-    * sum of the already-materialized (id, bucket, cnt) table — summing
-    * `cnt` over the target ids per bucket equals re-tokenizing the
-    * target slice exactly — so the slice's tokenize + md5 pass (the
-    * dominant per-row kernel) is never run a second time. The id list
-    * comes from a text-column-pruned scan. Scores are bit-identical
-    * to `importanceScores(raw, raw.filter(targetPred), ...)` PROVIDED
-    * `idCol` is unique in `raw`: the target mass is rolled up per id,
-    * so with duplicate ids every row of an id counts as target when
-    * any one of them satisfies the predicate, where the reference
-    * form counts only the matching rows. */
+    * The scores equal `score(raw, train(raw, raw.filter(targetPred)))`
+    * exactly PROVIDED `idCol` is unique in `raw`: the target mass is
+    * rolled up per id, so with duplicate ids every row of an id
+    * counts as target when any one of them satisfies the predicate,
+    * where the reference form counts only the matching rows. */
   def importanceScoresSubset(raw: DataFrame, targetPred: Column,
                              idCol: String, textCol: String,
                              nBuckets: Int = 1024): DataFrame = {

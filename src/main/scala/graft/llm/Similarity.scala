@@ -304,14 +304,9 @@ object Similarity {
     * IS the parallelism of that stage. `assignTop > 1` assigns each
     * vector to its `assignTop` nearest cells (pairs meet if their
     * cell sets intersect) — the recall knob for near-dups straddling
-    * a Voronoi boundary, at `assignTop×` candidate cost. Component
-    * resolution is the alternating-stars loop — O(log n) rounds on
-    * the (tiny) edge set. */
-  /** @param driverMaxEdges forwarded to
-    *   [[Dedup.connectedComponentsStars]]: edge counts at or below it
-    *   resolve with the exact driver union-find, above it the
-    *   distributed alternating-stars loop runs. Tune down on
-    *   small-heap drivers. */
+    * a Voronoi boundary, at `assignTop×` candidate cost. Components
+    * resolve through [[Dedup.connectedComponentsStars]] on the (tiny)
+    * edge set. */
   /** Cell count at or above which [[semanticDedup]] switches from the
     * flat −dot argmin (O(k) per row) to the two-level
     * [[graft.expr.SemRouter]] (O(√k) per row) with
@@ -337,9 +332,7 @@ object Similarity {
   def semanticDedup(corpus: DataFrame, threshold: Double,
                     nCentroids: Int = 16, assignTop: Int = 1,
                     idCol: String = "vec_id",
-                    vecCol: String = "embedding",
-                    driverMaxEdges: Long = Dedup.DefaultDriverMaxEdges)
-  : DataFrame = {
+                    vecCol: String = "embedding"): DataFrame = {
     require(assignTop >= 1 && assignTop <= nCentroids,
       s"assignTop must be in [1, $nCentroids], got $assignTop")
     graft.GraftFunctions.register(corpus.sparkSession)
@@ -498,8 +491,7 @@ object Similarity {
       .select("id_a", "id_b")
       .distinct() // multi-assigned pairs meet in up to assignTop cells
     val edges = memberEdges.fold(repEdges)(repEdges.unionByName)
-    val comps = Dedup.connectedComponentsStars(edges,
-      driverMaxEdges = driverMaxEdges)
+    val comps = Dedup.connectedComponentsStars(edges)
     corpus.select(col(idCol).as("vec_id"))
       .join(comps.withColumnRenamed("id", "vec_id"),
         Seq("vec_id"), "left")

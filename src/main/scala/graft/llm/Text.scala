@@ -45,9 +45,6 @@ object Text {
   def punctCount(text: Column): Column =
     length(text) - length(regexp_replace(text, "[\\p{Punct}]", ""))
 
-  def digitCount(text: Column): Column =
-    length(text) - length(regexp_replace(text, "[0-9]", ""))
-
   /** Occurrences of a constant marker substring — computed by length
     * difference (literal replace, no regex) so an ANSI-SQL oracle can
     * reproduce it exactly. */
@@ -73,13 +70,6 @@ object Text {
   def stopwordRatio(text: Column): Column =
     when(tokenCount(text) === 0, 0.0)
       .otherwise(stopwordCount(text).cast("double") / tokenCount(text))
-
-  /** Mean word length. */
-  def meanWordLen(text: Column): Column =
-    when(tokenCount(text) === 0, 0.0)
-      .otherwise(
-        aggregate(words(text), lit(0L), (acc, w) => acc + length(w))
-          .cast("double") / tokenCount(text))
 
   /** Composite quality score in [0, 1]: rewards mid-length docs with
     * some stopwords and low punctuation noise (heuristic in the spirit

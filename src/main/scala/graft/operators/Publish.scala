@@ -20,12 +20,6 @@ object Publish {
                 mode: SaveMode = SaveMode.Append): Unit =
     items.write.mode(mode).partitionBy("collection").parquet(path)
 
-  /** Idempotence guard before any sink (SURVEY §7.4.3): at-least-once
-    * upstream delivery can duplicate items; submissions dedup on
-    * (collection, id) keeping an arbitrary-but-deterministic witness. */
-  def dedupById(items: DataFrame): DataFrame =
-    items.dropDuplicates("collection", "id")
-
   /** Pluggable item submitter (the Cognito/OAuth REST ingestor in the
     * reference, `submit-stac/handler.py:40-93`; a local collector in
     * tests). Implementations throw [[RetryableFailure]] for transient

@@ -66,62 +66,6 @@ object Transfer {
       "left_anti")
   }
 
-  /** [[skipExisting]] for extreme key counts: a Bloom filter over the
-    * target listing splits the planned rows BEFORE any shuffle —
-    * definitely-new keys (the overwhelming majority of a fresh ingest)
-    * bypass the join entirely; only maybe-existing keys (Bloom
-    * positives, incl. false positives at `fpp`) go through the exact
-    * anti-join. Result is identical to [[skipExisting]]; only the
-    * shuffled volume changes. The build is Spark's own distributed
-    * `BloomFilterAggregate` over xxhash64 keys and the probe is
-    * `BloomFilterMightContain` against the (small, literal) serialized
-    * filter — the exact shape Spark's runtime row-level filtering
-    * injects, and unlike a Scala UDF it stays in whole-stage codegen. */
-  def skipExistingBloom(planned: DataFrame, existingKeys: DataFrame,
-                        expectedKeys: Long = 1000000L,
-                        fpp: Double = 0.01): DataFrame = {
-    graft.GraftFunctions.register(planned.sparkSession)
-    val keyCol = existingKeys.columns.head
-    // optimal bit count for (n, p): -n ln p / (ln 2)^2
-    val numBits = math.max(64L, math.ceil(
-      -expectedKeys * math.log(fpp) / (math.log(2) * math.log(2))).toLong)
-    // BloomFilterAggregate silently clamps to the runtime-filter conf
-    // maxima (4M items / 64M bits by default) — at those sizes the
-    // requested fpp would silently degrade toward 1. Raise the caps
-    // for the duration of the build only (the aggregation executes
-    // inside this method), then restore the session's own values.
-    val conf = planned.sparkSession.conf
-    val caps = Seq(
-      ("spark.sql.optimizer.runtime.bloomFilter.maxNumItems",
-        4000000L, expectedKeys),
-      ("spark.sql.optimizer.runtime.bloomFilter.maxNumBits",
-        67108864L, numBits))
-    val saved = caps.map { case (k, _, _) => k -> conf.getOption(k) }
-    caps.foreach { case (k, dflt, needed) =>
-      val cur = conf.getOption(k).map(_.toLong).getOrElse(dflt)
-      if (cur < needed) conf.set(k, needed.toString)
-    }
-    val bfBytes =
-      try existingKeys
-        .select(call_function("graft_bloom_agg", xxhash64(col(keyCol)),
-          lit(expectedKeys), lit(numBits)).as("bf"))
-        .head.getAs[Array[Byte]]("bf")
-      finally saved.foreach {
-        case (k, Some(v)) => conf.set(k, v)
-        case (k, None) => conf.unset(k)
-      }
-    // empty listing aggregates to a null filter — nothing can exist
-    if (bfBytes == null) return planned
-    // null target_key (transfer-ineligible rows) must pass through, as
-    // the exact anti-join's null-never-matches semantics would keep them
-    val mightExist = col("target_key").isNotNull &&
-      call_function("graft_might_contain", lit(bfBytes),
-        xxhash64(col("target_key")))
-    val definitelyNew = planned.filter(!mightExist)
-    val maybe = planned.filter(mightExist)
-    definitelyNew.unionByName(skipExisting(maybe, existingKeys))
-  }
-
   /** Earthdata-URS credentials: basic auth presented ONLY to
     * `authHost` during the 302 redirect-cookie flow (the reference's
     * `requests.Session` dance, `cogify/handler.py:64-86`). `authHost`

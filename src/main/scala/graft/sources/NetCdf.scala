@@ -268,13 +268,6 @@ object NetCdf {
       }
     }
 
-  /** 2-D restriction of [[readGridRaw]]. */
-  def readGrid2D(bytes: Array[Byte], meta: FileMeta, varPath: String)
-  : Option[Array[Float]] =
-    meta.vars.find(_.path == varPath)
-      .filter(_.shape.size == 2)
-      .flatMap(_ => readGridRaw(bytes, meta, varPath))
-
   /** [[readGridRaw]] with netCDF4-python's default auto
     * mask-and-scale applied — parity with the reference's
     * `src[variable_name][:]` read (`cogify/handler.py:101`, Dataset

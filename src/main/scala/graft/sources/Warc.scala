@@ -125,15 +125,6 @@ object Warc {
     }
   }
 
-  /** Whole-stream inflation through [[memberIterator]] — test/utility
-    * surface; carries the single-array envelope the streaming paths
-    * exist to avoid. */
-  private[graft] def gunzipAll(bytes: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    memberIterator(bytes).foreach(m => out.write(m, 0, m.length))
-    out.toByteArray
-  }
-
   /** Streaming record walk: frames records across gzip-member
     * boundaries through a compacting pending buffer (one member +
     * one in-flight record resident at a time — in the CC

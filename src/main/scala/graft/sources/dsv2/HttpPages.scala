@@ -132,25 +132,6 @@ object HttpPages extends Serializable {
     } finally conn.disconnect()
   }
 
-  /** Binary GET (no string decode), fully buffered — for small
-    * payloads (pages, headers). Large-file transfer uses the streaming
-    * [[download]] instead. Retries IO errors and 5xx like [[get]]. */
-  def getBinary(url: String, headers: Map[String, String] = Map.empty,
-                connectTimeoutMs: Int = 10000, readTimeoutMs: Int = 60000,
-                retries: Int = 2): (Int, Array[Byte]) =
-    withRetries(s"GET $url", retries)(() => {
-      val conn = open(url, "GET", headers, connectTimeoutMs, readTimeoutMs)
-      try {
-        val status = conn.getResponseCode
-        val stream =
-          if (status >= 400) conn.getErrorStream else conn.getInputStream
-        val body =
-          if (stream == null) Array.empty[Byte]
-          else try stream.readAllBytes() finally stream.close()
-        (status, body)
-      } finally conn.disconnect()
-    })
-
   /** Streaming GET → OutputStream: the large-file transfer path (the
     * whole body never sits in executor memory). `openOut` is invoked
     * once per attempt so a retry restarts with a fresh (truncated)

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Watermarked event-time windowing — the Structured Streaming
   * extension beyond the reference's queue plumbing (SURVEY §2.8: the
@@ -50,9 +49,4 @@ object EventWindows {
       .select(col(keyCol),
         col("session_window.start").as("session_start"),
         col("session_window.end").as("session_end"), col("n_events"))
-
-  /** File-drop streaming source for JSONL event records. */
-  def readEventStream(spark: SparkSession, dir: String,
-                      schema: StructType): DataFrame =
-    spark.readStream.schema(schema).json(dir)
 }

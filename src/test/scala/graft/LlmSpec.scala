@@ -45,9 +45,9 @@ class LlmSpec extends SparkSuite {
     assert(kept.toSeq == Seq(1L, 3L, 4L, 5L)) // doc 2 == doc 1, dropped
   }
 
-  test("connectedComponents: min-label over a chain and a separate pair") {
+  test("connectedComponentsStars: min-label over a chain and a separate pair") {
     val pairs = Seq((1L, 2L), (2L, 3L), (7L, 9L)).toDF("id_a", "id_b")
-    val comps = Dedup.connectedComponents(pairs)
+    val comps = Dedup.connectedComponentsStars(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(comps == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 9L -> 7L))
   }

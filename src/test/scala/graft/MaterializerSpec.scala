@@ -1,6 +1,6 @@
 package graft
 
-import graft.llm.{Dedup, Dsir}
+import graft.llm.Dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
@@ -155,7 +155,6 @@ class MaterializerSpec extends SparkSuite {
 
   test("PersistedTable: every reuse point as a table, same rows as the " +
     "default strategy") {
-    val corpus = Tables.t(spark, sf, "documents")
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("id_a", "id_b")
     val runs: Seq[(String, () => DataFrame)] = Seq(
       "q_pagerank", "q_triangles", "q_minhash_near_dups",
@@ -163,15 +162,10 @@ class MaterializerSpec extends SparkSuite {
       "q_clean_corpus", "q_line_dedup", "q_pmi_bigrams", "q_semdedup",
       "q_u_set_ops", "q_dup_clusters", "q_dedup_best"
     ).map(q => q -> (() => SparkEntry.queries(q)(spark, sf))) ++ Seq(
-      // reuse points no registry query reaches at this scale
-      "connectedComponents" -> (() => Dedup.connectedComponents(pairs)),
+      // the only path above DefaultDriverMaxEdges: no registry query
+      // reaches it at this scale
       "connectedComponentsStars loop" -> (() =>
-        Dedup.connectedComponentsStars(pairs, driverMaxEdges = 0)),
-      "nearDuplicates prefilter" -> (() => Dedup.nearDuplicates(corpus,
-        "doc_id", "text", threshold = 0.9, numHashes = 64, bands = 16,
-        prefilterMargin = Some(0.15))),
-      "importanceScores" -> (() => Dsir.importanceScores(corpus,
-        corpus.filter(col("lang") === "en"), "doc_id", "text")))
+        Dedup.connectedComponentsStars(pairs, driverMaxEdges = 0)))
     def rows(run: () => DataFrame): Seq[String] =
       run().collect().map(_.toString).sorted.toSeq
     val base = runs.map { case (_, run) => rows(run) }
@@ -185,10 +179,9 @@ class MaterializerSpec extends SparkSuite {
         "pagerank_outdeg", "pagerank_deg_edges", "pagerank_ranks_init",
         "pagerank_ranks", "triangles_undirected", "triangles_oriented",
         "clean_gate_survivors", "clean_exact_survivors",
-        "ngram_jaccard_shingles", "near_dup_signatures", "near_dup_pairs",
+        "ngram_jaccard_shingles", "near_dup_pairs",
         "catalog_dedup_batch_shingles", "catalog_dedup_candidates",
-        "cc_labels_init", "cc_labels", "cc_stars_edges_init",
-        "cc_stars_edges", "dsir_bucket_counts", "dsir_subset_bucket_counts",
+        "cc_stars_edges_init", "cc_stars_edges", "dsir_subset_bucket_counts",
         "line_dedup_lines", "pmi_unigrams", "semdedup_cells")
       val missing = sites.filterNot(s => new java.io.File(dir, s).isDirectory)
       assert(missing.isEmpty, s"no persisted table for $missing")

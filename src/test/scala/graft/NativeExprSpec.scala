@@ -75,23 +75,6 @@ class NativeExprSpec extends SparkSuite {
     assert(bad2 == 0)
   }
 
-  test("nearDuplicates prefilter keeps every true pair on the corpus") {
-    val docs = Tables.t(spark, "/root/testdata/sf0.001", "documents")
-      .select("doc_id", "text")
-    val both = docs.unionByName(docs.select(
-      (col("doc_id") + 100000L).as("doc_id"), col("text")))
-    val base = Dedup.nearDuplicates(both, "doc_id", "text",
-      threshold = 0.9, k = 5, numHashes = 64, bands = 16)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1)))
-    val pre = Dedup.nearDuplicates(both, "doc_id", "text",
-      threshold = 0.9, k = 5, numHashes = 64, bands = 16,
-      prefilterMargin = Some(0.15))
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(base.toSet == pre.toSet,
-      s"prefilter changed the verified pair set: ${base.length} vs ${pre.length}")
-    assert(base.nonEmpty)
-  }
-
   test("shingle_hashes matches HOF on the real documents table") {
     val docs = Tables.t(spark, "/root/testdata/sf0.001", "documents")
     val bad = docs.select(

@@ -5,7 +5,8 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Source rules for `src/main/scala` (the session rule also covers
-  * `src/test/scala`) that a compiler cannot check. */
+  * `src/test/scala`) that a compiler cannot check, and README facts
+  * that must follow the code. */
 class SourceLintSpec extends AnyFunSuite {
 
   private val mainSrc = Paths.get("src/main/scala")
@@ -107,5 +108,27 @@ class SourceLintSpec extends AnyFunSuite {
         if (n == 0) None else Some(s"$p: x$n")
       }
     assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("README's Registered SQL functions table names exactly the " +
+    "registered functions") {
+    val readme = Files.readString(Paths.get("README.md"))
+    val start = readme.indexOf("### Registered SQL functions")
+    assert(start >= 0, "README has no Registered SQL functions section")
+    val rows = readme.substring(start).linesIterator.drop(1)
+      .dropWhile(!_.startsWith("|")).takeWhile(_.startsWith("|"))
+      .drop(2).toSeq // header and separator
+    // a function is a code span that is a bare name or a call:
+    // `hll_sketch`, `vec_dot(a, b)`; `array<bigint>` is not
+    val Call = "([a-z][a-z0-9_]*)(?:\\(.*\\))?".r
+    val documented = rows.flatMap("`([^`]+)`".r.findAllMatchIn(_))
+      .map(_.group(1)).collect { case Call(name) => name }
+    val registered = GraftFunctions.registrations.map(_._1.funcName)
+    assert(documented.diff(documented.distinct).isEmpty,
+      s"listed twice: ${documented.diff(documented.distinct)}")
+    assert(registered.toSet -- documented == Set.empty,
+      "registered but not in the README table")
+    assert(documented.toSet -- registered == Set.empty,
+      "in the README table but not registered")
   }
 }

@@ -2,31 +2,51 @@ package graft
 
 import graft.llm.Dedup
 
-/** Large-star/small-star connected components must agree with the
-  * label-propagation implementation (the executable spec). */
+/** Both branches of [[Dedup.connectedComponentsStars]] — the driver
+  * union-find and the distributed alternating-stars loop — must agree
+  * with a plain-Scala reference over the collected pairs (the
+  * executable spec). */
 class StarsCcSpec extends SparkSuite {
   import spark.implicits._
 
-  /** (label propagation, driver union-find, distributed stars) —
-    * the three implementations of the same contract. driverMaxEdges
-    * = -1 forces the alternating-stars loop; the default routes
-    * small edge sets to the union-find. */
+  /** BFS over the undirected pair graph; starts are visited in
+    * ascending order, so each component is labelled by its minimum. */
+  private def reference(pairs: Seq[(Long, Long)]): Seq[(Long, Long)] = {
+    val adj = (pairs ++ pairs.map(_.swap)).groupMap(_._1)(_._2)
+    val label = scala.collection.mutable.Map.empty[Long, Long]
+    for (start <- adj.keys.toSeq.sorted if !label.contains(start)) {
+      label(start) = start
+      var frontier = List(start)
+      while (frontier.nonEmpty) {
+        val n = frontier.head
+        frontier = frontier.tail
+        for (m <- adj(n) if !label.contains(m)) {
+          label(m) = start
+          frontier ::= m
+        }
+      }
+    }
+    label.toSeq.sorted
+  }
+
+  /** (reference, driver union-find, distributed stars) — the three
+    * implementations of the same contract. driverMaxEdges = -1 forces
+    * the alternating-stars loop; the default routes small edge sets to
+    * the union-find. */
   private def all3(pairs: Seq[(Long, Long)])
   : (Seq[(Long, Long)], Seq[(Long, Long)], Seq[(Long, Long)]) = {
     val df = pairs.toDF("id_a", "id_b")
-    val lp = Dedup.connectedComponents(df).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     val uf = Dedup.connectedComponentsStars(df).collect()
       .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     val st = Dedup.connectedComponentsStars(df, driverMaxEdges = -1L)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    (lp, uf, st)
+    (reference(pairs), uf, st)
   }
 
   test("chain + separate pair: all three implementations agree") {
-    val (lp, uf, st) = all3(Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)))
-    assert(st == lp && uf == lp)
+    val (ref, uf, st) = all3(Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)))
+    assert(st == ref && uf == ref)
     assert(st.filter(_._2 == 1L).map(_._1) == Seq(1L, 2L, 3L, 4L))
   }
 
@@ -35,14 +55,14 @@ class StarsCcSpec extends SparkSuite {
     val pairs = Seq.fill(150)(
       (rnd.nextInt(100).toLong, rnd.nextInt(100).toLong))
       .filter { case (a, b) => a != b }
-    val (lp, uf, st) = all3(pairs)
-    assert(st == lp && uf == lp)
+    val (ref, uf, st) = all3(pairs)
+    assert(st == ref && uf == ref)
   }
 
   test("high-diameter path graph converges within the iteration cap") {
-    // a 64-node path needs ~diameter rounds of label propagation but
-    // only O(log n) star rounds — compare against the known answer
-    // (label propagation's default cap can't converge this graph).
+    // a 64-node path: min-label propagation would need ~diameter (63)
+    // rounds, the stars loop O(log n), well inside its cap of 25 —
+    // compare against the known answer.
     // driverMaxEdges = -1: the point is the DISTRIBUTED loop's round
     // complexity, so the union-find shortcut must not kick in.
     val pairs = (0L until 63L).map(i => (i, i + 1))

@@ -284,7 +284,7 @@ class TransferSpec extends SparkSuite {
       "s3://shared/file-staging/c/f.tif")
   }
 
-  test("skipExistingBloom matches skipExisting exactly (J3 at scale)") {
+  test("skipExisting drops exactly the existing keys (J3 at scale)") {
     val objs = (1 to 200).map(i => s"s3://b/p/f$i.tif")
       .toDF("remote_fileurl")
       .withColumn("collection", lit("c"))
@@ -297,13 +297,9 @@ class TransferSpec extends SparkSuite {
       .map(i => s"file-staging/c/f$i.tif").toDF("key")
     val exact = Transfer.skipExisting(planned, existing)
       .select("remote_fileurl").collect().map(_.getString(0)).sorted
-    for (fpp <- Seq(0.5, 0.01)) { // even a terrible filter stays exact
-      val bloom = Transfer.skipExistingBloom(planned, existing,
-        expectedKeys = 100, fpp = fpp)
-        .select("remote_fileurl").collect().map(_.getString(0)).sorted
-      assert(bloom.toSeq == exact.toSeq, s"fpp=$fpp")
-    }
     assert(exact.length == 200 - 67)
+    assert(exact.toSeq == (1 to 200).filter(i => i % 3 != 1)
+      .map(i => s"s3://b/p/f$i.tif").sorted)
   }
 
   test("skipExisting drops rows whose target key already exists (J3)") {
