@@ -213,27 +213,16 @@ object Dedup {
     flatten(transform(members, (x, i) =>
       transform(slice(members, i + 2, size(members)), y => pair(x, y))))
 
-  /** MinHash-LSH candidate pairs: shingle → minhash → band → bucket →
-    * in-bucket combinations. Returns (id_a, id_b, jaccard_est) with
-    * id_a < id_b, deduplicated across bands.
+  /** MinHash-LSH candidate pairs from a precomputed (doc_id, sig)
+    * frame: band → bucket → in-bucket combinations. Returns (id_a,
+    * id_b[, jaccard_est]) with id_a < id_b, deduplicated across bands.
     *
-    * Scale shape: signatures are computed ONCE (single scan — no
-    * self-join recomputation), then shuffled once on (band, bucket);
-    * pairs are generated inside each bucket with a per-row HOF.
-    * Buckets larger than `maxBucketSize` are dropped (they are
+    * Scale shape: signatures are computed ONCE by the caller (single
+    * scan — no self-join recomputation), then shuffled once on (band,
+    * bucket); pairs are generated inside each bucket with a per-row
+    * HOF. Buckets larger than `maxBucketSize` are dropped (they are
     * degenerate content — empty/boilerplate docs — and would produce
-    * quadratic pairs). */
-  def minhashCandidates(docs: DataFrame, idCol: String, textCol: String,
-                        k: Int = 5, numHashes: Int = 128,
-                        bands: Int = 32,
-                        maxBucketSize: Int = 1000): DataFrame =
-    candidatesFromSignatures(
-      spread(reg(docs), col(idCol)).select(col(idCol).as("doc_id"),
-        minhashSignature(shingleHashes(col(textCol), k), numHashes)
-          .as("sig")),
-      numHashes, bands, maxBucketSize)
-
-  /** LSH candidate generation from a precomputed (doc_id, sig) frame.
+    * quadratic pairs).
     *
     * With `withEst = false` the bucket shuffle carries only doc ids —
     * not the numHashes-long signatures — and pairs skip the agreement
@@ -1018,7 +1007,7 @@ object Dedup {
   /** SimHash near-dup candidates: bucket on 4 x 16-bit bands of the
     * simhash (any pair within Hamming distance 3 shares at least one
     * band), verify with full Hamming distance <= maxDist. Same
-    * one-scan bucket-combinations shape as [[minhashCandidates]]. */
+    * one-scan bucket-combinations shape as [[candidatesFromSignatures]]. */
   def simhashNearDups(docs: DataFrame, idCol: String, textCol: String,
                       maxDist: Int = 3,
                       maxBucketSize: Int = 1000): DataFrame =

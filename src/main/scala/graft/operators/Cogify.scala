@@ -182,7 +182,8 @@ object Cogify {
     }
 
   /** K3 — real COG bytes for a classic-NetCDF input: grid data +
-    * envelope from the parsed header ([[netcdfGrid]]), float32
+    * envelope from the parsed header ([[netcdfGrid]]), float32 (the
+    * CF-unpacked grid is float, whatever the stored type)
     * tiled-deflate output via [[graft.sources.GeoTiffWriter]] (the JVM
     * replacement for the reference's GDAL `cog_translate` deflate
     * profile, `handler.py:151-220`). Georeferencing mirrors
@@ -259,14 +260,14 @@ object Cogify {
 
   /** K3's `.tif` branch: decode a supported GeoTIFF and re-emit it as
     * a 256-block deflate COG, geo tags carried over — `cog_translate`
-    * without GDAL. Single-band rasters re-tile as float32 (the science
-    * profile); 3-band 8-bit rasters (incl. JPEG browse imagery) as
-    * uint8 RGB, preserving the byte dtype like GDAL does
-    * (`handler.py:186-220`). Unsupported encodings are a `Left`
-    * (quarantine), never a silently wrong grid. */
+    * without GDAL. The output keeps the source's sample type (uint8,
+    * uint16 or float32; 1 band or 3-band RGB, incl. JPEG browse
+    * imagery decoded to uint8), as GDAL does (`handler.py:186-220`);
+    * a nodata the type cannot hold is dropped. Unsupported encodings
+    * are a `Left` (quarantine), never a silently wrong grid. */
   def tiffToCog(bytes: Array[Byte], tileSize: Int = 256)
   : Either[String, Array[Byte]] =
-    graft.sources.GeoTiff.readBands(bytes).flatMap { case (m, bands) =>
+    graft.sources.GeoTiff.readBands(bytes).map { case (m, bands) =>
       // never FABRICATE georeferencing: a source with no geo tags
       // previously came out claiming WGS84 with an identity transform
       // — invented coordinates that downstream STAC items would
@@ -277,18 +278,12 @@ object Cogify {
       val geo = for { tr <- m.transform; e <- m.epsg }
         yield graft.sources.GeoTiffWriter.Geo(tr, e,
           epsgIsGeographic = m.epsgIsGeographic)
-      bands.length match {
-        case 1 => Right(graft.sources.GeoTiffWriter.writeOpt(
-          m.width.toInt, m.height.toInt, bands(0), geo, m.nodata,
-          tileSize))
-        case 3 =>
-          if (m.bitsPerSample != 8)
-            Left(s"unsupported: 3-band ${m.bitsPerSample}-bit re-tile")
-          else Right(graft.sources.GeoTiffWriter.writeRgbOpt(
-            m.width.toInt, m.height.toInt, bands, geo, m.nodata,
-            tileSize))
-        case n => Left(s"unsupported: $n samples/pixel")
-      }
+      // readBands decodes only 1 or 3 bands of the writer's three
+      // sample types, so both checks hold before the tile batch
+      graft.sources.GeoTiffWriter.writeBands(m.width.toInt,
+        m.height.toInt, bands,
+        graft.sources.GeoTiffWriter.SampleType(m.bitsPerSample,
+          m.sampleFormat), geo, m.nodata, tileSize)
     }
 
   /** [[FileTransform]] doing the real conversion on both reference

@@ -41,7 +41,10 @@ object GeoTiff {
         * Some(false) = ProjectedCSType, None = unknown — the writer
         * must emit the SAME key kind, not guess from the code range
         * (EPSG 4087 is projected yet sits in 4000..4999). */
-      epsgIsGeographic: Option[Boolean] = None)
+      epsgIsGeographic: Option[Boolean] = None,
+      /** TIFF SampleFormat: 1 unsigned int, 2 signed int, 3 IEEE
+        * float (the TIFF default 1 when the tag is absent). */
+      sampleFormat: Int = 1)
 
   // TIFF tag ids
   private val ImageWidth = 256
@@ -223,6 +226,16 @@ object GeoTiff {
       case _ => r.scalar(BitsPerSample).map(_.toInt).getOrElse(1)
     }
     val spp = r.scalar(SamplesPerPixel).map(_.toInt).getOrElse(1)
+    // SampleFormat, like BitsPerSample, has SamplesPerPixel entries
+    // (SHORT[3] doesn't fit the classic 4-byte slot, so scalar() would
+    // return the OFFSET) — read the array, require uniform
+    val fmt = r.shorts(SampleFormat) match {
+      case Some(fs) if fs.nonEmpty =>
+        if (fs.distinct.size != 1)
+          return Left(s"mixed SampleFormat ${fs.mkString(",")}")
+        fs.head
+      case _ => r.scalar(SampleFormat).map(_.toInt).getOrElse(1)
+    }
 
     val epsgKeyed = r.shorts(GeoKeyDirectory).flatMap { keys =>
       // header (4 shorts) then 4-short key entries
@@ -249,7 +262,7 @@ object GeoTiff {
 
     Right(RasterMeta(w, h, bits, spp,
       r.scalar(TileWidth), r.scalar(TileLength), epsg, transform, nodata,
-      epsgIsGeographic = epsgKeyed.map(_._2)))
+      epsgIsGeographic = epsgKeyed.map(_._2), sampleFormat = fmt))
   }
 
   def parse(bytes: Array[Byte]): Either[String, RasterMeta] = try {
@@ -349,16 +362,7 @@ object GeoTiff {
       }
       if (!Set(1, 5, 7, 8, 32773, 32946)(compression))
         return Left(s"unsupported compression $compression")
-      // SampleFormat has SamplesPerPixel entries for multi-band files
-      // (SHORT[3] doesn't fit the classic 4-byte slot, so scalar()
-      // would return the OFFSET) — read the array, require uniform
-      val fmt = r.shorts(SampleFormat) match {
-        case Some(fs) if fs.nonEmpty =>
-          if (fs.distinct.size != 1)
-            return Left(s"mixed SampleFormat ${fs.mkString(",")}")
-          fs.head
-        case _ => r.scalar(SampleFormat).map(_.toInt).getOrElse(1)
-      }
+      val fmt = m.sampleFormat
       val predictor = r.scalar(Predictor).getOrElse(1L).toInt
       if (predictor != 1 && predictor != 2)
         return Left(s"unsupported predictor $predictor")

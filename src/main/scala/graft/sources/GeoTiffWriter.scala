@@ -10,8 +10,8 @@ import scala.collection.immutable.ArraySeq
   * [[GeoTiff]]'s parser, replacing the reference's GDAL
   * `cog_translate` profile (`cogify/handler.py:151-220` /
   * rio-cogeo "deflate" profile: tiled 256×256 or 512×512 blocks,
-  * DEFLATE compression, geo tags, nodata, and reduced-resolution
-  * overview IFDs).
+  * DEFLATE compression, the source sample type, geo tags, nodata, and
+  * reduced-resolution overview IFDs).
   *
   * Layout is COG-shaped: header + ALL IFDs + tag arrays first, tile
   * data after, so a range-reader gets the full metadata (including
@@ -68,6 +68,22 @@ object GeoTiffWriter {
     (out, w2, h2)
   }
 
+  /** Output sample type: TIFF BitsPerSample + SampleFormat (1 =
+    * unsigned int, 3 = IEEE float) — the three [[GeoTiff]] decodes,
+    * so a re-tile keeps its source's dtype as `cog_translate` does. */
+  case class SampleType(bits: Int, format: Int) {
+    require(Set((8, 1), (16, 1), (32, 3))((bits, format)),
+      s"unsupported sample type: $bits-bit format $format")
+    /** Whether `v` is a value of this type: GDAL_NODATA is written only
+      * then, since padding with a clamped sentinel would make the tag
+      * and the padded pixels disagree. */
+    def holds(v: Double): Boolean =
+      format == 3 || (v == math.rint(v) && v >= 0 && v < (1L << bits))
+  }
+  val UInt8: SampleType = SampleType(8, 1)
+  val UInt16: SampleType = SampleType(16, 1)
+  val Float32: SampleType = SampleType(32, 3)
+
   /** One resolution level ready for assembly: dims + block (tile)
     * size + deflated tiles — overview levels carry their own block
     * size (the reference profile sets GDAL_TIFF_OVR_BLOCKSIZE=128,
@@ -121,7 +137,54 @@ object GeoTiffWriter {
     }
   }
 
-  /** Write a single-band float32 tiled GeoTIFF (little-endian).
+  /** Pack tile (tx, ty) of `g` into its uncompressed chunky bytes:
+    * each pixel's bands interleaved, each sample `st.bits` wide,
+    * little-endian. Integer types clamp-round to their range; pixels
+    * past the raster edge take `pad`. Row by row: the row's samples are
+    * gathered as floats, then stored with the sample write chosen once
+    * per row (the writer's mirror of [[GeoTiff]]'s row decode). */
+  private def packTile(g: Grid, tx: Int, ty: Int, st: SampleType,
+                       pad: Float): Array[Byte] = {
+    val ts = g.tile
+    val spp = g.bands.length
+    val out = new Array[Byte](ts * ts * spp * st.bits / 8)
+    val bb = ByteBuffer.wrap(out).order(ByteOrder.LITTLE_ENDIAN)
+    val row = new Array[Float](ts * spp)
+    // pixels of each tile row inside the raster (0 below its last row)
+    val inX = math.min(ts, g.width - tx * ts)
+    var y = 0
+    while (y < ts) {
+      val gy = ty * ts + y
+      val n = if (gy < g.height) inX else 0
+      val at = gy * g.width + tx * ts
+      var b = 0
+      while (b < spp) {
+        val band = g.bands(b)
+        var x = 0
+        while (x < n) { row(x * spp + b) = band(at + x); x += 1 }
+        while (x < ts) { row(x * spp + b) = pad; x += 1 }
+        b += 1
+      }
+      val o = y * ts * spp // first sample of the row in the tile
+      var k = 0
+      st.bits match {
+        case 8 => while (k < row.length) {
+          out(o + k) = math.max(0, math.min(255, math.round(row(k)))).toByte
+          k += 1 }
+        case 16 => while (k < row.length) {
+          bb.putShort(2 * (o + k),
+            math.max(0, math.min(65535, math.round(row(k)))).toShort)
+          k += 1 }
+        case _ => while (k < row.length) {
+          bb.putFloat(4 * (o + k), row(k)); k += 1 }
+      }
+      y += 1
+    }
+    out
+  }
+
+  /** Write a single-band float32 tiled GeoTIFF (little-endian) — the
+    * science-grid profile ([[writeBands]] with [[Float32]]).
     *
     * @param data row-major width*height samples
     * @param fill nodata value (GDAL_NODATA tag + edge-tile padding)
@@ -132,102 +195,37 @@ object GeoTiffWriter {
             geo: Geo, fill: Option[Double] = None,
             tileSize: Int = 256, overviews: Boolean = true,
             ovrTileSize: Int = 128): Array[Byte] =
-    writeOpt(width, height, data, Some(geo), fill, tileSize,
-      overviews, ovrTileSize)
+    writeBands(width, height, Array(data), Float32, Some(geo), fill,
+      tileSize, overviews, ovrTileSize)
 
-  /** [[write]] with the geo block OPTIONAL: None omits
-    * ModelPixelScale/ModelTiepoint/GeoKeyDirectory entirely — a
-    * re-tile of a source with no georeferencing must not invent one
-    * (cog_translate carries over what the source has). */
-  def writeOpt(width: Int, height: Int, data: Array[Float],
-               geo: Option[Geo], fill: Option[Double] = None,
-               tileSize: Int = 256, overviews: Boolean = true,
-               ovrTileSize: Int = 128): Array[Byte] = {
-    require(data.length == width * height,
-      s"${data.length} samples for ${width}x$height")
-    val fillF = fill.getOrElse(0.0).toFloat
-    val levels = compressLevels(Array(data), width, height, tileSize,
-      overviews, ovrTileSize, { (g, tx, ty) =>
-        val ts = g.tile
-        val d = g.bands(0)
-        val tb = ByteBuffer.allocate(ts * ts * 4)
-          .order(ByteOrder.LITTLE_ENDIAN)
-        var y = 0
-        while (y < ts) {
-          var x = 0
-          while (x < ts) {
-            val gx = tx * ts + x
-            val gy = ty * ts + y
-            tb.putFloat(
-              if (gx < g.width && gy < g.height) d(gy * g.width + gx)
-              else fillF)
-            x += 1
-          }
-          y += 1
-        }
-        tb.array()
-      })
-    assemble(levels, spp = 1, bits = 32, fmt = 3, photometric = 1, geo,
-      fill)
-  }
-
-  /** Write a 3-band 8-bit RGB tiled deflate COG (chunky interleaved,
-    * photometric RGB) — the browse-imagery output profile: GDAL's
-    * `cog_translate` preserves the byte dtype of RGB inputs, so a
-    * JPEG/LZW color TIFF re-tiles to uint8, not float32
-    * (`cogify/handler.py:186-220`). Band values are clamp-rounded to
-    * 0..255; edge tiles pad with `fill` (same clamp). */
-  def writeRgb(width: Int, height: Int, bands: Array[Array[Float]],
-               geo: Geo, fill: Option[Double] = None,
-               tileSize: Int = 256, overviews: Boolean = true,
-               ovrTileSize: Int = 128): Array[Byte] =
-    writeRgbOpt(width, height, bands, Some(geo), fill, tileSize,
-      overviews, ovrTileSize)
-
-  /** [[writeRgb]] with the geo block OPTIONAL (see [[writeOpt]]). */
-  def writeRgbOpt(width: Int, height: Int, bands: Array[Array[Float]],
-                  geo: Option[Geo], fill: Option[Double] = None,
-                  tileSize: Int = 256, overviews: Boolean = true,
-                  ovrTileSize: Int = 128)
+  /** Write a tiled deflate COG of 1 (gray) or 3 (chunky RGB) bands in
+    * `sample`'s dtype — GDAL's `cog_translate` keeps the source dtype,
+    * so a uint8 raster or JPEG/LZW browse image re-tiles to uint8, not
+    * float32 (`cogify/handler.py:186-220`). Integer samples are
+    * clamp-rounded to their range. `fill` is written as GDAL_NODATA and
+    * pads edge tiles only when `sample` holds it; otherwise the tag is
+    * dropped and edges pad with 0.
+    *
+    * @param bands band-major, each row-major width*height samples
+    * @param geo None omits ModelPixelScale/ModelTiepoint/
+    *            GeoKeyDirectory entirely — a re-tile of a source with
+    *            no georeferencing must not invent one (cog_translate
+    *            carries over what the source has) */
+  def writeBands(width: Int, height: Int, bands: Array[Array[Float]],
+                 sample: SampleType, geo: Option[Geo],
+                 fill: Option[Double] = None, tileSize: Int = 256,
+                 overviews: Boolean = true, ovrTileSize: Int = 128)
   : Array[Byte] = {
-    require(bands.length == 3, s"${bands.length} bands (writeRgb is 3)")
+    require(bands.length == 1 || bands.length == 3,
+      s"${bands.length} bands (1 or 3 are written)")
     bands.foreach(b => require(b.length == width * height,
       s"${b.length} samples for ${width}x$height"))
-    def toByte(v: Float): Byte =
-      math.max(0, math.min(255, math.round(v))).toByte
-    // a nodata sentinel outside the uint8 range cannot exist in the
-    // pixels this profile writes; recording it in GDAL_NODATA while
-    // padding edges with the CLAMPED byte would make the tag and the
-    // padded pixels disagree (readers mask nothing, padding reads as
-    // valid black). Drop the unrepresentable tag instead.
-    val fill8 = fill.filter(v => v >= 0.0 && v <= 255.0)
-    val fillB = toByte(fill8.getOrElse(0.0).toFloat)
+    val nodata = fill.filter(sample.holds)
+    val pad = nodata.getOrElse(0.0).toFloat
     val levels = compressLevels(bands, width, height, tileSize, overviews,
-      ovrTileSize, { (g, tx, ty) =>
-        val ts = g.tile
-        val bs = g.bands
-        val tb = new Array[Byte](ts * ts * 3)
-        var y = 0
-        while (y < ts) {
-          var x = 0
-          while (x < ts) {
-            val gx = tx * ts + x
-            val gy = ty * ts + y
-            val o = (y * ts + x) * 3
-            if (gx < g.width && gy < g.height) {
-              val p = gy * g.width + gx
-              tb(o) = toByte(bs(0)(p))
-              tb(o + 1) = toByte(bs(1)(p))
-              tb(o + 2) = toByte(bs(2)(p))
-            } else { tb(o) = fillB; tb(o + 1) = fillB; tb(o + 2) = fillB }
-            x += 1
-          }
-          y += 1
-        }
-        tb
-      })
-    assemble(levels, spp = 3, bits = 8, fmt = 1, photometric = 2, geo,
-      fill8)
+      ovrTileSize, packTile(_, _, _, sample, pad))
+    assemble(levels, spp = bands.length, sample.bits, sample.format,
+      photometric = if (bands.length == 3) 2 else 1, geo, nodata)
   }
 
   /** Shared COG assembly over a chain of resolution levels: header +
@@ -421,8 +419,8 @@ object GeoTiffWriter {
     * bytes. Throws on truncated input (Inflater.inflate returns 0 with
     * needsInput while unfinished) instead of spinning — a partially
     * downloaded file must error, not hang the task. */
-  private[sources] def inflateFully(compressed: Array[Byte],
-                                    maxLen: Int): Array[Byte] = {
+  private[graft] def inflateFully(compressed: Array[Byte],
+                                  maxLen: Int): Array[Byte] = {
     val inf = new java.util.zip.Inflater()
     try {
       inf.setInput(compressed)
@@ -440,13 +438,5 @@ object GeoTiffWriter {
       }
       raw
     } finally inf.end()
-  }
-
-  /** Inflate one tile back to float32 samples (test/verification aid —
-    * the read half of the round-trip contract with [[GeoTiff]]). */
-  def inflateTile(compressed: Array[Byte], tileSize: Int): Array[Float] = {
-    val raw = inflateFully(compressed, tileSize * tileSize * 4)
-    val fb = ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN)
-    Array.fill(tileSize * tileSize)(fb.getFloat)
   }
 }

@@ -3,6 +3,7 @@ package graft
 import graft.operators.Cogify
 import graft.sources.{GeoTiff, GeoTiffWriter, NetCdfFixtures}
 import org.apache.spark.sql.functions._
+import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.Files
 
 /** K3 — the JVM tiled-COG writer round-trips through the S5 parser:
@@ -10,6 +11,72 @@ import java.nio.file.Files
   * GeoTIFF specs, so agreement pins both. */
 class CogWriterSpec extends SparkSuite {
   import spark.implicits._
+
+  /** Level-0 tile payloads of one of the writer's (little-endian) COGs,
+    * located through IFD 0's TileOffsets/TileByteCounts (324/325). */
+  private def level0Tiles(cog: Array[Byte]): Seq[Array[Byte]] = {
+    val buf = ByteBuffer.wrap(cog).order(ByteOrder.LITTLE_ENDIAN)
+    val nEntries = buf.getShort(8) & 0xFFFF
+    def tag(t: Int): (Int, Int) = (0 until nEntries).collectFirst {
+      case i if (buf.getShort(10 + i * 12) & 0xFFFF) == t =>
+        (buf.getInt(10 + i * 12 + 4), buf.getInt(10 + i * 12 + 8))
+    }.get
+    val (n, offs) = tag(324)
+    val (_, cnts) = tag(325)
+    if (n == 1) Seq(cog.slice(offs, offs + cnts))
+    else (0 until n).map { i =>
+      val o = buf.getInt(offs + 4 * i)
+      cog.slice(o, o + buf.getInt(cnts + 4 * i))
+    }
+  }
+
+  /** Inflate one single-band COG tile and decode its samples by sample
+    * width (uint8, uint16 or float32; little-endian). The inflated
+    * payload must be exactly one tile of that type. */
+  private def inflateTile(compressed: Array[Byte], tileSize: Int,
+                          sample: GeoTiffWriter.SampleType): Array[Float] = {
+    val raw = new java.util.zip.InflaterInputStream(
+      new java.io.ByteArrayInputStream(compressed)).readAllBytes()
+    val n = tileSize * tileSize
+    assert(raw.length == n * sample.bits / 8,
+      s"${raw.length} bytes inflated for a $tileSize tile of $sample")
+    val bb = ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN)
+    sample.bits match {
+      case 8 => Array.tabulate(n)(i => (raw(i) & 0xFF).toFloat)
+      case 16 => Array.tabulate(n)(i => (bb.getShort(2 * i) & 0xFFFF).toFloat)
+      case _ => Array.tabulate(n)(i => bb.getFloat(4 * i))
+    }
+  }
+
+  /** `tiff` with a GDAL_NODATA entry added to IFD 0: the IFD is copied
+    * to the end of the file with one more entry (tag 42113 sorts last)
+    * and the header points at the copy; every other offset stays
+    * valid. Classic TIFF in either byte order. */
+  private def withNodata(tiff: Array[Byte], nodata: String): Array[Byte] = {
+    val order =
+      if (tiff(0) == 'I') ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN
+    val in = ByteBuffer.wrap(tiff).order(order)
+    val ifd = in.getInt(4)
+    val n = in.getShort(ifd) & 0xFFFF
+    val ascii = nodata.getBytes("US-ASCII") :+ 0.toByte
+    val strOff = (tiff.length + 1) / 2 * 2
+    val newIfd = (strOff + ascii.length + 1) / 2 * 2
+    val out = ByteBuffer.allocate(newIfd + 2 + (n + 1) * 12 + 4).order(order)
+    out.put(tiff)
+    out.putInt(4, newIfd)
+    out.putShort(newIfd, (n + 1).toShort)
+    out.position(newIfd + 2)
+    out.put(tiff, ifd + 2, n * 12)
+    val e = newIfd + 2 + n * 12
+    out.putShort(e, 42113.toShort).putShort(e + 2, 2.toShort)
+      .putInt(e + 4, ascii.length)
+    // TIFF 6.0: a value of <= 4 bytes lives inline in the value slot
+    if (ascii.length <= 4) out.position(e + 8)
+    else { out.putInt(e + 8, strOff); out.position(strOff) }
+    out.put(ascii)
+    out.putInt(e + 12, in.getInt(ifd + 2 + n * 12)) // next-IFD pointer
+    out.array()
+  }
 
   test("tiled float32 deflate COG round-trips through GeoTiff.parse") {
     val w = 300; val h = 200
@@ -53,38 +120,33 @@ class CogWriterSpec extends SparkSuite {
     val cut = bytes.slice(0, bytes.length - bytes.length / 4)
     assert(GeoTiff.readSamples(cut).isLeft)
     intercept[java.io.IOException] {
-      GeoTiffWriter.inflateTile(Array[Byte](0x78, 0x9c.toByte), 64)
+      GeoTiffWriter.inflateFully(Array[Byte](0x78, 0x9c.toByte), 64 * 64 * 4)
     }
   }
 
   test("tile contents: deflate payload inflates to the source samples") {
     val w = 300; val h = 200
-    val data = Array.tabulate(w * h)(i => i.toFloat)
-    val bytes = GeoTiffWriter.write(w, h, data,
-      GeoTiffWriter.Geo(Seq(0.0, 1.0, 0.0, 0.0, 0.0, -1.0)),
-      fill = Some(-5.0), tileSize = 256)
-    // tile grid is 2 across x 1 down; offsets/counts live in the IFD
-    val buf = java.nio.ByteBuffer.wrap(bytes)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val nEntries = buf.getShort(8) & 0xFFFF
-    def tag(t: Int): (Int, Int) = (0 until nEntries).collectFirst {
-      case i if (buf.getShort(10 + i * 12) & 0xFFFF) == t =>
-        (buf.getInt(10 + i * 12 + 4), buf.getInt(10 + i * 12 + 8))
-    }.get
-    val (nTiles, offsOff) = tag(324)
-    val (_, cntsOff) = tag(325)
-    assert(nTiles == 2)
-    val t0 = bytes.slice(buf.getInt(offsOff),
-      buf.getInt(offsOff) + buf.getInt(cntsOff))
-    val samples = GeoTiffWriter.inflateTile(t0, 256)
-    assert(samples(0) == 0f)            // (0,0)
-    assert(samples(255) == 255f)        // (0,255)
-    assert(samples(256) == 300f)        // (1,0) = second source row
-    val t1 = bytes.slice(buf.getInt(offsOff + 4),
-      buf.getInt(offsOff + 4) + buf.getInt(cntsOff + 4))
-    val s1 = GeoTiffWriter.inflateTile(t1, 256)
-    assert(s1(0) == 256f)               // (0,256) in source
-    assert(s1(43) == 299f && s1(44) == -5f) // past width 300 -> fill
+    // every sample width, with a nodata the type holds: edges pad with it
+    for ((st, mod, fill) <- Seq((GeoTiffWriter.Float32, Int.MaxValue, -5.0),
+                                (GeoTiffWriter.UInt16, 65536, 65535.0),
+                                (GeoTiffWriter.UInt8, 256, 255.0))) {
+      val data = Array.tabulate(w * h)(i => (i % mod).toFloat)
+      val bytes = GeoTiffWriter.writeBands(w, h, Array(data), st,
+        Some(GeoTiffWriter.Geo(Seq(0.0, 1.0, 0.0, 0.0, 0.0, -1.0))),
+        fill = Some(fill), tileSize = 256)
+      // tile grid is 2 across x 1 down; offsets/counts live in the IFD
+      val tiles = level0Tiles(bytes)
+      assert(tiles.size == 2, s"$st")
+      val s0 = inflateTile(tiles(0), 256, st)
+      assert(s0(0) == data(0), s"$st")          // (0,0)
+      assert(s0(255) == data(255), s"$st")      // (0,255)
+      assert(s0(256) == data(300), s"$st")      // (1,0) = second source row
+      assert(s0(200 * 256) == fill.toFloat, s"$st") // past height 200
+      val s1 = inflateTile(tiles(1), 256, st)
+      assert(s1(0) == data(256), s"$st")        // (0,256) in source
+      assert(s1(43) == data(299) && s1(44) == fill.toFloat,
+        s"$st") // past width 300 -> fill
+    }
   }
 
   test("classic NetCDF -> COG: envelope, fill, and data all carried") {
@@ -179,7 +241,6 @@ class CogWriterSpec extends SparkSuite {
   private def imageioTiff(px: Seq[Int], w: Int, h: Int,
                           compression: String,
                           sixteenBit: Boolean = false): Array[Byte] = {
-    import javax.imageio.{IIOImage, ImageIO, ImageWriteParam}
     import java.awt.image.BufferedImage
     val img = new BufferedImage(w, h,
       if (sixteenBit) BufferedImage.TYPE_USHORT_GRAY
@@ -187,10 +248,18 @@ class CogWriterSpec extends SparkSuite {
     val raster = img.getRaster
     for (y <- 0 until h; x <- 0 until w)
       raster.setSample(x, y, 0, px(y * w + x))
+    imageioWrite(img, compression)
+  }
+
+  /** `img` as a TIFF from the JDK ImageIO writer, explicit compression. */
+  private def imageioWrite(img: java.awt.image.RenderedImage,
+                           compression: String): Array[Byte] = {
+    import javax.imageio.{IIOImage, ImageIO, ImageWriteParam}
     val writer = ImageIO.getImageWritersByFormatName("TIFF").next()
     val param = writer.getDefaultWriteParam
     param.setCompressionMode(ImageWriteParam.MODE_EXPLICIT)
     param.setCompressionType(compression)
+    if (compression == "JPEG") param.setCompressionQuality(1.0f)
     val bos = new java.io.ByteArrayOutputStream()
     val ios = ImageIO.createImageOutputStream(bos)
     writer.setOutput(ios)
@@ -309,24 +378,29 @@ class CogWriterSpec extends SparkSuite {
     * JPEG), an encoder this parser shares no code with. */
   private def imageioTiffRgb(rgb: Seq[Int], w: Int, h: Int,
                              compression: String): Array[Byte] = {
-    import javax.imageio.{IIOImage, ImageIO, ImageWriteParam}
     import java.awt.image.BufferedImage
     val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
     for (y <- 0 until h; x <- 0 until w) {
       val p = (y * w + x) * 3
       img.setRGB(x, y, (rgb(p) << 16) | (rgb(p + 1) << 8) | rgb(p + 2))
     }
-    val writer = ImageIO.getImageWritersByFormatName("TIFF").next()
-    val param = writer.getDefaultWriteParam
-    param.setCompressionMode(ImageWriteParam.MODE_EXPLICIT)
-    param.setCompressionType(compression)
-    if (compression == "JPEG") param.setCompressionQuality(1.0f)
-    val bos = new java.io.ByteArrayOutputStream()
-    val ios = ImageIO.createImageOutputStream(bos)
-    writer.setOutput(ios)
-    writer.write(null, new IIOImage(img, null, null), param)
-    ios.close(); writer.dispose()
-    bos.toByteArray
+    imageioWrite(img, compression)
+  }
+
+  /** 16-bit twin of [[imageioTiffRgb]]: an sRGB image of three ushort
+    * samples per pixel, which the JDK writer stores as 16-bit chunky
+    * RGB (photometric 2). */
+  private def imageioTiffRgb16(rgb: Seq[Int], w: Int, h: Int,
+                               compression: String): Array[Byte] = {
+    import java.awt.Transparency
+    import java.awt.color.ColorSpace
+    import java.awt.image.{BufferedImage, ComponentColorModel, DataBuffer}
+    val cm = new ComponentColorModel(ColorSpace.getInstance(ColorSpace.CS_sRGB),
+      false, false, Transparency.OPAQUE, DataBuffer.TYPE_USHORT)
+    val raster = cm.createCompatibleWritableRaster(w, h)
+    for (y <- 0 until h; x <- 0 until w; b <- 0 until 3)
+      raster.setSample(x, y, b, rgb((y * w + x) * 3 + b))
+    imageioWrite(new BufferedImage(cm, raster, false, null), compression)
   }
 
   /** Smooth RGB gradient (keeps max-quality JPEG loss to a few
@@ -560,7 +634,8 @@ class CogWriterSpec extends SparkSuite {
     val bands = Array.tabulate(3)(b =>
       Array.tabulate(w * h)(i => ((i * 7 + b * 31) % 256).toFloat))
     val geo = GeoTiffWriter.Geo(Seq(0.0, 1.0, 0.0, 0.0, 0.0, -1.0))
-    val cog = GeoTiffWriter.writeRgb(w, h, bands, geo, tileSize = 256)
+    val cog = GeoTiffWriter.writeBands(w, h, bands, GeoTiffWriter.UInt8,
+      Some(geo), tileSize = 256)
     // min(300,270)=270 > 256 -> one overview level (150x135)
     assert(GeoTiff.ifdCount(cog) == Right(2))
     val (m1, l1) = GeoTiff.readBandsAt(cog, 1).fold(e => fail(e), identity)
@@ -569,19 +644,20 @@ class CogWriterSpec extends SparkSuite {
       assert(l1(b)(y * 150 + x) == bands(b)(2 * y * w + 2 * x),
         s"band $b ($x,$y)")
     // below the block size: no overview IFD
-    val small = GeoTiffWriter.writeRgb(100, 80,
-      bands.map(_.take(100 * 80)), geo, tileSize = 256)
+    val small = GeoTiffWriter.writeBands(100, 80,
+      bands.map(_.take(100 * 80)), GeoTiffWriter.UInt8, Some(geo),
+      tileSize = 256)
     assert(GeoTiff.ifdCount(small) == Right(1))
   }
 
-  test("writeRgb round-trips an 8-bit RGB COG (multi-tile, geo tags)") {
+  test("writeBands round-trips an 8-bit RGB COG (multi-tile, geo tags)") {
     import graft.sources.GeoTiffWriter
     val w = 300; val h = 270 // 2x2 tile grid at 256 -> edge padding
     val bands = Array.tabulate(3)(b =>
       Array.tabulate(w * h)(i => ((i * 3 + b * 77) % 256).toFloat))
     val geo = GeoTiffWriter.Geo(Seq(10.0, 0.5, 0.0, 60.0, 0.0, -0.5))
-    val cog = GeoTiffWriter.writeRgb(w, h, bands, geo,
-      fill = Some(0.0), tileSize = 256)
+    val cog = GeoTiffWriter.writeBands(w, h, bands, GeoTiffWriter.UInt8,
+      Some(geo), fill = Some(0.0), tileSize = 256)
     val m = GeoTiff.parse(cog).fold(e => fail(e), identity)
     assert(m.width == w && m.height == h)
     assert(m.samplesPerPixel == 3 && m.bitsPerSample == 8)
@@ -614,12 +690,19 @@ class CogWriterSpec extends SparkSuite {
     val maxErr = (0 until 3).flatMap(b => (0 until w * h).map(i =>
       math.abs(out(b)(i) - rgb(i * 3 + b)))).max
     assert(maxErr <= 8.0f, s"JPEG RGB error $maxErr")
-    // 16-bit 3-band re-tile is refused (quarantine), not downcast
-    val rgb16 = RasterFixtures.stripTiffRgb(w, h, rgb, rowsPerStrip = 8)
-    // patch BitsPerSample array (off-IFD SHORT[3]) is fixture-internal;
-    // instead assert the single-band 16-bit path still works and the
-    // multi-band guard message fires on a synthetic 2-band claim
-    assert(Cogify.tiffToCog(rgb16).isRight)
+    // a 16-bit RGB source (JDK-encoded) re-tiles to uint16 RGB, not
+    // downcast to bytes: bands exactly equal
+    val rgb16 = rgb.zipWithIndex.map { case (v, i) => v * 257 - i % 7 }
+      .map(math.max(0, _))
+    val src16 = imageioTiffRgb16(rgb16, w, h, "LZW")
+    val (ms, _) = GeoTiff.readBands(src16).fold(e => fail(e), identity)
+    assert(ms.samplesPerPixel == 3 && ms.bitsPerSample == 16)
+    val cog16 = Cogify.tiffToCog(src16).fold(e => fail(e), identity)
+    val (m16, out16) = GeoTiff.readBands(cog16).fold(e => fail(e), identity)
+    assert(m16.samplesPerPixel == 3 && m16.bitsPerSample == 16 &&
+      m16.sampleFormat == 1)
+    for (b <- 0 until 3; i <- 0 until w * h)
+      assert(out16(b)(i) == rgb16(i * 3 + b).toFloat, s"band $b px $i")
   }
 
   test("deflate + horizontal predictor (tag 317=2) strips decode") {
@@ -652,6 +735,109 @@ class CogWriterSpec extends SparkSuite {
     assert(m.tileWidth.contains(256L))
     val (_, decoded) = GeoTiff.readSamples(cog).fold(e => fail(e), identity)
     assert(decoded.toSeq == vals.map(_.toFloat))
+  }
+
+  test("tiffToCog keeps the source sample type (uint8 strips, JDK " +
+    "uint16, float32): exact level 0, nearest overviews, nodata kept " +
+    "only when the type holds it") {
+    import graft.sources.RasterFixtures
+    // 3x3 level-0 tiles with edge padding; overviews 300x265, 150x133
+    val (w, h) = (600, 530)
+    val rnd = new scala.util.Random(7)
+    val u8 = Vector.tabulate(w * h)(i =>
+      ((i % w) * 3 + (i / w) * 5 + rnd.nextInt(9)) & 0xFF)
+    val u16 = Vector.tabulate(w * h)(i =>
+      ((i % w) * 97 + (i / w) * 31 + rnd.nextInt(9)) & 0xFFFF)
+    val f32 = Array.tabulate(w * h)(i => (i % w) * 0.37f - (i / w) * 0.11f)
+    def u8Src(nodata: String) = withNodata(RasterFixtures.stripTiffEncoded(
+      w, h, u8, rowsPerStrip = 16, compression = 8,
+      encode = RasterFixtures.deflate), nodata)
+    def u16Src(nodata: String) =
+      withNodata(imageioTiff(u16, w, h, "LZW", sixteenBit = true), nodata)
+    val f32Src = GeoTiffWriter.write(w, h, f32,
+      GeoTiffWriter.Geo(Seq(-180.0, 0.3, 0.0, 90.0, 0.0, -0.3)),
+      fill = Some(-9999.5))
+    // (source, its pixels, BitsPerSample, SampleFormat, nodata kept);
+    // float32 holds every nodata, so only the integer types drop one
+    val cases = Seq(
+      (u8Src("200"), u8.map(_.toFloat), 8, 1, Some(200.0)),
+      (u8Src("-9999"), u8.map(_.toFloat), 8, 1, None),
+      (u8Src("2.5"), u8.map(_.toFloat), 8, 1, None),
+      (u16Src("65535"), u16.map(_.toFloat), 16, 1, Some(65535.0)),
+      (u16Src("65536"), u16.map(_.toFloat), 16, 1, None),
+      (f32Src, f32.toSeq, 32, 3, Some(-9999.5)))
+    for ((src, px, bits, fmt, kept) <- cases) {
+      val label = s"$bits-bit format $fmt, nodata $kept"
+      val (ms, _) = GeoTiff.readBands(src).fold(e => fail(e), identity)
+      assert(ms.bitsPerSample == bits && ms.sampleFormat == fmt, label)
+      val cog = Cogify.tiffToCog(src).fold(e => fail(s"$label: $e"), identity)
+      assert(GeoTiff.ifdCount(cog) == Right(3), label)
+      val levels = (0 until 3).map(i =>
+        GeoTiff.readBandsAt(cog, i).fold(e => fail(e), identity))
+      for ((m, _) <- levels)
+        assert(m.bitsPerSample == bits && m.sampleFormat == fmt, label)
+      assert(levels(0)._2(0).sameElements(px), s"$label: level 0")
+      for (i <- 1 until 3) {
+        val (pm, prev) = levels(i - 1)
+        val (m, cur) = levels(i)
+        val (pw, ph) = (pm.width.toInt, pm.height.toInt)
+        val (cw, ch) = (m.width.toInt, m.height.toInt)
+        assert(cw == (pw + 1) / 2 && ch == (ph + 1) / 2, s"$label: dims $i")
+        val halved = Array.tabulate(cw * ch)(k => prev(0)(
+          math.min(2 * (k / cw), ph - 1) * pw + math.min(2 * (k % cw), pw - 1)))
+        assert(cur(0).sameElements(halved), s"$label: overview $i")
+      }
+      assert(levels(0)._1.nodata == kept, label)
+      // the last level-0 tile covers x, y 512..767: (88, 0) is past the
+      // width and (0, 18) past the height; both pad with the kept
+      // nodata, else 0
+      val pad = inflateTile(level0Tiles(cog).last, 256,
+        GeoTiffWriter.SampleType(bits, fmt))
+      val want = kept.getOrElse(0.0).toFloat
+      assert(pad(88) == want && pad(18 * 256) == want, s"$label: padding")
+    }
+  }
+
+  test("size guard: every level-0 tile of a uint8 re-tile inflates to " +
+    "exactly 256x256x1 bytes") {
+    import graft.sources.RasterFixtures
+    val (w, h) = (700, 600) // 3x3 data tiles, edge tiles padded
+    val px = Vector.tabulate(w * h)(i => (i * 7 + i / w) & 0xFF)
+    val cog = Cogify.tiffToCog(RasterFixtures.stripTiffEncoded(w, h, px,
+      rowsPerStrip = 16, compression = 8, encode = RasterFixtures.deflate))
+      .fold(e => fail(e), identity)
+    val tiles = level0Tiles(cog)
+    assert(tiles.size == 9)
+    tiles.foreach(inflateTile(_, 256, GeoTiffWriter.UInt8)) // asserts the size
+  }
+
+  test("Cogify.run -> scanMetadata -> enrichWithRaster reports " +
+    "raster:bits_per_sample 8 for a uint8 source") {
+    import graft.sources.RasterFixtures
+    val dir = Files.createTempDirectory("cogify-bits")
+    val in = dir.resolve("scene_2020.tif")
+    Files.write(in, RasterFixtures.stripTiff(5, 4, 0 until 20))
+    val objs = Seq(s"file://$in").toDF("remote_fileurl")
+      .withColumn("collection", lit("c"))
+      .withColumn("cogify", lit(true))
+      .withColumn("upload", lit(false))
+      .withColumn("properties", lit(null).cast("map<string,string>"))
+      .withColumn("product_id", lit(null).cast("string"))
+      .withColumn("assets", lit(null).cast("map<string,string>"))
+    val cog = Cogify.run(objs, new Cogify.RasterCogTransform(), Map.empty)
+    assert(cog.filter(col("cog_error").isNotNull).isEmpty)
+    val items = graft.operators.StacBuilder.regexItems(cog.drop("cog_error"),
+      graft.model.PipelineEvent(collection = "c"))
+    // the conversion returns plain local paths, binaryFile lists file:
+    val scan = GeoTiff.scanMetadata(spark.read.format("binaryFile")
+      .option("pathGlobFilter", "*.tif").load(dir.toString)
+      .withColumn("path", regexp_replace(col("path"), "^file:", "")))
+    val props = graft.operators.StacBuilder.enrichWithRaster(items, scan)
+      .select(col("properties")).collect().map(_.getMap[String, String](0))
+    assert(props.length == 1)
+    assert(props.head.get("raster:bits_per_sample").contains("8"),
+      s"${props.head}")
+    assert(props.head.get("proj:shape").contains("4,5"))
   }
 
   test("F14 grid ops: variable[0] + transpose + flipud (handler.py:106-110)") {
@@ -856,18 +1042,31 @@ class CogWriterSpec extends SparkSuite {
     val ncCfg = Cogify.CollectionConfig(variableName = Some("precip"),
       xVariable = Some("lon"), yVariable = Some("lat"),
       affine = Some(Cogify.parseAffine("(xmin, xres, 0, ymax, 0, -yres)")))
+    // 700x600 uint8 deflate strips (no geo tags), re-tiled: 3x3 data
+    // tiles, overviews 350x300 and 175x150; its own seed, so the
+    // fixtures above keep their pixels
+    val u8rnd = new scala.util.Random(12)
+    val u8Tiff = graft.sources.RasterFixtures.stripTiffEncoded(rw, rh,
+      Vector.tabulate(rw * rh)(i =>
+        ((i % rw) * 3 + (i / rw) * 5 + u8rnd.nextInt(9)) & 0xFF),
+      rowsPerStrip = 16, compression = 8,
+      encode = graft.sources.RasterFixtures.deflate)
     Seq(
       "float32 write, 3 overview levels" ->
         GeoTiffWriter.write(fw, fh, f32, geo, fill = Some(-9999.0)),
       "RGB writeRgb, 2 overview levels" ->
-        GeoTiffWriter.writeRgb(rw, rh, rgb, utm, fill = Some(7.0)),
+        GeoTiffWriter.writeBands(rw, rh, rgb, GeoTiffWriter.UInt8, Some(utm),
+          fill = Some(7.0)),
       "classicNetcdfToCog" ->
         Cogify.classicNetcdfToCog(nc, ncCfg).fold(e => fail(e), identity),
       "float32 no overviews, no geo" ->
-        GeoTiffWriter.writeOpt(fw, fh, f32, None, fill = Some(-1.5),
-          overviews = false),
+        GeoTiffWriter.writeBands(fw, fh, Array(f32), GeoTiffWriter.Float32,
+          None, fill = Some(-1.5), overviews = false),
       "RGB no overviews" ->
-        GeoTiffWriter.writeRgb(rw, rh, rgb, geo, overviews = false))
+        GeoTiffWriter.writeBands(rw, rh, rgb, GeoTiffWriter.UInt8, Some(geo),
+          overviews = false),
+      "uint8 tiffToCog, 2 overview levels" ->
+        Cogify.tiffToCog(u8Tiff).fold(e => fail(e), identity))
   }
 
   test("COG bytes match the digests recorded from the serial writer") {
@@ -881,7 +1080,10 @@ class CogWriterSpec extends SparkSuite {
       "float32 no overviews, no geo" ->
         "91720b92c06a50989b3edca562b121cad7d811dc5ddcc5386aee23cab89066f2",
       "RGB no overviews" ->
-        "9cdd62bbadbb41d2889687a7d464e56a56d2b354b734536dfa470b8a50af1bd5")
+        "9cdd62bbadbb41d2889687a7d464e56a56d2b354b734536dfa470b8a50af1bd5",
+      // recorded when tiffToCog began keeping the source sample type
+      "uint8 tiffToCog, 2 overview levels" ->
+        "09e4e45da8f7cd21122ac71f4ae825f80f073948d027d3cf02895ce97e236a2f")
     val got = digestFixtures.map { case (k, b) => k -> sha256(b) }
     assert(got.map(_._1).toSet == recorded.keySet)
     val changed = got.filter { case (k, d) => d != recorded(k) }
