@@ -81,13 +81,13 @@ object Bench {
     def canary(): Unit = {
       val t0 = System.nanoTime()
       spark.range(20000000L)
-        .selectExpr("sum(xxhash64(id * 2654435761))").collect()
+        .selectExpr("bit_xor(xxhash64(id * 2654435761))").collect()
       canaryTimes += (System.nanoTime() - t0) / 1e9
     }
     // one untimed canary first: its own Janino codegen is a cold cost
     // that would masquerade as contention in sample 0's time
     try spark.range(1000L)
-      .selectExpr("sum(xxhash64(id * 2654435761))").collect()
+      .selectExpr("bit_xor(xxhash64(id * 2654435761))").collect()
     catch { case _: Throwable => () }
     canary() // position 0 (post-warmup, pre-sweep)
     // per query: fastest SUCCESSFUL run (warm/steady-state) plus the

@@ -25,9 +25,6 @@ object GraftSession {
       "spark.master" -> s"local[$cores]",
       "spark.sql.shuffle.partitions" -> cores.toString,
       "spark.sql.session.timeZone" -> "UTC",
-      // hash arithmetic (minhash perms, fingerprints) relies on 64-bit
-      // wrap-around multiplication, like every hash library
-      "spark.sql.ansi.enabled" -> "false",
       // events.parquet carries TIMESTAMP(NANOS); read as long and
       // convert in Tables.t (Spark has no nanos timestamp type)
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",

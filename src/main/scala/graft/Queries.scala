@@ -1325,11 +1325,10 @@ object Queries {
     val pairs = li.join(ord, li("l_orderkey") === ord("o_orderkey"))
       .select(col("o_custkey").as("ck"), col("l_suppkey").as("sk"))
       .distinct()
-    // cast BEFORE packing: `col * 2` keeps the source int type, and
-    // under non-ANSI sessions an int key past 2^30 would wrap
-    // silently into negative/colliding node ids (r13 ADVICE find) —
-    // the long cast makes the packing honor its stated contract at
-    // any key range
+    // cast BEFORE packing: `col * 2` keeps the source int type, so an
+    // int key past 2^30 would overflow (an error under ANSI, silently
+    // negative/colliding node ids with it off) — the long cast makes
+    // the packing honor its stated contract at any key range
     val ck2 = col("ck").cast("long") * 2
     val sk2 = col("sk").cast("long") * 2 + 1
     val edges = pairs

@@ -20,8 +20,8 @@ object GeoCore extends Serializable {
   private val WS = java.util.regex.Pattern.compile("\\s+")
   val PolygonType: UTF8String = UTF8String.fromString("Polygon")
 
-  /** Spark-cast-compatible string→double; null on junk (non-ANSI cast
-    * semantics, like the HOF form's `.cast("double")`). */
+  /** Spark-cast-compatible string→double; null on junk, like the HOF
+    * form's `try_cast("double")`. */
   private def toDouble(s: String): Any =
     try java.lang.Double.parseDouble(s.trim)
     catch { case _: NumberFormatException => null }

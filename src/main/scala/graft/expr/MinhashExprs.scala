@@ -12,8 +12,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Native evaluators for the text-dedup hot path (shingle hashing,
   * MinHash signatures, SimHash). Semantics are IDENTICAL to the
-  * declarative higher-order-function forms in [[graft.llm.Dedup]]
-  * (kept there as `*Hof` for the equivalence spec) — but Spark's HOFs
+  * declarative higher-order-function forms in the test-scope
+  * `graft.SpecTwins` (`*Hof`, the equivalence spec) — but Spark's HOFs
   * (`transform`/`aggregate`/`zip_with`) evaluate interpreted with boxed
   * per-element lambdas, which made them ~10x the cost of these tight
   * primitive loops on the sf0.1 corpus.
@@ -114,7 +114,7 @@ object MinhashCore extends Serializable {
   }
 
   /** Deterministic affine permutation constants (seed 42) — the single
-    * source of truth shared with [[graft.llm.Dedup]]. */
+    * source of truth for [[permArrays]] and the declarative spec. */
   def perms(n: Int): Seq[(Long, Long)] = {
     val rnd = new scala.util.Random(42)
     Seq.fill(n)((rnd.nextLong() | 1L, rnd.nextLong()))

@@ -9,12 +9,12 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native evaluators for the embedding-similarity hot path. Semantics
-  * are identical to the declarative forms in [[graft.llm.Similarity]]
-  * (dot = left-to-right fold of elementwise products after a
-  * double-cast; cosine = dot / (norm(a) * norm(b)); LSH bucket bit i =
-  * sign of the dot against deterministic seed-7 gaussian hyperplanes) —
-  * the HOF forms evaluate interpreted per element and re-evaluate the
-  * bucket expression once per multiprobe neighbor. */
+  * are identical to the declarative forms in the test-scope
+  * `graft.SpecTwins` (dot = left-to-right fold of elementwise products
+  * after a double-cast; cosine = dot / (norm(a) * norm(b)); LSH bucket
+  * bit i = sign of the dot against deterministic seed-7 gaussian
+  * hyperplanes) — the HOF forms evaluate interpreted per element and
+  * re-evaluate the bucket expression once per multiprobe neighbor. */
 object VectorCore extends Serializable {
 
   /** Element i as double, or NaN boxed null semantics via exception-free
@@ -64,9 +64,9 @@ object VectorCore extends Serializable {
     val na = norm(a, aet)
     val nb = norm(b, bet)
     if (na == null || nb == null) null
-    // zero-norm vector: the declarative twin divides via Spark's
-    // Divide, which yields NULL on a 0.0 divisor in non-ANSI mode —
-    // match that, never NaN/Infinity
+    // zero-norm vector: the declarative twin divides with try_divide,
+    // which yields NULL on a 0.0 divisor — match that, never
+    // NaN/Infinity
     else if (na.doubleValue() * nb.doubleValue() == 0.0) null
     else d.doubleValue() / (na.doubleValue() * nb.doubleValue())
   }

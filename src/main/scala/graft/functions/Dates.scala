@@ -14,78 +14,23 @@ import org.apache.spark.sql.functions._
   * quarantine/DLQ sink instead of killing the job (see
   * [[graft.operators.Publish]]).
   *
-  * Everything is built from codegen'd built-in expressions
-  * (`regexp_extract_all`, `to_timestamp`, array functions) — no UDFs —
-  * so the whole cascade stays inside WholeStageCodegen and is pushed
-  * around freely by Catalyst.
+  * The cascade is one codegen'd Catalyst expression
+  * ([[graft.expr.ExtractDatesExpr]]) — no UDF — so it stays inside
+  * WholeStageCodegen and is pushed around freely by Catalyst.
   */
 object Dates {
-
-  /** (regex, datetime pattern) strategies, in priority order. All four
-    * are anchored on a preceding `_` or `-` exactly like the reference
-    * (`regex.py:36-41`). */
-  val strategies: Seq[(String, String)] = Seq(
-    ("(?:_|-)(\\d{4}-\\d{2}-\\d{2})", "yyyy-MM-dd"),
-    ("(?:_|-)(\\d{8})", "yyyyMMdd"),
-    ("(?:_|-)(\\d{6})", "yyyyMM"),
-    ("(?:_|-)(\\d{4})", "yyyy"))
-
-  /** All dates found by the first matching strategy, parsed as UTC
-    * timestamps; NULL when no strategy matches. */
-  def foundDates(filename: Column): Column = {
-    val candidates = strategies.map { case (pattern, format) =>
-      val hits = regexp_extract_all(filename, lit(pattern), lit(1))
-      when(size(hits) > 0, transform(hits, s => to_timestamp(s, format)))
-    }
-    coalesce(candidates: _*)
-  }
-
-  /** First day of the month, midnight (reference `regex.py:19`). */
-  def monthStart(d: Column): Column = date_trunc("month", d)
-
-  /** Last day of the month, midnight (reference `regex.py:20` via
-    * `relativedelta(day=31)`). */
-  def monthEnd(d: Column): Column = to_timestamp(last_day(d))
-
-  /** Jan 1 of the year, midnight (reference `regex.py:14`). */
-  def yearStart(d: Column): Column = date_trunc("year", d)
-
-  /** Dec 31 of the year, midnight (reference `regex.py:15`). */
-  def yearEnd(d: Column): Column =
-    to_timestamp(concat(year(d).cast("string"), lit("-12-31")), "yyyy-MM-dd")
 
   /** `struct<start_datetime, end_datetime, single_datetime>` — exactly
     * one of (start+end) or single is set; whole struct NULL when no date
     * is found (reference raises). Evaluated by the native single-pass
     * [[graft.expr.ExtractDatesExpr]] (SURVEY §7.3's nominated custom
-    * expression); [[extractDatesDecl]] is the declarative twin kept as
-    * the executable spec (both hash-match the same oracle).
+    * expression).
     *
     * @param datetimeRange NULL, "month" or "year" — widens a single hit
     *                      to a range (`regex.py:24-27`).
     */
   def extractDates(filename: Column, datetimeRange: Column): Column =
     call_function("extract_dates", filename, datetimeRange)
-
-  /** Declarative 4-regex cascade twin of [[extractDates]]. */
-  def extractDatesDecl(filename: Column, datetimeRange: Column): Column = {
-    val dates  = foundDates(filename)
-    val n      = size(dates)
-    val single = element_at(dates, 1)
-    val widen  = datetimeRange.isNotNull
-    val ws = when(datetimeRange === "month", monthStart(single))
-      .when(datetimeRange === "year", yearStart(single))
-    val we = when(datetimeRange === "month", monthEnd(single))
-      .when(datetimeRange === "year", yearEnd(single))
-    // an unparseable hit in the winning strategy NULLs the whole
-    // struct — the reference's ValueError (`regex.py:51-53` strptime)
-    when(dates.isNotNull && !exists(dates, d => d.isNull), struct(
-      when(n > 1, array_min(dates)).when(n === 1 && widen, ws)
-        .as("start_datetime"),
-      when(n > 1, array_max(dates)).when(n === 1 && widen, we)
-        .as("end_datetime"),
-      when(n === 1 && !widen, single).as("single_datetime")))
-  }
 
   /** Convenience overload for a constant range config. */
   def extractDates(filename: Column, datetimeRange: Option[String]): Column =

@@ -9,7 +9,7 @@ object Geo {
 
   /** F7 `pairwise`: flat token array → array of [x, y] pairs
     * (reference `stac.py:164-170`). An odd trailing token is dropped,
-    * exactly like `zip(a, a)`. */
+    * exactly like `zip(a, a)`; a non-numeric token reads as null. */
   def pairwise(tokens: Column): Column = {
     // even/odd split + zip (truncated to the shorter side) — indexing
     // the outer array inside a transform lambda would re-evaluate the
@@ -17,7 +17,7 @@ object Geo {
     val xs = filter(tokens, (_, i) => i % 2 === 0)
     val ys = filter(tokens, (_, i) => i % 2 === 1)
     val zipped = zip_with(xs, ys,
-      (a, b) => array(a.cast("double"), b.cast("double")))
+      (a, b) => array(a.try_cast("double"), b.try_cast("double")))
     slice(zipped, lit(1), size(ys))
   }
 
@@ -67,7 +67,9 @@ object Geo {
       val toks = filter(split(src, "\\s+"), t => length(t) > 0)
       when(size(toks) > 0, toks)
     }
-    val polyTokens = pySplit(element_at(element_at(polygons, 1), 1))
+    // an empty first polygon has no token string: NULL, like the kernel
+    val polyTokens =
+      pySplit(try_element_at(element_at(polygons, 1), lit(1)))
     val tokens =
       when(polygons.isNotNull && size(polygons) > 0,
         when(coalesce(reverseCoords, lit(false)), reverse(polyTokens))

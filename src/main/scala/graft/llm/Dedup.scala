@@ -149,51 +149,16 @@ object Dedup {
   /** Shingle hash set (array<long>) — the MinHash input. Word-level
     * xxhash64 then a k-term polynomial combine, evaluated by the native
     * [[graft.expr.ShingleHashesExpr]] (HOF evaluation is interpreted
-    * and was ~10x slower; [[shingleHashesHof]] keeps the declarative
-    * form for the equivalence spec). Set semantics (distinct) match
-    * [[shingles]] up to 64-bit collisions (~2^-40 per doc pair). */
+    * and was ~10x slower). Set semantics (distinct) match [[shingles]]
+    * up to 64-bit collisions (~2^-40 per doc pair). */
   def shingleHashes(text: Column, k: Int): Column =
     call_function("shingle_hashes", text, lit(k))
-
-  /** Declarative HOF twin of [[shingleHashes]] (spec reference only). */
-  def shingleHashesHof(text: Column, k: Int): Column = {
-    val w = transform(Text.words(Text.normalize(text)), x => xxhash64(x))
-    val n = size(w)
-    val M = lit(1000003L)
-    // Shifted zip_with chain: acc_j[i] = poly(w[i..i+j-1]). Arrays are
-    // referenced only OUTSIDE lambda bodies — indexing an outer array
-    // inside a transform lambda re-evaluates that array per element
-    // (O(n^2) per doc; measured 3x slower even vs string shingles).
-    val acc = (2 to k).foldLeft(w) { (a, j) =>
-      zip_with(a, slice(w, lit(j), greatest(n - j + 1, lit(0))),
-        (x, y) => x * M + y)
-    }
-    when(n >= k, array_distinct(slice(acc, lit(1), n - k + 1)))
-      .otherwise(array(aggregate(w, lit(0L), (a, h) => a * M + h)))
-  }
-
-  /** Deterministic affine permutation constants (seed 42). */
-  private[llm] def perms(n: Int): Seq[(Long, Long)] =
-    graft.expr.MinhashCore.perms(n)
 
   /** MinHash signature: for each permutation i, min over shingle hashes
     * of `a_i*h + b_i` (64-bit wrap-around arithmetic) — native
     * [[graft.expr.MinhashSigExpr]]. */
   def minhashSignature(hashes: Column, numHashes: Int): Column =
     call_function("minhash_sig", hashes, lit(numHashes))
-
-  /** Declarative HOF twin of [[minhashSignature]] (spec reference only):
-    * ONE fold over the hash array with an `array<long>` accumulator —
-    * the naive `numHashes x array_min(transform(...))` form
-    * re-evaluates the whole shingle pipeline per permutation (no CSE
-    * inside a projection), which measured ~60x slower. */
-  def minhashSignatureHof(hashes: Column, numHashes: Int): Column = {
-    val ps = typedlit(perms(numHashes))  // array<struct<_1:a, _2:b>>
-    val init = typedlit(Seq.fill(numHashes)(Long.MaxValue))
-    aggregate(hashes, init, (acc, h) =>
-      zip_with(acc, ps, (m, p) =>
-        least(m, h * p.getField("_1") + p.getField("_2"))))
-  }
 
   /** Banded-LSH keys: signature split into `bands` bands of
     * `numHashes/bands` rows each; key = (band index, hash of band slice). */
@@ -985,21 +950,6 @@ object Dedup {
     * the sign of the sum over tokens of ±1 for that token-hash bit.
     * Pure per-row work, no shuffle — native [[graft.expr.SimhashExpr]]. */
   def simhash(text: Column): Column = call_function("simhash64", text)
-
-  /** Declarative HOF twin of [[simhash]] (spec reference only). */
-  def simhashHof(text: Column): Column = {
-    val hs = transform(Text.words(Text.normalize(text)), w => xxhash64(w))
-    // ONE fold with a 64-wide vote accumulator (a per-bit fold would
-    // re-evaluate the token-hash pipeline 64x — same trap as the
-    // minhash signature). Bit j is tested via bitwiseAND with 1L<<j.
-    val bitMasks = typedlit((0 until 64).map(j => 1L << j))
-    val votes = aggregate(hs, typedlit(Seq.fill(64)(0)),
-      (acc, h) => zip_with(acc, bitMasks, (c, m) =>
-        c + when(h.bitwiseAND(m) =!= 0L, 1).otherwise(-1)))
-    aggregate(zip_with(votes, bitMasks,
-      (v, m) => when(v > 0, m).otherwise(0L)),
-      lit(0L), (acc, b) => acc.bitwiseOR(b))
-  }
 
   /** Hamming distance between two 64-bit simhashes. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))

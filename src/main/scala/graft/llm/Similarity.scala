@@ -21,14 +21,8 @@ object Similarity {
   private def asDouble(a: Column): Column = transform(a, _.cast("double"))
 
   /** Dot product, left-to-right fold — native
-    * [[graft.expr.VecDotExpr]]; HOF twin below is the equivalence-spec
-    * reference. */
+    * [[graft.expr.VecDotExpr]]. */
   def dot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
-
-  /** Declarative HOF twin of [[dot]] (spec reference only). */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(asDouble(a), asDouble(b), (x, y) => x * y),
-      lit(0.0), (acc, v) => acc + v)
 
   def norm(a: Column): Column =
     sqrt(aggregate(asDouble(a), lit(0.0), (acc, v) => acc + v * v))
@@ -36,10 +30,6 @@ object Similarity {
   /** Cosine similarity — native [[graft.expr.CosineSimExpr]]. */
   def cosine(a: Column, b: Column): Column =
     call_function("cosine_sim", a, b)
-
-  /** Declarative HOF twin of [[cosine]] (spec reference only). */
-  def cosineHof(a: Column, b: Column): Column =
-    dotHof(a, b) / (norm(a) * norm(b))
 
   /** Global top-k per query over a (query_id, nn_id, sim) frame, with
     * a per-partition bounded-heap pre-pass: each input partition emits
@@ -122,12 +112,6 @@ object Similarity {
     * [[graft.expr.LshBucketExpr]]. */
   def lshBucket(vec: Column, nBits: Int, dim: Int): Column =
     call_function("lsh_bucket", vec, lit(nBits), lit(dim))
-
-  /** Declarative HOF twin of [[lshBucket]] (spec reference only). */
-  def lshBucketHof(vec: Column, planes: Seq[Seq[Double]]): Column =
-    planes.zipWithIndex.map { case (p, i) =>
-      when(dotHof(vec, typedlit(p)) >= 0, lit(1L) * lit(1L << i)).otherwise(lit(0L))
-    }.reduce((a, b) => a.bitwiseOR(b))
 
   /** Approximate top-k: bucket the corpus on `nBits` hyperplane signs,
     * join queries to their bucket, rank by exact cosine inside the
@@ -479,11 +463,11 @@ object Similarity {
     // FilterExec does no common-subexpression elimination, so the
     // `!isnan(c) && c >= t` spelling would compute it twice.
     // Null/zero-norm semantics match VectorCore.cosine exactly: a
-    // null element nulls the dot AND the norm; Spark's non-ANSI
-    // Divide yields NULL on a 0.0 divisor, which is the kernel's
-    // explicit zero-norm branch.
+    // null element nulls the dot AND the norm; try_divide yields NULL
+    // on a 0.0 divisor, which is the kernel's explicit zero-norm branch.
     val pairCos = nanvl(
-      dot(col("vec_a"), col("vec_b")) / (col("nrm_a") * col("nrm_b")),
+      try_divide(dot(col("vec_a"), col("vec_b")),
+        col("nrm_a") * col("nrm_b")),
       lit(null).cast("double"))
     val repEdges = a.join(b, Seq("cell"))
       .filter(col("id_a") < col("id_b"))

@@ -111,15 +111,9 @@ object Text {
   /** 64-bit polynomial rolling-hash fingerprint over normalized words —
     * deterministic across runs (xxhash64 is seeded constant in Spark).
     * Collision-free in practice at catalog scale for dedup pre-keys.
-    * Native [[graft.expr.FingerprintExpr]]; the HOF twin below is the
-    * equivalence-spec reference. */
+    * Native [[graft.expr.FingerprintExpr]]. */
   def fingerprint(text: Column): Column =
     call_function("text_fingerprint", text)
-
-  /** Declarative HOF twin of [[fingerprint]] (spec reference only). */
-  def fingerprintHof(text: Column): Column =
-    aggregate(words(normalize(text)), lit(0L),
-      (acc, w) => acc * lit(1000003L) + xxhash64(w))
 
   /** PII redaction: emails, IPv4 addresses and long digit runs
     * (phone-ish) replaced with fixed tokens. Patterns stay in the

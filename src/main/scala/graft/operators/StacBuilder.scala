@@ -182,7 +182,7 @@ object StacBuilder {
                          graft.sources.GeoTiff.ScanResult]): DataFrame = {
     val dataHref = coalesce(
       element_at(col("assets"), "data").getField("href"),
-      element_at(map_values(col("assets")), 1).getField("href"))
+      try_element_at(map_values(col("assets")), lit(1)).getField("href"))
     val meta = raster.toDF().filter(col("ok"))
       .select(col("path").as("__rpath"),
         map_filter(map(
@@ -292,7 +292,7 @@ object StacBuilder {
     joined.select(Seq(
       Ids.itemId(url, ev.idRegex, col("product_id")).as("id"),
       col("collection"),
-      to_timestamp(col("time_start")).as("datetime"),
+      try_to_timestamp(col("time_start")).as("datetime"),
       lit(null).cast("timestamp").as("start_datetime"),
       lit(null).cast("timestamp").as("end_datetime"),
       geometry.as("geometry"),

@@ -34,12 +34,12 @@ object Validate {
   /** Distinct values / total rows (1.0 = unique key). */
   def uniqueness(c: String): Check =
     Check(s"uniqueness($c)",
-      countDistinct(col(c)).cast("double") / count(lit(1)), 1.0)
+      perRow(countDistinct(col(c))), 1.0)
 
   /** Distinct/total via HLL — no Expand rewrite, ~2% error at p=12. */
   def approxUniqueness(c: String): Check =
     Check(s"approx_uniqueness($c)",
-      approx_count_distinct(col(c)).cast("double") / count(lit(1)), 1.0)
+      perRow(approx_count_distinct(col(c))), 1.0)
 
   /** Fraction of values inside [lo, hi] (nulls fail). */
   def between(c: String, lo: Double, hi: Double): Check =
@@ -59,7 +59,12 @@ object Validate {
     Check(s"is_in($c)", fraction(col(c).isInCollection(allowed)), 1.0)
 
   private def fraction(pred: Column): Column =
-    sum(when(pred, 1L).otherwise(0L)).cast("double") / count(lit(1))
+    perRow(sum(when(pred, 1L).otherwise(0L)))
+
+  /** `n` over the row count; NULL on an empty table (no rows, no
+    * verdict). */
+  private def perRow(n: Column): Column =
+    try_divide(n.cast("double"), count(lit(1)))
 
   /** Run the suite: one row per check with columns
     * (constraint STRING, metric DOUBLE rounded 6dp, passed BOOLEAN).

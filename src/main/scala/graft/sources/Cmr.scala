@@ -85,12 +85,9 @@ object Cmr {
         val matching = when(col("links").isNotNull,
           filter(col("links"), relMatch))
         granules.select(col("id").as("granule_id"),
-          // guarded: element_at on an empty array THROWS under
-          // Spark 4's default ANSI mode (the in-repo sessions disable
-          // it, but a notebook session won't) — a granule with no
-          // matching rel must yield the documented null href
-          when(size(matching) > 0, element_at(matching, -1)
-            .getField("href")).as("href"))
+          // a granule with no matching rel yields the documented null
+          // href (element_at on an empty array throws under ANSI)
+          try_element_at(matching, lit(-1)).getField("href").as("href"))
     }
     val objs = selected.select(
       lit(ev.collection).as("collection"),

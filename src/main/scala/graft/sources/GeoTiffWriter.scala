@@ -415,10 +415,12 @@ object GeoTiffWriter {
     out.toByteArray
   }
 
-  /** Inflate a DEFLATE segment into a buffer of at most `maxLen`
-    * bytes. Throws on truncated input (Inflater.inflate returns 0 with
-    * needsInput while unfinished) instead of spinning — a partially
-    * downloaded file must error, not hang the task. */
+  /** Inflate a DEFLATE segment into at most `maxLen` bytes and return
+    * only the bytes the stream produced, so a caller can tell a stream
+    * that ends early from a full one. Throws on truncated input
+    * (Inflater.inflate returns 0 with needsInput while unfinished)
+    * instead of spinning — a partially downloaded file must error, not
+    * hang the task. */
   private[graft] def inflateFully(compressed: Array[Byte],
                                   maxLen: Int): Array[Byte] = {
     val inf = new java.util.zip.Inflater()
@@ -436,7 +438,7 @@ object GeoTiffWriter {
         }
         off += n
       }
-      raw
+      if (off == raw.length) raw else java.util.Arrays.copyOf(raw, off)
     } finally inf.end()
   }
 }

@@ -988,8 +988,8 @@ object NetCdf {
         // header included) — inflate first, then scan like any block
         val (arr, bbuf, a) =
           if (filtered) {
-            val raw = GeoTiffWriter.inflateFully(
-              bytes.slice(a0, a0 + stored.toInt), size.toInt)
+            val raw = inflateExact(
+              bytes.slice(a0, a0 + stored.toInt), size)
             (raw, ByteBuffer.wrap(raw).order(buf.order), 0)
           } else (bytes, buf, a0)
         val dsig = new String(arr, a, 4,
@@ -1063,8 +1063,8 @@ object NetCdf {
     def parseHuge(addr: Long, stored: Long, mem: Long): Unit = {
       val (arr, b2, at) =
         if (mem >= 0) {
-          val raw = GeoTiffWriter.inflateFully(
-            bytes.slice(addr.toInt, (addr + stored).toInt), mem.toInt)
+          val raw = inflateExact(
+            bytes.slice(addr.toInt, (addr + stored).toInt), mem)
           (raw, ByteBuffer.wrap(raw).order(buf.order), 0)
         } else (bytes, buf, addr.toInt)
       parseLinkMessage(arr, b2, at)._1.foreach(links += _)
@@ -1224,7 +1224,7 @@ object NetCdf {
       // was SKIPPED for this chunk
       ci.filters.zipWithIndex.reverse.foreach { case (fid, idx) =>
         if ((mask & (1 << idx)) == 0) raw = fid match {
-          case 1 => GeoTiffWriter.inflateFully(raw, nominal.toInt)
+          case 1 => inflateExact(raw, nominal)
           case 2 => unshuffle(raw, es)
           case 3 => raw.dropRight(4) // fletcher32: strip the checksum
           case other => throw new IllegalArgumentException(
@@ -1679,6 +1679,17 @@ object NetCdf {
     }
     true
   } catch { case scala.util.control.NonFatal(_) => false }
+
+  /** Inflate a DEFLATE stream that must decode to exactly `len` bytes
+    * (a chunk, a filtered heap block or huge object): one that ends
+    * early is corruption and throws → the caller's fail-closed path,
+    * never zero bytes in place of lost data. */
+  private def inflateExact(compressed: Array[Byte], len: Long): Array[Byte] = {
+    val raw = GeoTiffWriter.inflateFully(compressed, len.toInt)
+    require(raw.length == len,
+      s"DEFLATE stream decoded short: ${raw.length} of $len bytes")
+    raw
+  }
 
   /** Undo the HDF5 shuffle filter: de-interleave byte planes back to
     * whole elements (trailing non-multiple bytes pass through). */

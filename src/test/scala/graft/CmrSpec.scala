@@ -98,6 +98,22 @@ class CmrSpec extends SparkSuite {
       Seq(-2.0677778, 9.1694444, 0.61, 11.8641667))
   }
 
+  test("a malformed time_start gives its item a null datetime; the " +
+    "other granules' items survive") {
+    val good = Cmr.granulesFromJson(spark, granulePath)
+    val granules = good.unionByName(good.withColumn("id", lit("G-bad"))
+      .withColumn("time_start", lit("not-a-date")))
+    val ev = event(withAssets = false)
+    val objs = Cmr.discover(granules, ev)
+      .withColumn("product_id", lit(productId))
+    val got = StacBuilder.cmrItems(objs, granules, ev)
+      .select(col("properties").getItem("concept_id"),
+        date_format(col("datetime"), "yyyy-MM-dd"))
+      .collect().map(r => r.getString(0) -> Option(r.getString(1))).toMap
+    assert(got == Map("G1200110083-NASA_MAAP" -> Some("2016-02-25"),
+      "G-bad" -> None))
+  }
+
   test("multi_asset_items docstring example (cmr-query/handler.py:10-101)") {
     import spark.implicits._
     val base = "s3://nasa-maap-data-store/file-staging/nasa-map/AfriSAR_UAVSAR_KZ___1/"

@@ -950,6 +950,22 @@ class CogWriterSpec extends SparkSuite {
     assert(math.abs(t(3) - 90.15) < 1e-9, s"y0 ${t(3)}")
   }
 
+  test("short DEFLATE strips fail closed (Left), never a zero-filled " +
+    "grid") {
+    import graft.sources.{GeoTiff, GeoTiffWriter, RasterFixtures}
+    // inflate returns only what the stream holds, not its cap
+    val four = RasterFixtures.deflate(Array[Byte](1, 2, 3, 4))
+    assert(GeoTiffWriter.inflateFully(four, 16).toSeq == Seq[Byte](1, 2, 3, 4))
+    // each 3-row strip is a complete stream holding its first row only
+    val w = 8
+    val short = RasterFixtures.stripTiffEncoded(w, 6, 0 until 48,
+      rowsPerStrip = 3, compression = 8,
+      encode = raw => RasterFixtures.deflate(raw.take(w)))
+    val got = GeoTiff.readBands(short)
+    assert(got.isLeft && got.left.exists(_.contains("short")),
+      s"short DEFLATE strips did not quarantine: $got")
+  }
+
   test("truncated LZW strip fails closed (Left), never a zero-filled " +
     "grid; RowsPerStrip=0xFFFFFFFF decodes via the height clamp") {
     import graft.sources.{GeoTiff, RasterFixtures}

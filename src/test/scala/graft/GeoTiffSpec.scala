@@ -43,7 +43,12 @@ class GeoTiffSpec extends SparkSuite {
       .left.exists(_.contains("magic")))
   }
 
-  test("raster metadata enriches item properties; fallback rows untouched") {
+  /** Items for a readable raster (`good_2020`) and a non-raster file
+    * (`bad_2021`), both with properties `k -> v`, enriched from their
+    * scan after `prep`; returns each id's properties. */
+  private def enrichedProps(
+      prep: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+  : Map[String, scala.collection.Map[String, String]] = {
     import org.apache.spark.sql.functions._
     val dir = Files.createTempDirectory("rasters-enrich")
     Files.write(dir.resolve("good_2020.tif"),
@@ -61,10 +66,14 @@ class GeoTiffSpec extends SparkSuite {
     val ev = graft.model.PipelineEvent(collection = "c",
       assetName = Some("data"))
     val items = graft.operators.StacBuilder.regexItems(objs, ev)
-    val enriched = graft.operators.StacBuilder
-      .enrichWithRaster(items, GeoTiff.scanMetadata(media))
+    graft.operators.StacBuilder
+      .enrichWithRaster(prep(items), GeoTiff.scanMetadata(media))
       .select(col("id"), col("properties")).collect()
       .map(r => r.getString(0) -> r.getMap[String, String](1)).toMap
+  }
+
+  test("raster metadata enriches item properties; fallback rows untouched") {
+    val enriched = enrichedProps(identity)
     val good = enriched("good_2020")
     assert(good("proj:epsg") == "4326")
     assert(good("proj:shape") == "256,512")
@@ -73,6 +82,21 @@ class GeoTiffSpec extends SparkSuite {
     assert(good("k") == "v") // pre-existing properties survive the merge
     val bad = enriched("bad_2021")
     assert(!bad.contains("proj:epsg") && bad("k") == "v")
+  }
+
+  test("an item with an empty assets map passes through enrichment " +
+    "with its properties untouched") {
+    import org.apache.spark.sql.functions._
+    // no asset to take a fallback href from: no raster join match
+    val enriched = enrichedProps(_.withColumn("assets",
+      when(col("id") === "good_2020",
+        map_filter(col("assets"), (_, _) => lit(false)))
+        .otherwise(col("assets"))))
+    for (id <- Seq("good_2020", "bad_2021")) {
+      val props = enriched(id)
+      assert(props("k") == "v" && !props.keys.exists(k =>
+        k.startsWith("proj:") || k.startsWith("raster:")), s"$id: $props")
+    }
   }
 
   test("distributed scan over binaryFile source with fallback rows") {

@@ -14,7 +14,10 @@ class GraftSessionSpec extends SparkSuite {
     assert(sc.master == "local[4]")
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
-    assert(spark.conf.get("spark.sql.ansi.enabled") == "false")
+    // Spark's default ANSI mode: graft sets no key for it
+    assert(!GraftSession.defaults(4, new org.apache.spark.SparkConf())
+      .exists(_._1 == "spark.sql.ansi.enabled"))
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
     assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
     assert(sc.uiWebUrl.isEmpty)
     assert(sc.getConf.get("spark.log.level") == "WARN")

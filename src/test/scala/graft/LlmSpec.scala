@@ -73,14 +73,13 @@ class LlmSpec extends SparkSuite {
         .select("doc_id").as[Long].collect().toSeq.sorted,
       graft.llm.Clean.corpus(withBlank, "doc_id", "text", cfg)
         .select("doc_id").as[Long].collect().toSeq.sorted)
-    val off = run()
+    val default = run()
     // the token count trims spaces only: "\t\n" splits into two empty
     // tokens, so it passes the gate
-    assert(off == ((1L to 5L) :+ 8L, Seq(1L, 3L, 4L, 5L, 8L)))
-    val key = "spark.sql.ansi.enabled"
-    spark.conf.set(key, "true")
-    try assert(run() == off)
-    finally spark.conf.set(key, "false")
+    assert(default == ((1L to 5L) :+ 8L, Seq(1L, 3L, 4L, 5L, 8L)))
+    withConf("spark.sql.ansi.enabled" -> "false") {
+      assert(run() == default)
+    }
   }
 
   test("lshTopK projects the query bucket once and probes Hamming " +

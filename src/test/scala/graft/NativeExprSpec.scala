@@ -2,14 +2,23 @@ package graft
 
 import graft.functions.Geo
 import graft.llm.Dedup
+import graft.SpecTwins._
 import org.apache.spark.sql.functions._
 
 /** The native Catalyst expressions (shingle_hashes / minhash_sig /
   * simhash64 / cmr_geometry / geometry_bbox) must be bit-identical to
-  * their declarative HOF twins — the HOF forms are the executable spec
-  * of the semantics; the natives exist purely for speed. */
+  * their declarative HOF twins ([[SpecTwins]], Geo's `*Hof`) — the HOF
+  * forms are the executable spec of the semantics; the natives exist
+  * purely for speed. */
 class NativeExprSpec extends SparkSuite {
   import spark.implicits._
+
+  /** The hash twins' Horner folds and affine permutations wrap on
+    * 64-bit overflow, as the kernels (and every hash library) do; SQL
+    * arithmetic wraps only with ANSI off, so their comparisons run
+    * there. */
+  private def wrapping[T](f: => T): T =
+    withConf("spark.sql.ansi.enabled" -> "false")(f)
 
   private val texts = Seq(
     "The quick brown fox jumps over the lazy dog",
@@ -21,30 +30,32 @@ class NativeExprSpec extends SparkSuite {
     "dup dup dup dup dup dup dup dup") // repeated shingles -> distinct
 
   test("shingle_hashes / minhash_sig / simhash64 match HOF twins") {
-    val df = texts.toDF("text")
-    for (k <- Seq(1, 3, 5)) {
-      val rows = df.select(
-        Dedup.shingleHashes(col("text"), k).as("nat"),
-        Dedup.shingleHashesHof(col("text"), k).as("hof")).collect()
-      rows.zip(texts).foreach { case (r, t) =>
-        assert(r.getSeq[Long](0) == r.getSeq[Long](1),
-          s"shingle mismatch k=$k text='$t'")
+    wrapping {
+      val df = texts.toDF("text")
+      for (k <- Seq(1, 3, 5)) {
+        val rows = df.select(
+          Dedup.shingleHashes(col("text"), k).as("nat"),
+          shingleHashesHof(col("text"), k).as("hof")).collect()
+        rows.zip(texts).foreach { case (r, t) =>
+          assert(r.getSeq[Long](0) == r.getSeq[Long](1),
+            s"shingle mismatch k=$k text='$t'")
+        }
       }
-    }
-    for (n <- Seq(16, 64)) {
-      val rows = df.select(
-        Dedup.minhashSignature(Dedup.shingleHashes(col("text"), 5), n).as("nat"),
-        Dedup.minhashSignatureHof(Dedup.shingleHashesHof(col("text"), 5), n)
-          .as("hof")).collect()
-      rows.zip(texts).foreach { case (r, t) =>
-        assert(r.getSeq[Long](0) == r.getSeq[Long](1),
-          s"signature mismatch n=$n text='$t'")
+      for (n <- Seq(16, 64)) {
+        val rows = df.select(
+          Dedup.minhashSignature(Dedup.shingleHashes(col("text"), 5), n).as("nat"),
+          minhashSignatureHof(shingleHashesHof(col("text"), 5), n)
+            .as("hof")).collect()
+        rows.zip(texts).foreach { case (r, t) =>
+          assert(r.getSeq[Long](0) == r.getSeq[Long](1),
+            s"signature mismatch n=$n text='$t'")
+        }
       }
-    }
-    val sims = df.select(Dedup.simhash(col("text")).as("nat"),
-      Dedup.simhashHof(col("text")).as("hof")).collect()
-    sims.zip(texts).foreach { case (r, t) =>
-      assert(r.getLong(0) == r.getLong(1), s"simhash mismatch text='$t'")
+      val sims = df.select(Dedup.simhash(col("text")).as("nat"),
+        simhashHof(col("text")).as("hof")).collect()
+      sims.zip(texts).foreach { case (r, t) =>
+        assert(r.getLong(0) == r.getLong(1), s"simhash mismatch text='$t'")
+      }
     }
   }
 
@@ -76,30 +87,34 @@ class NativeExprSpec extends SparkSuite {
   }
 
   test("shingle_hashes matches HOF on the real documents table") {
-    val docs = Tables.t(spark, "/root/testdata/sf0.001", "documents")
-    val bad = docs.select(
-      Dedup.shingleHashes(col("text"), 5).as("nat"),
-      Dedup.shingleHashesHof(col("text"), 5).as("hof"),
-      Dedup.minhashSignature(Dedup.shingleHashes(col("text"), 5), 64).as("nsig"),
-      Dedup.minhashSignatureHof(Dedup.shingleHashesHof(col("text"), 5), 64).as("hsig"))
-      .filter(col("nat") =!= col("hof") || col("nsig") =!= col("hsig"))
-      .count()
-    assert(bad == 0)
+    wrapping {
+      val docs = Tables.t(spark, "/root/testdata/sf0.001", "documents")
+      val bad = docs.select(
+        Dedup.shingleHashes(col("text"), 5).as("nat"),
+        shingleHashesHof(col("text"), 5).as("hof"),
+        Dedup.minhashSignature(Dedup.shingleHashes(col("text"), 5), 64).as("nsig"),
+        minhashSignatureHof(shingleHashesHof(col("text"), 5), 64).as("hsig"))
+        .filter(col("nat") =!= col("hof") || col("nsig") =!= col("hsig"))
+        .count()
+      assert(bad == 0)
+    }
   }
 
   test("text_fingerprint matches its HOF twin (edge cases + real docs)") {
     import graft.llm.Text
-    val edge = texts.toDF("text").select(
-      Text.fingerprint(col("text")).as("nat"),
-      Text.fingerprintHof(col("text")).as("hof"))
-      .filter(col("nat") =!= col("hof")).count()
-    assert(edge == 0)
-    val docs = Tables.t(spark, "/root/testdata/sf0.001", "documents")
-    val bad = docs.select(
-      Text.fingerprint(col("text")).as("nat"),
-      Text.fingerprintHof(col("text")).as("hof"))
-      .filter(col("nat") =!= col("hof")).count()
-    assert(bad == 0)
+    wrapping {
+      val edge = texts.toDF("text").select(
+        Text.fingerprint(col("text")).as("nat"),
+        fingerprintHof(col("text")).as("hof"))
+        .filter(col("nat") =!= col("hof")).count()
+      assert(edge == 0)
+      val docs = Tables.t(spark, "/root/testdata/sf0.001", "documents")
+      val bad = docs.select(
+        Text.fingerprint(col("text")).as("nat"),
+        fingerprintHof(col("text")).as("hof"))
+        .filter(col("nat") =!= col("hof")).count()
+      assert(bad == 0)
+    }
   }
 
   test("md5_prefix matches the conv(substring(md5)) chain (1..15 nibbles)") {
@@ -166,11 +181,11 @@ class NativeExprSpec extends SparkSuite {
     val pairs = a.join(b, col("id_a") === col("id_b")).limit(200)
     val bad = pairs.select(
       graft.llm.Similarity.dot(col("va"), col("vb")).as("nd"),
-      graft.llm.Similarity.dotHof(col("va"), col("vb")).as("hd"),
+      dotHof(col("va"), col("vb")).as("hd"),
       graft.llm.Similarity.cosine(col("va"), col("vb")).as("nc"),
-      graft.llm.Similarity.cosineHof(col("va"), col("vb")).as("hc"),
+      cosineHof(col("va"), col("vb")).as("hc"),
       graft.llm.Similarity.lshBucket(col("va"), 8, 64).as("nb"),
-      graft.llm.Similarity.lshBucketHof(col("va"),
+      lshBucketHof(col("va"),
         graft.llm.Similarity.hyperplanes(8, 64)).as("hb"))
       .filter(col("nd") =!= col("hd") || col("nc") =!= col("hc") ||
         col("nb") =!= col("hb"))
@@ -194,20 +209,22 @@ class NativeExprSpec extends SparkSuite {
     val random = Gen.listOfN(300, textGen)
       .apply(Gen.Parameters.default, Seed(42L)).getOrElse(Nil)
     assert(random.size == 300)
-    val df = random.toDF("text")
-    val bad = df.select(
-      Dedup.shingleHashes(col("text"), 3).as("ns"),
-      Dedup.shingleHashesHof(col("text"), 3).as("hs"),
-      Dedup.minhashSignature(Dedup.shingleHashes(col("text"), 3), 16)
-        .as("nm"),
-      Dedup.minhashSignatureHof(Dedup.shingleHashesHof(col("text"), 3), 16)
-        .as("hm"),
-      Dedup.simhash(col("text")).as("nh"),
-      Dedup.simhashHof(col("text")).as("hh"))
-      .filter(col("ns") =!= col("hs") || col("nm") =!= col("hm") ||
-        col("nh") =!= col("hh"))
-      .count()
-    assert(bad == 0)
+    wrapping {
+      val df = random.toDF("text")
+      val bad = df.select(
+        Dedup.shingleHashes(col("text"), 3).as("ns"),
+        shingleHashesHof(col("text"), 3).as("hs"),
+        Dedup.minhashSignature(Dedup.shingleHashes(col("text"), 3), 16)
+          .as("nm"),
+        minhashSignatureHof(shingleHashesHof(col("text"), 3), 16)
+          .as("hm"),
+        Dedup.simhash(col("text")).as("nh"),
+        simhashHof(col("text")).as("hh"))
+        .filter(col("ns") =!= col("hs") || col("nm") =!= col("hm") ||
+          col("nh") =!= col("hh"))
+        .count()
+      assert(bad == 0)
+    }
   }
 
   test("cosine_sim is null on zero-norm vectors (native == HOF twin)") {
@@ -217,11 +234,11 @@ class NativeExprSpec extends SparkSuite {
       (Seq(0f, 0f, 0f), Seq(0f, 0f, 0f))).toDF("va", "vb")
     val rows = df.select(
       graft.llm.Similarity.cosine(col("va"), col("vb")).as("nc"),
-      graft.llm.Similarity.cosineHof(col("va"), col("vb")).as("hc"))
+      cosineHof(col("va"), col("vb")).as("hc"))
       .collect()
     rows.zipWithIndex.foreach { case (r, i) =>
-      // non-ANSI Divide yields NULL on a 0.0 divisor; the native path
-      // must match, never NaN/Infinity
+      // the twin's try_divide yields NULL on a 0.0 divisor; the native
+      // path must match, never NaN/Infinity
       assert(r.isNullAt(0), s"native cosine not null, case $i")
       assert(r.isNullAt(1), s"HOF cosine not null, case $i")
     }
@@ -263,7 +280,7 @@ class NativeExprSpec extends SparkSuite {
     for (range <- Seq(null, "month", "year")) {
       val rows = names.toDF("f").select(
         graft.functions.Dates.extractDates(col("f"), lit(range)).as("nat"),
-        graft.functions.Dates.extractDatesDecl(col("f"), lit(range))
+        extractDatesDecl(col("f"), lit(range))
           .as("dec")).collect()
       rows.zip(names).foreach { case (r, n) =>
         assert(r.get(0) == r.get(1), s"mismatch for '$n' range=$range")
@@ -280,13 +297,15 @@ class NativeExprSpec extends SparkSuite {
       (null, Seq("1.5 2.5 3.5 4.5"), true), // reverse ignored for boxes
       (null, Seq(" 7  8   9 10 "), false), // ragged whitespace
       (Seq(Seq("1 2 3")), null, false), // odd token dropped
+      (null, Seq("1 x 3 4"), false), // junk token -> null coordinate
       (null, null, false), // neither -> NULL geometry
       // empty/whitespace-only token strings: Python ''.split() == []
       // -> `if not str_coords: return None` (stac.py:199-200)
       (Seq(Seq("")), null, false),
       (Seq(Seq("  \t ")), null, true),
       (null, Seq(""), false),
-      (null, Seq("   "), false))
+      (null, Seq("   "), false),
+      (Seq(Seq.empty[String]), null, false)) // empty first polygon
       .toDF("polygons", "boxes", "reverse")
     val rows = cases.select(
       Geo.cmrGeometry(col("polygons"), col("boxes"), col("reverse")).as("nat"),
@@ -300,7 +319,7 @@ class NativeExprSpec extends SparkSuite {
     rows.zipWithIndex.foreach { case (r, i) =>
       assert(r.get(0) == r.get(1), s"geometry mismatch case $i")
       assert(r.get(2) == r.get(3), s"bbox mismatch case $i")
-      if (i >= 7) assert(r.isNullAt(0),
+      if (i >= 8) assert(r.isNullAt(0),
         s"empty-token case $i must yield NULL geometry")
     }
   }
@@ -387,38 +406,20 @@ class NativeExprSpec extends SparkSuite {
     assert(dup.count() === 2L)
   }
 
-  /** Runs `f` with SQL confs set, restoring the previous values. */
-  private def withConf[T](kv: (String, String)*)(f: => T): T = {
-    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f
-    finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
-  // With the legacy size-of-null (on by default with ANSI off) the set
-  // formula reads a null array as -1 / -1 = 1.0 and the filter formula
-  // reads null text as -1; the kernels return null, which is what the
-  // formulas give with it off.
-  private val noLegacySize = "spark.sql.legacy.sizeOfNull" -> "false"
-
   private val jaccardSchema = org.apache.spark.sql.types.StructType
     .fromDDL("a ARRAY<BIGINT>, b ARRAY<BIGINT>")
 
   private def jaccardFormula(a: org.apache.spark.sql.Column,
                              b: org.apache.spark.sql.Column) =
-    size(array_intersect(a, b)).cast("double") / size(array_union(a, b))
+    try_divide(size(array_intersect(a, b)).cast("double"),
+      size(array_union(a, b)))
 
   /** Rows where set_jaccard differs from the formula (null-safe). */
   private def jaccardMismatches(df: org.apache.spark.sql.DataFrame) =
-    withConf(noLegacySize) {
-      df.select(col("a"), col("b"),
-        call_function("set_jaccard", col("a"), col("b")).as("nat"),
-        jaccardFormula(col("a"), col("b")).as("hof"))
-        .filter(!(col("nat") <=> col("hof"))).collect().toSeq
-    }
+    df.select(col("a"), col("b"),
+      call_function("set_jaccard", col("a"), col("b")).as("nat"),
+      jaccardFormula(col("a"), col("b")).as("hof"))
+      .filter(!(col("nat") <=> col("hof"))).collect().toSeq
 
   test("set_jaccard matches the array_intersect / array_union formula") {
     import org.apache.spark.sql.Row
@@ -458,11 +459,6 @@ class NativeExprSpec extends SparkSuite {
       .select(Dedup.shingleHashes(col("text"), 3).as("a"),
         Dedup.shingleHashes(concat(lit("tail of "), col("text")), 3).as("b"))
     assert(jaccardMismatches(docs).isEmpty)
-    // no 0 / 0 to trip over with ANSI on
-    withConf("spark.sql.ansi.enabled" -> "true") {
-      assert(edgeDf.select(call_function("set_jaccard", col("a"), col("b")))
-        .collect().length == edge.size)
-    }
   }
 
   test("stopword_count matches the split/filter/array_contains formula") {
@@ -489,7 +485,7 @@ class NativeExprSpec extends SparkSuite {
     }
     val docs = Tables.t(spark, "/root/testdata/sf0.001", "documents")
       .select(col("text").as("t"))
-    for (icu <- Seq("true", "false")) withConf(noLegacySize,
+    for (icu <- Seq("true", "false")) withConf(
         "spark.sql.icu.caseMappings.enabled" -> icu) {
       for (df <- Seq((edge ++ random).toDF("t"), docs)) {
         val bad = df.select(col("t"),

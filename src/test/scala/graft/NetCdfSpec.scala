@@ -217,6 +217,37 @@ class NetCdfSpec extends SparkSuite {
     assert(decoded(34) == -9999f)                  // elided chunk cell
   }
 
+  test("hdf5 chunked: a DEFLATE chunk that ends early quarantines, " +
+    "never a zero-filled grid") {
+    val bytes = NetCdfFixtures.hdf5Chunked()
+    val m = NetCdf.parse(bytes).fold(e => fail(e), identity)
+    // the first zlib stream that inflates to a whole precip chunk
+    // (3x4 float32 = 48 bytes): swap in a complete stream of its
+    // first 4 bytes, zero-padded to the stored size
+    def inflated(at: Int): Option[(Array[Byte], Int)] = {
+      val inf = new java.util.zip.Inflater()
+      try {
+        inf.setInput(bytes, at, bytes.length - at)
+        val out = new Array[Byte](64)
+        val n = inf.inflate(out)
+        if (inf.finished()) Some((out.take(n), inf.getTotalIn)) else None
+      } catch { case _: java.util.zip.DataFormatException => None }
+      finally inf.end()
+    }
+    val (at, (raw, stored)) = bytes.indices.iterator
+      .filter(i => bytes(i) == 0x78) // zlib header
+      .flatMap(i => inflated(i).map(i -> _))
+      .find(_._2._1.length == 48)
+      .getOrElse(fail("no precip chunk stream found"))
+    val shortStream = graft.sources.RasterFixtures.deflate(raw.take(4))
+    assert(shortStream.length <= stored)
+    val mangled = bytes.clone()
+    java.util.Arrays.fill(mangled, at, at + stored, 0.toByte)
+    System.arraycopy(shortStream, 0, mangled, at, shortStream.length)
+    assert(NetCdf.readGridRaw(bytes, m, "precip").isDefined)
+    assert(NetCdf.readGridRaw(mangled, m, "precip").isEmpty)
+  }
+
   test("hdf5 chunked: unknown filter id quarantines, never a wrong grid") {
     // corrupt the precip pipeline's deflate id (1 -> 250): the read
     // must fail closed (None), not return garbage
@@ -787,11 +818,10 @@ class NetCdfSpec extends SparkSuite {
     "have no second dimension)") {
     def rows(): Seq[org.apache.spark.sql.Row] =
       Queries.s6NetCdf(spark, "").collect().toSeq
-    val off = rows()
-    assert(off.exists(r => r.isNullAt(r.fieldIndex("dim1"))))
-    val key = "spark.sql.ansi.enabled"
-    spark.conf.set(key, "true")
-    try assert(rows() === off)
-    finally spark.conf.set(key, "false")
+    val default = rows()
+    assert(default.exists(r => r.isNullAt(r.fieldIndex("dim1"))))
+    withConf("spark.sql.ansi.enabled" -> "false") {
+      assert(rows() === default)
+    }
   }
 }

@@ -87,6 +87,21 @@ class SemDedupSpec extends SparkSuite {
     assert(flat == expected, "flat path diverged from the scale path")
   }
 
+  test("a zero-norm vector is its own cluster beside cell-mates, never " +
+    "a division error") {
+    val c = corpus.unionByName(
+      Seq((30L, Seq(0.0, 0.0, 0.0, 0.0))).toDF("vec_id", "embedding"))
+    // one centroid: every vector, the zero one included, shares a cell
+    val out = Similarity.semanticDedup(c, threshold = 0.999,
+      nCentroids = 1, assignTop = 1)
+      .orderBy("vec_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
+    assert(out == Seq(
+      (1L, 1L, true), (2L, 1L, false), (3L, 1L, false),
+      (10L, 10L, true), (11L, 10L, false),
+      (20L, 20L, true), (30L, 30L, true)))
+  }
+
   test("a NaN-element vector never glues clusters (NaN cosine " +
     "compares largest under Spark's ordering — must be rejected)") {
     val c = Seq(

@@ -91,8 +91,8 @@ class SourceLintSpec extends AnyFunSuite {
   }
 
   test("sessions are built only through GraftSession") {
-    // UTC, ANSI off (64-bit hash wrap), nanosAsLong and the core rule
-    // are one contract; a session built elsewhere drifts from it.
+    // UTC, nanosAsLong and the core rule are one contract; a session
+    // built elsewhere drifts from it.
     // Entry points, tools and the test session add their extras to
     // GraftSession.builder's result.
     val roots = Seq(mainSrc, Paths.get("src/test/scala"))
@@ -107,6 +107,17 @@ class SourceLintSpec extends AnyFunSuite {
         val n = banned.findAllIn(code(p)).size
         if (n == 0) None else Some(s"$p: x$n")
       }
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("no file under src/main names spark.sql.ansi.enabled") {
+    // graft runs on Spark's default ANSI mode: an answer must not
+    // depend on a session flag, so no product code sets or reads it
+    val main = Paths.get("src/main")
+    assert(Files.isDirectory(main), s"run from the repo root: $main")
+    val hits = Files.walk(main).iterator.asScala
+      .filter(Files.isRegularFile(_)).toSeq.sorted
+      .filter(p => Files.readString(p).contains("spark.sql.ansi.enabled"))
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 

@@ -16,4 +16,16 @@ trait SparkSuite extends AnyFunSuite {
     GraftFunctions.register(s)
     s
   }
+
+  /** Runs `f` with SQL confs set, restoring the previous values: the
+    * session is shared, so a suite must never leave a key behind. */
+  def withConf[T](kv: (String, String)*)(f: => T): T = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

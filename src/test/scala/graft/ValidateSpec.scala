@@ -76,4 +76,13 @@ class ValidateSpec extends SparkSuite {
     assert(row.getDouble(1) == 1.0 && !row.getBoolean(2),
       s"metric ${row.getDouble(1)} passed ${row.getBoolean(2)}")
   }
+
+  test("an empty table gives NULL metrics and no verdict, not a " +
+    "division by zero") {
+    val rows = Validate.run(df.limit(0), Seq(completeness("id"),
+      uniqueness("id"), approxUniqueness("id"), between("v", 0.0, 1.0)))
+      .collect()
+    assert(rows.length == 4)
+    rows.foreach(r => assert(r.isNullAt(1) && r.isNullAt(2), r))
+  }
 }
