@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Cogify
 import graft.pipeline.{EventJson, Runner}
 import org.apache.spark.sql.SparkSession
 
@@ -24,7 +25,9 @@ object Main {
 
   /** Run every event in `configPath` (a file, or a directory of
     * `*.json` files) into `catalogDir`; quarantine rows append as
-    * JSON under `quarantineDir`. */
+    * JSON under `quarantineDir`. A cogify event writes its COGs under
+    * `{catalogDir}_cogs/{collection}/` and leaves its inputs as they
+    * are. */
   def run(spark: SparkSession, configPath: String, catalogDir: String,
           quarantineDir: String): Unit = {
     val p = Paths.get(configPath)
@@ -37,7 +40,9 @@ object Main {
       } else Seq(p)
     require(configs.nonEmpty, s"no event configs under $configPath")
     for (c <- configs; ev <- EventJson.parseAll(Files.readString(c))) {
-      Runner.runToCatalog(spark, ev, catalogDir, quarantineDir)
+      Runner.runToCatalog(spark, ev, catalogDir, quarantineDir,
+        Runner.RunContext(cogifyTransform = new Cogify.RasterCogTransform(
+          outDir = Some(catalogDir + "_cogs"))))
       println(s"[graft] ${ev.collection}: catalog=$catalogDir")
     }
   }

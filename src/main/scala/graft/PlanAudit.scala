@@ -8,8 +8,9 @@ import org.apache.spark.sql.SparkSession
   * restrict; default is the full registry, sorted.
   *
   * Plans are printed normalized ([[normalize]]), so two runs of one
-  * commit print the same text and two commits can be diffed directly
-  * (`tools/plan_diff.py` summarizes such a diff per query). */
+  * commit print the same text — for reading a plan. The per-query
+  * counts a plan change is judged by are `PlanSpec`'s, held to the
+  * checked-in `PLAN_SHAPE.json`. */
 object PlanAudit {
 
   /** Tokens that change from run to run although the plan does not:

@@ -21,7 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * t x n x 1e6. Characters are CODE POINTS (Spark `length`
   * semantics); counting is over the raw text, no normalization.
   *
-  * The declarative HOF twin lives in `graft.llm.Text.charEntropyHof`
+  * The declarative HOF twin lives in `SpecTwins.charEntropyHof`
   * (one sorted fold per row); TextEntropySpec pins bit-equality. */
 object EntropyCore extends Serializable {
 

@@ -13,8 +13,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * (interpreted, re-evaluated once per derived output column since
   * CodegenFallback columns get no common-subexpression elimination);
   * this is the SURVEY §7.3-nominated custom-Expression form. Declarative
-  * twins live in [[graft.functions.Geo]] (`*Hof`) for the equivalence
-  * spec. */
+  * twins live in test scope (`SpecTwins.cmrGeometryHof`,
+  * `geometryBboxHof`) for the equivalence spec. */
 object GeoCore extends Serializable {
 
   private val WS = java.util.regex.Pattern.compile("\\s+")

@@ -9,7 +9,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Single-pass core for the Gopher rule measurements (Rae et al. 2021
   * Appendix A). Semantics are pinned to the declarative HOF twin
-  * `graft.llm.Gopher.reportHof` (GopherSpec asserts bit-equality):
+  * `SpecTwins.reportHof` (test scope; GopherSpec asserts bit-equality):
   *
   *  - `trim` strips 0x20 spaces ONLY (Spark's `trim`, not Java's);
   *  - tokens = lowercased trimmed text split on java-regex `\s+`,
@@ -26,8 +26,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * (9.6 s for the sf0.1 corpus); the native pass is ~50 us/doc. */
 object GopherCore extends Serializable {
 
-  /** The canonical Gopher required-stopword list (Rae et al. 2021);
-    * `graft.llm.Gopher.RequiredStopwords` aliases this. */
+  /** The canonical Gopher required-stopword list (Rae et al. 2021). */
   val RequiredStopwords: Seq[String] =
     Seq("the", "be", "to", "of", "and", "that", "have", "with")
   private val Stopwords = RequiredStopwords.toArray

@@ -18,14 +18,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * `('0x' || substr(md5(span), 1, 8))::BIGINT`. Positions past 2^20
   * are not sampled (the packing cap).
   *
-  * Why native: the HOF twin (kept as `sampledSpanWindowsHof` for the
-  * equivalence spec) evaluates interpreted per window position —
-  * substring + md5-hex + conv + a slice/array_min per window start —
-  * measured ~8 s for ~1M positions at sf0.1; this loop hashes the
-  * UTF-8 byte windows directly and takes the per-window minima with a
-  * w-slot monotonic ring deque — O(chars) time, and the only
-  * position-proportional allocation is the packed-encoding array
-  * (the output buffer is density-sized, ~2/(w+1) of positions).
+  * Why native: the HOF twin (kept in test scope as
+  * `SpecTwins.sampledSpanWindowsHof` for the equivalence spec)
+  * evaluates interpreted per window position — substring + md5-hex +
+  * conv + a slice/array_min per window start — measured ~8 s for ~1M
+  * positions at sf0.1; this loop hashes the UTF-8 byte windows
+  * directly and takes the per-window minima with a w-slot monotonic
+  * ring deque — O(chars) time, and the only position-proportional
+  * allocation is the packed-encoding array (the output buffer is
+  * density-sized, ~2/(w+1) of positions).
   *
   * Character (code point) semantics match Spark `substring` / DuckDB
   * `substr`: an ASCII fast path indexes bytes directly; otherwise a

@@ -719,42 +719,6 @@ object Dedup {
           lit(spanChars))).as("span_key"))
   }
 
-  /** Declarative HOF twin of [[sampledSpanWindows]] (spec reference
-    * only — interpreted per-element evaluation makes it ~50x the
-    * native expression): the same winnow selection as nested
-    * bound-once HOFs over the position array. */
-  private[graft] def sampledSpanWindowsHof(docs: DataFrame, idCol: String,
-                                           textCol: String, spanChars: Int,
-                                           w: Int): DataFrame = {
-    val posCap = Winnow.PosCap
-    // every array is lambda-bound once (Text.bindOnce) — an inlined
-    // normalize/hash chain would re-evaluate per ELEMENT inside the
-    // HOFs: O(chars²) regexps per doc, the measured Dsir trap
-    val selArr = Text.bindOnce(Text.normalize(col(textCol))) { n =>
-      Text.bindOnce(transform(
-        sequence(lit(1),
-          least(length(n) - (spanChars - 1), lit(posCap.toInt))),
-        p => conv(substring(md5(call_function("substring", n, p,
-          lit(spanChars))), 1, 8), 16, 10).cast("long") * posCap +
-          (lit(posCap - 1) - (p - 1)))) { e =>
-        array_distinct(transform(
-          sequence(lit(0), greatest(size(e) - w, lit(0))),
-          s => array_min(slice(e, s + 1, lit(w)))))
-      }
-    }
-    docs
-      .select(col(idCol).as("doc_id"),
-        Text.normalize(col(textCol)).as("__norm"),
-        selArr.as("__sels"))
-      .filter(length(col("__norm")) >= spanChars)
-      .select(col("doc_id"), col("__norm"), explode(col("__sels")).as("__sel"))
-      .select(col("doc_id"), col("__norm"),
-        (lit(posCap) - pmod(col("__sel"), lit(posCap))).cast("int").as("pos"))
-      .select(col("doc_id"), col("pos"),
-        md5(call_function("substring", col("__norm"), col("pos"),
-          lit(spanChars))).as("span_key"))
-  }
-
   /** Exact repeated-span detection — the substring-level dedup of
     * "Deduplicating Training Data Makes Language Models Better" (Lee
     * et al., 2022), winnowing-sampled for distribution

@@ -43,11 +43,9 @@ import org.apache.spark.sql.functions._
   * fractions), so rule evaluation is integer cross-multiplication —
   * bit-identical on any engine and immune to float summation order.
   *
-  * Scale shape: pure per-row columnar work — token arrays are bound
-  * once ([[Text.bindOnce]], the r9 inline-HOF lesson), each n-gram
-  * family is one sort + one run-length fold over the row's gram
-  * array, and no shuffle or UDF appears anywhere. Filtering 100 TB
-  * with this is a single scan.
+  * Scale shape: pure per-row work — one native pass per document
+  * ([[graft.expr.GopherReportExpr]]), and no shuffle or UDF appears
+  * anywhere. Filtering 100 TB with this is a single scan.
   */
 object Gopher {
 
@@ -71,147 +69,17 @@ object Gopher {
       maxDupGramCharPct: Map[Int, Int] =
         Map(5 -> 15, 6 -> 14, 7 -> 13, 8 -> 12, 9 -> 11, 10 -> 10))
 
-  /** The 8 stopwords the paper requires at least 2 of (canonical
-    * list lives in [[graft.expr.GopherCore]] so the native expression
-    * and this declarative twin cannot drift). */
-  val RequiredStopwords: Seq[String] =
-    graft.expr.GopherCore.RequiredStopwords
-
-  private val BulletPrefixes = Seq("•", "-", "*")
-
-  /** Run-length fold over a SORTED string array: returns
-    * struct(top: long, dup: long) where top = max over distinct
-    * values of occurrences x len(value) and dup = the same product
-    * summed over values occurring 2+ times. One pass, O(n). */
-  private def runLengthCharStats(sorted: Column): Column = {
-    val init = struct(lit("").as("prev"), lit(0L).as("run"),
-      lit(0L).as("top"), lit(0L).as("dup"))
-    def close(acc: Column): (Column, Column) = {
-      val chars = acc.getField("run") * length(acc.getField("prev"))
-      (greatest(acc.getField("top"), chars),
-        acc.getField("dup") +
-          when(acc.getField("run") >= 2, chars).otherwise(0L))
-    }
-    aggregate(sorted, init,
-      (acc, g) => {
-        val (t, d) = close(acc)
-        when(g === acc.getField("prev"),
-          struct(acc.getField("prev").as("prev"),
-            (acc.getField("run") + 1L).as("run"),
-            acc.getField("top").as("top"), acc.getField("dup").as("dup")))
-          .otherwise(struct(g.as("prev"), lit(1L).as("run"),
-            t.as("top"), d.as("dup")))
-      },
-      acc => { val (t, d) = close(acc); struct(t.as("top"), d.as("dup")) })
-  }
-
-  /** Dup-count stats over a SORTED string array:
-    * struct(n: long, dup: long, chars: long, dup_chars: long) —
-    * total entries, entries beyond each distinct value's first, total
-    * characters, characters in the beyond-first entries. */
-  private def dupStats(sorted: Column): Column = {
-    val init = struct(lit("").as("prev"), lit(false).as("seen"),
-      lit(0L).as("n"), lit(0L).as("dup"),
-      lit(0L).as("chars"), lit(0L).as("dup_chars"))
-    aggregate(sorted, init,
-      (acc, v) => {
-        val isDup = acc.getField("seen") && v === acc.getField("prev")
-        struct(v.as("prev"), lit(true).as("seen"),
-          (acc.getField("n") + 1L).as("n"),
-          (acc.getField("dup") + when(isDup, 1L).otherwise(0L)).as("dup"),
-          (acc.getField("chars") + length(v)).as("chars"),
-          (acc.getField("dup_chars") +
-            when(isDup, length(v).cast("long")).otherwise(0L))
-            .as("dup_chars"))
-      },
-      acc => struct(acc.getField("n").as("n"), acc.getField("dup").as("dup"),
-        acc.getField("chars").as("chars"),
-        acc.getField("dup_chars").as("dup_chars")))
-  }
-
-  /** Non-overlapping occurrence count of a literal marker
-    * ([[Text.substringCount]], widened). */
-  private def markerCount(text: Column, marker: String): Column =
-    Text.substringCount(text, marker).cast("long")
-
   /** All rule measurements for one document as a struct of exact
     * integer counts (field list in the Scaladoc above). Feed to
     * [[keep]] for the boolean verdict.
     *
     * Resolves to the native [[graft.expr.GopherReportExpr]] (one
     * tokenize + one JVM pass per n-gram size; the nine interpreted
-    * HOF folds of [[reportHof]] measured ~2 ms/doc — 9.6 s warm for
-    * the sf0.1 corpus vs ~0.5 s native). Callers must have
+    * HOF folds of its twin `SpecTwins.reportHof` measured ~2 ms/doc —
+    * 9.6 s warm for the sf0.1 corpus vs ~0.5 s native). Callers must have
     * [[graft.GraftFunctions.register]]ed the session (filterCorpus
     * and the query registry do). */
   def report(text: Column): Column = call_function("gopher_report", text)
-
-  /** Declarative HOF twin of [[report]] — the executable
-    * specification GopherSpec pins the native expression against
-    * bit-for-bit. Reference only; use [[report]] in pipelines. */
-  private[graft] def reportHof(text: Column): Column = {
-    val lowered = lower(trim(text))
-    Text.bindOnce(filter(split(lowered, "\\s+"), w => w =!= "")) { ws =>
-      val wordCount = size(ws).cast("long")
-      val sumWordChars = aggregate(ws, lit(0L), (a, w) => a + length(w))
-      val alphaWords =
-        size(filter(ws, w => w.rlike("[a-z]"))).cast("long")
-      val stopwordHits = size(array_intersect(array_distinct(ws),
-        typedlit(RequiredStopwords))).cast("long")
-      val hashCount = markerCount(lowered, "#")
-      val ellipsisCount =
-        markerCount(lowered, "…") + markerCount(lowered, "...")
-      val totalChars = length(Text.normalize(text)).cast("long")
-
-      def gramStats(n: Int): Column = runLengthCharStats(sort_array(
-        when(size(ws) >= n,
-          transform(sequence(lit(1), size(ws) - (n - 1)),
-            i => array_join(slice(ws, i, lit(n)), " ")))
-          .otherwise(typedlit(Seq.empty[String]))))
-
-      def segStats(seps: Column): Column = dupStats(sort_array(
-        filter(transform(seps, s => trim(s)), s => s =!= "")))
-      val lines = segStats(split(lowered, "\n"))
-      val paras = segStats(split(lowered, "\n\n"))
-
-      val rawLines = filter(transform(split(lowered, "\n"),
-        s => trim(s)), s => s =!= "")
-      val bulletLines = size(filter(rawLines, l =>
-        BulletPrefixes.map(b => l.startsWith(b)).reduce(_ || _)))
-        .cast("long")
-      val ellipsisLines = size(filter(rawLines, l =>
-        l.endsWith("…") || l.endsWith("..."))).cast("long")
-
-      val gs = (2 to 10).map(n => n -> gramStats(n)).toMap
-      struct(
-        wordCount.as("word_count"),
-        sumWordChars.as("sum_word_chars"),
-        alphaWords.as("alpha_words"),
-        stopwordHits.as("stopword_hits"),
-        hashCount.as("hash_count"),
-        ellipsisCount.as("ellipsis_count"),
-        totalChars.as("total_chars"),
-        lines.getField("n").as("n_lines"),
-        lines.getField("dup").as("dup_lines"),
-        lines.getField("chars").as("line_chars"),
-        lines.getField("dup_chars").as("dup_line_chars"),
-        paras.getField("n").as("n_paras"),
-        paras.getField("dup").as("dup_paras"),
-        paras.getField("chars").as("para_chars"),
-        paras.getField("dup_chars").as("dup_para_chars"),
-        bulletLines.as("bullet_lines"),
-        ellipsisLines.as("ellipsis_lines"),
-        gs(2).getField("top").as("top2_chars"),
-        gs(3).getField("top").as("top3_chars"),
-        gs(4).getField("top").as("top4_chars"),
-        gs(5).getField("dup").as("dup5_chars"),
-        gs(6).getField("dup").as("dup6_chars"),
-        gs(7).getField("dup").as("dup7_chars"),
-        gs(8).getField("dup").as("dup8_chars"),
-        gs(9).getField("dup").as("dup9_chars"),
-        gs(10).getField("dup").as("dup10_chars"))
-    }
-  }
 
   /** Verdict over a [[report]] struct: true iff NO rule fires. All
     * comparisons are integer cross-multiplications of the exact

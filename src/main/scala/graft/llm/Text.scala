@@ -164,32 +164,6 @@ object Text {
   def charEntropy(text: Column): Column =
     call_function("char_entropy_stats", text)
 
-  /** Declarative HOF twin of [[charEntropy]] (spec reference only):
-    * code-point extraction via Java-regex `(?s).`, one sorted
-    * run-length fold. */
-  private[graft] def charEntropyHof(text: Column): Column = {
-    val sorted = sort_array(regexp_extract_all(text, lit("(?s)."), lit(0)))
-    def term(run: Column): Column =
-      run * round(log(run.cast("double")) * lit(1000000.0)).cast("long")
-    val init = struct(lit("").as("prev"), lit(0L).as("run"),
-      lit(0L).as("n"), lit(0L).as("sum"))
-    aggregate(sorted, init,
-      (acc, c) => when(c === acc.getField("prev"),
-        struct(acc.getField("prev").as("prev"),
-          (acc.getField("run") + 1L).as("run"),
-          (acc.getField("n") + 1L).as("n"),
-          acc.getField("sum").as("sum")))
-        .otherwise(struct(c.as("prev"), lit(1L).as("run"),
-          (acc.getField("n") + 1L).as("n"),
-          (acc.getField("sum") +
-            when(acc.getField("run") > 0, term(acc.getField("run")))
-              .otherwise(0L)).as("sum"))),
-      acc => struct(acc.getField("n").as("n_chars"),
-        (acc.getField("sum") +
-          when(acc.getField("run") > 0, term(acc.getField("run")))
-            .otherwise(0L)).as("sum_clnc_e6")))
-  }
-
   /** All http(s) URLs in the text (RE2-safe pattern — the oracle runs
     * the identical regex). The domain blocklist/stat primitive of
     * crawl curation. */

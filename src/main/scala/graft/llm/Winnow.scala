@@ -77,7 +77,7 @@ object Winnow {
     // shares the one doc-keyed exchange with the min-selection window.
     // concat_ws skips the null leads past the end, so a doc shorter
     // than k words yields its whole text as the single pos-0 gram —
-    // the same fallback as [[fingerprintsHof]].
+    // the same fallback as the twin `SpecTwins.fingerprintsHof`.
     // Words past PosCap + k - 1 are dropped up front: every surviving
     // gram START stays < PosCap (the packing precondition) while grams
     // starting just under the cap still see their full k words.
@@ -90,8 +90,9 @@ object Winnow {
     val gram = concat_ws(" ",
       col("word") +: (1 until k).map(j => lead(col("word"), j).over(ordered)): _*)
     // native md5-prefix: value-identical to conv(substring(md5)) with
-    // no 32-char hex string materialized per gram (the HOF twin below
-    // keeps the declarative chain as the equivalence reference)
+    // no 32-char hex string materialized per gram (the HOF twin
+    // `SpecTwins.fingerprintsHof` keeps the declarative chain as the
+    // equivalence reference)
     val hash32 = graft.expr.Md5Prefix(col("gram"), 8)
     val g = exploded
       .select(col(idCol), col("pos"), gram.as("gram"),
@@ -105,40 +106,6 @@ object Winnow {
       // window STARTS only; when mg < w the single pos-0 window truncates
       .filter(col("pos") <= greatest(col("mg") - w, lit(0)))
       .select(col(idCol), col("sel"))
-  }
-
-  /** Declarative HOF twin of [[fingerprints]] (spec reference only):
-    * grams as array_join(slice(words)) over a sequence transform. */
-  private[graft] def fingerprintsHof(docs: DataFrame, idCol: String,
-                                     textCol: String,
-                                     k: Int = 3, w: Int = 4): DataFrame = {
-    // same 2^20 gram-start cap as [[selected]]; tokens bound once
-    // (slice with an inline tokenizer re-runs it per gram start —
-    // Text.bindOnce scaladoc)
-    val grams = Text.bindOnce(Text.words(Text.normalize(col(textCol)))) {
-      ws =>
-        when(size(ws) >= k,
-            transform(sequence(lit(0),
-              least(size(ws) - k, lit(PosCap - 1))),
-              i => array_join(slice(ws, i + 1, lit(k)), " ")))
-          .otherwise(array(array_join(ws, " ")))
-    }
-    val hash32 = conv(substring(md5(col("gram")), 1, 8), 16, 10).cast("long")
-    val enc = docs
-      .select(col(idCol), posexplode(grams).as(Seq("pos", "gram")))
-      .select(col(idCol), col("pos"),
-        (hash32 * PosCap + (lit(PosCap - 1) - col("pos"))).as("enc"))
-    val byDoc = Window.partitionBy(col(idCol))
-    val frame = byDoc.orderBy(col("pos"))
-      .rowsBetween(Window.currentRow, w - 1)
-    enc
-      .withColumn("m", count(lit(1)).over(byDoc))
-      .withColumn("sel", min(col("enc")).over(frame))
-      .filter(col("pos") <= greatest(col("m") - w, lit(0)))
-      .select(col(idCol),
-        (lit(PosCap - 1) - pmod(col("sel"), lit(PosCap))).as("fp_pos"),
-        floor(col("sel") / PosCap).cast("long").as("fp_hash"))
-      .distinct()
   }
 
   /** Persistable winnow fingerprint catalog: the corpus's distinct

@@ -23,8 +23,8 @@ import org.apache.spark.sql.types.{BooleanType, StringType, StructField, StructT
   *    `{output_dir}/{collection}/{filename}` (`handler.py:216-218`)
   *
   * What is pluggable: the actual raster IO ([[FileTransform]]).
-  * GDAL/rasterio are CPython-native; production wires a JNI/GDAL or
-  * process-based transform, tests use [[passthroughTransform]]. The
+  * [[RasterCogTransform]] converts in the JVM and is what `Runner`
+  * runs unless its context names another transform. The
   * conversion is per-file local work inside `mapPartitions`, with no
   * shuffle (SURVEY §2.1/S6). Within one file, [[RasterCogTransform]]'s
   * writer ([[graft.sources.GeoTiffWriter]]) also compresses the tiles
@@ -289,10 +289,18 @@ object Cogify {
   /** [[FileTransform]] doing the real conversion on both reference
     * dispatch branches (`handler.py:233-243`): `.tif` →
     * [[tiffToCog]] re-tile, anything else → [[classicNetcdfToCog]].
-    * Output naming matches the reference: `{stem}.tif` next to the
-    * input (`handler.py:174` — for a `.tif` input that overwrites the
-    * working copy in place, exactly like the reference's /tmp file). */
-  class RasterCogTransform(tileSize: Int = 256) extends FileTransform {
+    * Output naming matches the reference: `{stem}.tif`
+    * (`handler.py:174`), written to a temp file and moved into place,
+    * so a failed write never leaves a truncated COG behind.
+    *
+    * With `outDir` the COG goes to `{outDir}/{collection}/{stem}.tif`
+    * and the input is only read. Without it the COG goes next to the
+    * input, which for a `.tif` input replaces the input itself: use
+    * that only on a working copy the caller owns, as the reference
+    * converts its /tmp download. */
+  class RasterCogTransform(tileSize: Int = 256,
+                           outDir: Option[String] = None)
+    extends FileTransform {
     def toCog(url: String, collection: String,
               config: CollectionConfig): String = {
       val in = java.nio.file.Paths.get(url.stripPrefix("file://"))
@@ -301,8 +309,19 @@ object Cogify {
                  else classicNetcdfToCog(bytes, config, tileSize))
         .fold(e => throw new IllegalArgumentException(e), identity)
       val stem = in.getFileName.toString.replaceAll("\\.[^.]+$", "")
-      val out = in.resolveSibling(stem + ".tif")
-      java.nio.file.Files.write(out, cog)
+      val dir = outDir.map(d => java.nio.file.Files.createDirectories(
+        java.nio.file.Paths.get(d.stripPrefix("file://"), collection)))
+        .getOrElse(in.getParent)
+      val out = dir.resolve(stem + ".tif")
+      // a plain write (not createTempFile) keeps the umask's
+      // permissions: the COG is as readable as any other output
+      val tmp = dir.resolve(s".$stem.${java.util.UUID.randomUUID}.tmp")
+      try {
+        java.nio.file.Files.write(tmp, cog)
+        java.nio.file.Files.move(tmp, out,
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      } finally java.nio.file.Files.deleteIfExists(tmp)
       out.toString
     }
   }
@@ -314,13 +333,6 @@ object Cogify {
     /** @return local path of the produced COG */
     def toCog(url: String, collection: String,
               config: CollectionConfig): String
-  }
-
-  /** Test-double transform: emits `{filename}.tif` without raster IO
-    * (the reference's naming, `handler.py:174`). */
-  object passthroughTransform extends FileTransform {
-    def toCog(url: String, collection: String,
-              config: CollectionConfig): String = url + ".tif"
   }
 
   private def outSchema(in: StructType) = StructType(in.fields ++ Seq(

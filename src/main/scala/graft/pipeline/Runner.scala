@@ -28,7 +28,10 @@ object Runner {
       userSharedBucket: Option[String] = None,
       existingTargetKeys: Option[DataFrame] = None,
       executeTransfer: Boolean = false,
-      cogifyTransform: Cogify.FileTransform = Cogify.passthroughTransform,
+      /** Default: convert into the JVM's temp directory, like the
+        * reference's /tmp working files, never over the input. */
+      cogifyTransform: Cogify.FileTransform = new Cogify.RasterCogTransform(
+        outDir = Some(System.getProperty("java.io.tmpdir") + "/graft-cog")),
       cogifyConfigs: Map[String, Cogify.CollectionConfig] = Map.empty)
 
   case class RunResult(items: DataFrame, quarantined: DataFrame)

@@ -57,7 +57,7 @@ class GeoSpec extends SparkSuite {
     }
     val df = cases.map(c => Tuple1(c.map(_.toArray).toArray))
       .toDF("coords")
-    val rows = df.select(Geo.bbox(col("coords"))).collect()
+    val rows = df.select(SpecTwins.bbox(col("coords"))).collect()
     cases.zip(rows).foreach { case (coords, row) =>
       val r = row.getAs[scala.collection.Seq[Double]](0)
       val xs = coords.map(_(0)); val ys = coords.map(_(1))
@@ -71,7 +71,7 @@ class GeoSpec extends SparkSuite {
     val cases = Seq.fill(30)(Seq.fill(1 + rnd.nextInt(15))(
       rnd.nextInt(199) - 99).mkString(" "))
     val df = cases.toDF("s")
-    val rows = df.select(size(Geo.pairwise(
+    val rows = df.select(size(SpecTwins.pairwise(
       split(trim(col("s")), "\\s+")))).collect()
     cases.zip(rows).foreach { case (s, row) =>
       assert(row.getInt(0) == s.split("\\s+").length / 2)

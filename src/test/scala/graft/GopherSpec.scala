@@ -179,7 +179,7 @@ class GopherSpec extends SparkSuite {
     val df = docs.toDF("text")
     val native = df.select(Gopher.report(col("text")).as("r"))
       .select("r.*").collect()
-    val hof = df.select(Gopher.reportHof(col("text")).as("r"))
+    val hof = df.select(SpecTwins.reportHof(col("text")).as("r"))
       .select("r.*").collect()
     assert(native.toSeq === hof.toSeq)
   }
@@ -195,7 +195,7 @@ class GopherSpec extends SparkSuite {
     }.toDF("text")
     val native = docs.select(Gopher.report(col("text")).as("r"))
       .select("r.*").collect().toSeq
-    val hof = docs.select(Gopher.reportHof(col("text")).as("r"))
+    val hof = docs.select(SpecTwins.reportHof(col("text")).as("r"))
       .select("r.*").collect().toSeq
     assert(native === hof)
   }

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Deployment smoke: the spark-submit entry point ([[Main.run]], the
   * session-independent body `graft.Main`'s main wraps) driven against
@@ -74,5 +75,41 @@ class MainSmokeSpec extends SparkSuite {
     val qIds = q.select("id").collect().map(_.getString(0)).toSet
     assert(qIds == Set("GEDI_L4B_nodate_v2"),
       s"quarantine contents: $qIds")
+  }
+
+  test("Main.run converts a cogify event's rasters: the published href " +
+    "is a 256x256-tiled COG on disk and the input is left as it was") {
+    val base = Files.createTempDirectory("mainsmoke_cog")
+    val tif = base.resolve("strip_2020.tif")
+    val px = 0 until 48
+    val input = graft.sources.RasterFixtures.stripTiff(8, 6, px)
+    Files.write(tif, input)
+    val inv = base.resolve("inv.csv")
+    Files.writeString(inv, s"s3_path\n$tif\n")
+    Files.writeString(base.resolve("cog.json"),
+      s"""{"collection": "SMOKE_COG", "discovery": "inventory",
+         | "inventory_url": "$inv", "upload": false,
+         | "cogify": true}""".stripMargin)
+    val catalogDir = base.resolve("catalog").toString
+    Main.run(spark, base.resolve("cog.json").toString, catalogDir,
+      base.resolve("quarantine").toString)
+
+    assert(Files.readAllBytes(tif).sameElements(input),
+      "the source raster was rewritten")
+    val cogDir = base.resolve("catalog_cogs/SMOKE_COG")
+    val hrefs = spark.read.parquet(catalogDir)
+      .select(explode(map_values(col("assets"))).as("a"))
+      .select("a.href").collect().map(_.getString(0)).toSeq
+    assert(hrefs == Seq(cogDir.resolve("strip_2020.tif").toString),
+      s"published hrefs: $hrefs")
+    val (m, samples) = graft.sources.GeoTiff.readSamples(
+      Files.readAllBytes(Paths.get(hrefs.head))).fold(e => fail(e), identity)
+    assert(m.tileWidth.contains(256L) && m.tileHeight.contains(256L), m)
+    assert(samples.toSeq == px.map(_.toFloat))
+    // the temp file the COG was written to was renamed, not left behind
+    val left = Files.list(cogDir)
+    try assert(left.iterator().asScala.map(_.getFileName.toString).toSeq ==
+      Seq("strip_2020.tif"))
+    finally left.close()
   }
 }

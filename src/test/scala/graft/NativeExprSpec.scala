@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 /** The native Catalyst expressions (shingle_hashes / minhash_sig /
   * simhash64 / cmr_geometry / geometry_bbox) must be bit-identical to
-  * their declarative HOF twins ([[SpecTwins]], Geo's `*Hof`) — the HOF
+  * their declarative HOF twins ([[SpecTwins]]) — the HOF
   * forms are the executable spec of the semantics; the natives exist
   * purely for speed. */
 class NativeExprSpec extends SparkSuite {
@@ -309,12 +309,12 @@ class NativeExprSpec extends SparkSuite {
       .toDF("polygons", "boxes", "reverse")
     val rows = cases.select(
       Geo.cmrGeometry(col("polygons"), col("boxes"), col("reverse")).as("nat"),
-      Geo.cmrGeometryHof(col("polygons"), col("boxes"), col("reverse")).as("hof"),
+      SpecTwins.cmrGeometryHof(col("polygons"), col("boxes"), col("reverse")).as("hof"),
       Geo.geometryBbox(
         Geo.cmrGeometry(col("polygons"), col("boxes"), col("reverse")))
         .as("nbb"),
-      Geo.geometryBboxHof(
-        Geo.cmrGeometryHof(col("polygons"), col("boxes"), col("reverse")))
+      SpecTwins.geometryBboxHof(
+        SpecTwins.cmrGeometryHof(col("polygons"), col("boxes"), col("reverse")))
         .as("hbb")).collect()
     rows.zipWithIndex.foreach { case (r, i) =>
       assert(r.get(0) == r.get(1), s"geometry mismatch case $i")

@@ -1,13 +1,34 @@
 package graft
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.LambdaFunction
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.functions._
+
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Physical-plan regression guards: the scale properties the engine
   * promises (broadcast dims, no cartesian products, pruned scans,
   * pushed filters) asserted on the actual executed plans. */
 class PlanSpec extends SparkSuite {
+  import PlanSpec._
 
   private val dir = "/root/testdata/sf0.001"
+
+  /** One line per registry query, sorted: the counts of
+    * [[PlanSpec.shape]] and, for a vetted non-equi join, a `why`. */
+  private val shapeFile = Paths.get("PLAN_SHAPE.json")
+  private val seenFile = Paths.get("target/plan_shape.json")
+  private val mapper = new ObjectMapper()
+  private val counts: Seq[(String, Shape => Int)] = Seq(
+    "cartesian" -> (_.cartesian), "exchanges" -> (_.exchanges),
+    "kernels" -> (_.kernels), "lambdas" -> (_.lambdas),
+    "nested_loop" -> (_.nestedLoop))
 
   private def planOf(name: String): String =
     SparkEntry.queries(name)(spark, dir)
@@ -17,16 +38,6 @@ class PlanSpec extends SparkSuite {
     val p = planOf("q_j2_broadcast_dims")
     assert(p.contains("BroadcastHashJoin"))
     assert(!p.contains("CartesianProduct"))
-  }
-
-  test("no cartesian product anywhere in the dedup/LSH plans") {
-    for (q <- Seq("q_minhash_near_dups", "q_simhash_near_dups",
-        "q_embed_near_dups", "q_ngram_jaccard")) {
-      val p = planOf(q)
-      assert(!p.contains("CartesianProduct"), s"$q has a cartesian join")
-      assert(!p.contains("BroadcastNestedLoopJoin"),
-        s"$q has a nested-loop join")
-    }
   }
 
   test("PlanAudit prints the same text for two plannings of one query") {
@@ -95,50 +106,52 @@ class PlanSpec extends SparkSuite {
       "curate budget window lost its per-partition budget pre-pass")
   }
 
-  test("full sweep: no query grows an unplanned cartesian/nested-loop join") {
-    // Every entry here is a vetted non-equi join of a deliberately
-    // tiny side — a 1-row corpus-stats/merged-sketch aggregate crossed
-    // back over the data (bm25/tfidf/unigram idf totals, hll/kll/cms
-    // merged-sketch scalars, set-ops counts), the intentional
-    // brute-force ANN baseline, or the |groups|² sketch-pair compare.
-    // A nested-loop against a SINGLE-ROW build is O(n) work, not
-    // quadratic; anything NOT on this list joining non-equi is a
-    // scale regression and must fail here.
-    val vetted = Set("q_ann_top1", "q_bm25_topk", "q_cms_counts",
-      "q_hll_users", "q_kll_quantiles", "q_set_jaccard",
-      "q_tfidf_terms", "q_u_set_ops", "q_unigram_nll",
-      // 1-row corpus-token-total crossed over the bigram table for
-      // the PMI denominator — the same single-row-build shape
-      "q_pmi_bigrams",
-      // two 1-row aggregates (sketch pair × exact scalar) crossed
-      "q_cms_join_size",
-      // 1-row model constants (priors/OOV weight) crossed over the
-      // scored corpus — the same single-row-build shape as the stats
-      // scalars above
-      "q_quality_classifier", "q_curate_pipeline",
-      // 1-row (tot_raw, tot_target) ngram totals crossed onto the
-      // K-row bucket-weight domain — single-row build over a
-      // CONSTANT-sized (nBuckets) side, not the corpus
-      "q_dsir_scores",
-      // composes q_dsir_scores' scoring verbatim before the Gumbel
-      // top-k — the SAME vetted 1-row ngram-totals cross, no new join
-      "q_dsir_resample",
-      // composes q_unigram_nll's surprisal scoring (vetted 1-row
-      // corpus-token-total cross) under the histogram order
-      // statistic; both passes reuse that single-row-build shape
-      "q_ccnet_buckets",
-      // 1-row model-token-total broadcast crossed over the scored
-      // positions — the same single-row-build shape as q_unigram_nll
-      "q_bigram_backoff")
-    val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
-      val p = planOf(name)
-      if ((p.contains("CartesianProduct") ||
-          p.contains("BroadcastNestedLoopJoin")) && !vetted(name))
-        Some(name)
-      else None
+  test("full sweep: every query's plan shape equals PLAN_SHAPE.json") {
+    // Exact in both directions, so the file always describes its
+    // commit: a change that adds or removes an exchange, kernel or
+    // lambda copies target/plan_shape.json over the file in the same
+    // commit. A cartesian or nested-loop join needs a `why`: a
+    // nested-loop against a SINGLE-ROW build (a 1-row stats or
+    // merged-sketch aggregate crossed back over the data) is O(n)
+    // work, not quadratic; any other non-equi join is a scale
+    // regression. A why on an entry without such a join is stale.
+    val file = mapper.readTree(shapeFile.toFile)
+    val listed = file.fieldNames.asScala.toSet
+    val why = (q: String) => Option(file.get(q)).flatMap(e =>
+      Option(e.get("why"))).map(_.asText)
+    val seen = SparkEntry.queries.keys.toSeq.sorted.map { q =>
+      q -> shape(SparkEntry.queries(q)(spark, dir))
     }
-    assert(offenders.isEmpty,
-      s"unvetted cartesian/nested-loop joins in: $offenders")
+    val text = seen.map { case (q, s) =>
+      val fields = counts.map { case (k, f) => s""""$k": ${f(s)}""" } ++
+        why(q).map(w => s""""why": ${mapper.writeValueAsString(w)}""")
+      s"""  "$q": {${fields.mkString(", ")}}"""
+    }.mkString("{\n", ",\n", "\n}\n")
+    Files.createDirectories(seenFile.getParent)
+    Files.writeString(seenFile, text)
+
+    val registry = seen.map(_._1).toSet
+    val problems =
+      (registry -- listed).toSeq.sorted.map(q => s"$q: not in the file") ++
+      (listed -- registry).toSeq.sorted.map(q => s"$q: not a registry query") ++
+      seen.filter { case (q, _) => listed(q) }.flatMap { case (q, s) =>
+        counts.flatMap { case (k, f) =>
+          val want = file.get(q).path(k).asInt(-1)
+          if (want == f(s)) None
+          else Some(s"$q: $k $want in the file, ${f(s)} planned")
+        }
+      } ++
+      seen.collect {
+        case (q, s) if s.cartesian + s.nestedLoop > 0 && why(q).isEmpty =>
+          s"$q: cartesian/nested-loop join without a why"
+        case (q, s) if s.cartesian + s.nestedLoop == 0 && why(q).nonEmpty =>
+          s"$q: a why but no cartesian/nested-loop join"
+      }
+    assert(problems.isEmpty, problems.mkString(
+      s"plan shapes differ from $shapeFile (planned: $seenFile):\n",
+      "\n", ""))
+    assert(Files.readString(shapeFile) == text,
+      s"$shapeFile is not in the form the sweep writes; copy $seenFile")
   }
 
   test("J1 single-agg shape: the fused native expression, no join, " +
@@ -153,5 +166,47 @@ class PlanSpec extends SparkSuite {
         "BroadcastHashJoin", "CartesianProduct",
         "BroadcastNestedLoopJoin"))
       assert(!p.contains(j), s"q_j1 grew a $j back")
+  }
+}
+
+object PlanSpec {
+
+  /** Operator counts of one physical plan: exchanges (shuffle,
+    * broadcast, reused), expression nodes of a `graft.expr` class
+    * (native kernels), HOF lambdas, cartesian products and broadcast
+    * nested-loop joins. */
+  case class Shape(exchanges: Int, kernels: Int, lambdas: Int,
+                   cartesian: Int, nestedLoop: Int)
+
+  /** The [[Shape]] of `df`'s physical plan, through the AQE wrapper's
+    * initial plan and into subqueries. Every evaluated occurrence
+    * counts: a kernel copied into a Filter below its Project counts
+    * twice. A file scan's data filters are not evaluated there (they
+    * only feed source pushdown; the Filter above runs them), so they
+    * do not count. */
+  def shape(df: DataFrame): Shape = {
+    var exchanges, kernels, lambdas, cartesian, nestedLoop = 0
+    def walk(p: SparkPlan): Unit = {
+      p match {
+        case a: AdaptiveSparkPlanExec => walk(a.initialPlan)
+        case _: Exchange | _: ReusedExchangeExec => exchanges += 1
+        case _: CartesianProductExec => cartesian += 1
+        case _: BroadcastNestedLoopJoinExec => nestedLoop += 1
+        case _ =>
+      }
+      val evaluated = p match {
+        case s: FileSourceScanExec => s.partitionFilters
+        case _ => p.expressions
+      }
+      evaluated.foreach(_.foreach {
+        case _: LambdaFunction => lambdas += 1
+        case e if e.getClass.getPackageName == "graft.expr" => kernels += 1
+        case _ =>
+      })
+      p.subqueries.foreach(walk)
+      p.children.foreach(walk)
+    }
+    walk(df.queryExecution.executedPlan)
+    Shape(exchanges, kernels, lambdas, cartesian, nestedLoop)
   }
 }

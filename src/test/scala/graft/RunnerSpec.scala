@@ -40,6 +40,7 @@ class RunnerSpec extends SparkSuite {
       ev.assetRolesList.contains(Seq("data")))
 
     val ctx = Runner.RunContext(
+      cogifyTransform = PassthroughTransform,
       cogifyConfigs = Map(ev.collection ->
         Cogify.CollectionConfig(outputBucket = "nasa-store",
           outputDir = "file-staging")))
@@ -87,7 +88,7 @@ class RunnerSpec extends SparkSuite {
     val cfg = Map("OMNO2d" -> Cogify.CollectionConfig(
       outputBucket = "store",
       affine = Some(Cogify.parseAffine("(xmin, xres, 0, ymax, 0, -yres)"))))
-    val out = Cogify.run(objs, Cogify.passthroughTransform, cfg)
+    val out = Cogify.run(objs, PassthroughTransform, cfg)
     val rows = out.collect().map(r => (
       r.getString(r.fieldIndex("remote_fileurl")),
       Option(r.getString(r.fieldIndex("cog_error"))))).toMap
@@ -211,6 +212,13 @@ class RunnerSpec extends SparkSuite {
     val plan = joined.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), plan.take(500))
   }
+}
+
+/** Test-double transform: emits `{filename}.tif` without raster IO
+  * (the reference's naming, `handler.py:174`). */
+object PassthroughTransform extends Cogify.FileTransform {
+  def toCog(url: String, collection: String,
+            config: Cogify.CollectionConfig): String = url + ".tif"
 }
 
 /** Passthrough conversion that counts its calls JVM-wide. */

@@ -5,8 +5,8 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Source rules for `src/main/scala` (the session rule also covers
-  * `src/test/scala`) that a compiler cannot check, and README facts
-  * that must follow the code. */
+  * `src/test/scala`) that a compiler cannot check, and README and
+  * verify-skill facts that must follow the code. */
 class SourceLintSpec extends AnyFunSuite {
 
   private val mainSrc = Paths.get("src/main/scala")
@@ -141,5 +141,15 @@ class SourceLintSpec extends AnyFunSuite {
       "registered but not in the README table")
     assert(documented.toSet -- registered == Set.empty,
       "in the README table but not registered")
+  }
+
+  test("every tools/*.py script is named in the verify skill") {
+    // a script that no documented command runs goes stale unseen:
+    // document it in the skill or delete it
+    val skill = Files.readString(Paths.get(".claude/skills/verify/SKILL.md"))
+    val unnamed = Files.list(Paths.get("tools")).iterator.asScala
+      .map(_.getFileName.toString).filter(_.endsWith(".py")).toSeq.sorted
+      .filterNot(n => skill.contains(s"tools/$n"))
+    assert(unnamed.isEmpty, s"not named in the verify skill: $unnamed")
   }
 }

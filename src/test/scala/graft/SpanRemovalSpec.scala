@@ -172,7 +172,7 @@ class SpanRemovalSpec extends SparkSuite {
     val native = collect(
       Dedup.sampledSpanWindows(docs, "doc_id", "text", Span, W))
     val hof = collect(
-      Dedup.sampledSpanWindowsHof(docs, "doc_id", "text", Span, W))
+      SpecTwins.sampledSpanWindowsHof(docs, "doc_id", "text", Span, W))
     assert(native === hof)
     assert(native.exists(_._1 == 2) && native.exists(_._1 == 5))
   }

@@ -33,7 +33,7 @@ class TextEntropySpec extends SparkSuite {
       .toDF("text")
     val native = docs.select(Text.charEntropy(col("text")).as("e"))
       .select("e.*").collect().toSeq
-    val hof = docs.select(Text.charEntropyHof(col("text")).as("e"))
+    val hof = docs.select(SpecTwins.charEntropyHof(col("text")).as("e"))
       .select("e.*").collect().toSeq
     assert(native === hof)
   }
@@ -51,7 +51,7 @@ class TextEntropySpec extends SparkSuite {
     }.toDF("text")
     val native = docs.select(Text.charEntropy(col("text")).as("e"))
       .select("e.*").collect().toSeq
-    val hof = docs.select(Text.charEntropyHof(col("text")).as("e"))
+    val hof = docs.select(SpecTwins.charEntropyHof(col("text")).as("e"))
       .select("e.*").collect().toSeq
     assert(native === hof)
   }

@@ -76,7 +76,7 @@ class WinnowSpec extends SparkSuite {
     } :+ (41L, "  padded   whitespace\t doc  ")).toDF("doc_id", "text")
     val a = Winnow.fingerprints(docs, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val b = Winnow.fingerprintsHof(docs, "doc_id", "text")
+    val b = SpecTwins.fingerprintsHof(docs, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(a == b)
   }

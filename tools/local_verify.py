@@ -37,10 +37,8 @@ def main(sf_dir: str, out_dir: str, json_out: str = None) -> int:
         src = f"{p}/*.parquet" if os.path.isdir(p) else p
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    # GRAFT_ONLY=<comma-list>: restrict to named queries (the scale
-    # sweep runner executes one subprocess per query so a stuck oracle
-    # can be killed hard — DuckDB's interrupt is advisory and some
-    # plan phases never poll it)
+    # GRAFT_ONLY=<comma-list>: restrict to named queries (the sf1 gate
+    # checks only the queries a change touches)
     only = {q for q in os.environ.get("GRAFT_ONLY", "").split(",") if q}
     n_pass = n_fail = 0
     report = {}
