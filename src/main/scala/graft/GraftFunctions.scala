@@ -1,16 +1,22 @@
 package graft
 
 import graft.expr.{CmrGeometryExpr, CmsEstimateExpr, CmsJoinSizeExpr, CmsMergeAgg, CmsSketchAgg, CosineSimExpr, DeflateRatioExpr, ExtractDatesExpr, CharEntropyExpr, FingerprintExpr, GeometryBboxExpr, GopherKeepExpr, GopherReportExpr, HllEstimateExpr, HllSketchAgg, HllUnionAgg, KllMergeAgg, KllQuantileExpr, KllSketchAgg, LshBucketExpr, Md5PrefixExpr, MinhashSigExpr, MinhashUnionAgg, MultiAssetPartsExpr, PqEncodeExpr, SetJaccardExpr, ShingleHashesExpr, SigAgreeExpr, SimhashExpr, SpanAnchorsExpr, VecDotExpr, VecSumAgg}
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.graftbridge.ExprColumn
 import org.apache.spark.sql.types.StringType
 
-/** SQL-surface registration for the engine's custom expressions.
+/** The engine's custom expressions by name: one table of builders that
+  * both Scala and SQL text reach the kernels through.
   *
-  * Two entry points:
-  *  - cluster config: `spark.sql.extensions=graft.GraftExtensions`
-  *  - runtime: `GraftFunctions.register(spark)`
+  *  - Scala operators and helpers build their Columns with [[call]],
+  *    so they work on any session, registered or not.
+  *  - SQL text (`spark.sql`, `expr`) resolves the same names once the
+  *    session is registered, by cluster config
+  *    (`spark.sql.extensions=graft.GraftExtensions`) or at runtime
+  *    (`GraftFunctions.register(spark)`); either also installs the
+  *    opt-in [[graft.plans.RangeJoinRule]].
   *
   * Registered functions:
   *  - `extract_dates(filename[, range])` → struct<start_datetime,
@@ -215,13 +221,24 @@ object GraftFunctions {
         DeflateRatioExpr(exprs.head)
       }))
 
+  private lazy val builders: Map[String, Seq[Expression] => Expression] =
+    registrations.map { case (id, _, b) => id.funcName -> b }.toMap
+
+  /** Kernel `name` applied to `args`, built by the builder SQL text
+    * resolves the name through, so no session registration is needed.
+    * An unknown name fails here, not at analysis. */
+  private[graft] def call(name: String, args: Column*): Column = {
+    val builder = builders.getOrElse(name, throw new IllegalArgumentException(
+      s"$name is not a graft function"))
+    ExprColumn.column(builder(args.map(ExprColumn.expression)))
+  }
+
   /** Runtime registration on an existing session: SQL functions plus
     * the graft optimizer rules (idempotent; the rules are opt-in via
     * their own confs, so presence alone changes no plans). */
   def register(spark: SparkSession): Unit = {
     registrations.foreach { case (id, info, builder) =>
-      // guard: re-registering an existing function is a WARN per call
-      // site, and Tables.t registers on every table load
+      // guard: re-registering an existing function logs a WARN
       if (!spark.sessionState.functionRegistry.functionExists(id))
         spark.sessionState.functionRegistry
           .registerFunction(id, info, builder)

@@ -4,6 +4,7 @@ import graft.llm.{Classifier, Curate, Dedup, Dsir, IvfPq, Pq, GroupSimilarity, L
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Materializer.MaterializeOps
+import graft.GraftFunctions.call
 
 /** LLM-training-data pipeline queries: text analysis, dedup families,
   * similarity search over the `documents` / `embeddings` tables.
@@ -70,7 +71,6 @@ object LlmQueries {
     * exact integer (n_cp, sum c*round(ln c * 1e6)) per doc — the
     * gibberish/binary detection signal. */
   def charEntropy(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.register(s)
     t(s, dir, "documents")
       .select(col("doc_id"), Text.charEntropy(col("text")).as("e"))
       .select(col("doc_id"), col("e.n_chars").as("n_cp"),
@@ -528,7 +528,6 @@ object LlmQueries {
     * rules hard; the line/bullet rules are degenerate here (single
     * line, no bullets) and are pinned by GopherSpec instead. */
   def gopherFlags(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.register(s)
     val r = graft.llm.Gopher.report(col("text"))
     t(s, dir, "documents")
       .select(col("doc_id"), r.as("r"),
@@ -685,13 +684,14 @@ object LlmQueries {
     // per-group branch and the union branch — without it the grouped
     // sketch aggregation over events runs twice
     val per = e.groupBy("event_type").agg(
-      expr("hll_sketch(user_id)").as("sk"),
+      call("hll_sketch", col("user_id")).as("sk"),
       countDistinct(col("user_id")).cast("bigint").as("n_exact"))
       .materialized("q_hll_users_per_type") // lazy: first branch populates (r10 §6)
     val perOut = per.select(col("event_type"), col("n_exact"),
-      (abs(expr("hll_estimate(sk)").cast("double") - col("n_exact")) /
+      (abs(call("hll_estimate", col("sk")).cast("double") - col("n_exact")) /
         col("n_exact") <= 0.05).as("within_5pct"))
-    val allOut = per.agg(expr("hll_estimate(graft_hll_union(sk))").as("est"))
+    val allOut = per.agg(
+      call("hll_estimate", call("graft_hll_union", col("sk"))).as("est"))
       .crossJoin(broadcast(
         e.agg(countDistinct(col("user_id")).cast("bigint").as("n_exact"))))
       .select(lit("__all__").as("event_type"), col("n_exact"),
@@ -709,15 +709,16 @@ object LlmQueries {
   def kllQuantiles(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "events")
     val per = e.groupBy("event_type").agg(
-      expr("kll_sketch(value)").as("sk"),
+      call("kll_sketch", col("value")).as("sk"),
       round(expr("percentile(value, 0.48)"), 6).as("lo"),
       round(expr("percentile(value, 0.52)"), 6).as("hi"),
       count(lit(1)).cast("bigint").as("n"))
       .materialized("q_kll_per_type") // lazy: first branch populates (r10 §6)
     val perOut = per.select(col("event_type"), col("n"),
-      expr("kll_quantile(sk, 0.5d)").between(col("lo"), col("hi"))
+      call("kll_quantile", col("sk"), lit(0.5)).between(col("lo"), col("hi"))
         .as("median_within_2pct_rank"))
-    val allOut = per.agg(expr("kll_quantile(kll_merge(sk), 0.5d)").as("m"))
+    val allOut = per.agg(
+      call("kll_quantile", call("kll_merge", col("sk")), lit(0.5)).as("m"))
       .crossJoin(broadcast(e.agg(
         round(expr("percentile(value, 0.48)"), 6).as("lo"),
         round(expr("percentile(value, 0.52)"), 6).as("hi"),
@@ -737,8 +738,8 @@ object LlmQueries {
     val e = t(s, dir, "events")
     // the incremental shape: sketch each slice once, merge the slices
     val merged = e.groupBy(pmod(col("user_id"), lit(8)).as("bucket"))
-      .agg(expr("cms_sketch(event_type)").as("sk"))
-      .agg(expr("cms_merge(sk)").as("sk"))
+      .agg(call("cms_sketch", col("event_type")).as("sk"))
+      .agg(call("cms_merge", col("sk")).as("sk"))
     // checkpoint: per-type counts feed both the output rows and the
     // N-total for the error bound — one events scan, not two (the
     // sketch branch is the only other scan of the raw table)
@@ -746,7 +747,7 @@ object LlmQueries {
       .agg(count(lit(1)).cast("bigint").as("n_exact"))
       .materialized("q_cms_per_type") // lazy: first branch populates (r10 §6)
     val tot = per.agg(sum(col("n_exact")).cast("bigint").as("n_total"))
-    val est = expr("cms_estimate(sk, event_type)")
+    val est = call("cms_estimate", col("sk"), col("event_type"))
     per
       .crossJoin(broadcast(merged))
       .crossJoin(broadcast(tot))
@@ -1187,7 +1188,7 @@ object LlmQueries {
       .select(to_date(col("ts")).as("day"), col("user_id"))
     // one sketch + exact-distinct row per day, built once
     val daily = e.groupBy("day")
-      .agg(expr("hll_sketch(user_id)").as("sk"))
+      .agg(call("hll_sketch", col("user_id")).as("sk"))
       .materialized("q_rolling_wau_daily") // lazy: first branch populates (r10 §6)
     val served = daily
       .select(explode(sequence(lit(0), lit(6))).as("off"), col("day"), col("sk"))
@@ -1195,7 +1196,8 @@ object LlmQueries {
     val est = served
       .join(daily.select("day"), Seq("day"), "left_semi")
       .groupBy("day")
-      .agg(expr("hll_estimate(graft_hll_union(sk))").cast("double").as("est"))
+      .agg(call("hll_estimate", call("graft_hll_union", col("sk")))
+        .cast("double").as("est"))
     // exact baseline = the q_rolling_dau pipeline, reused not re-derived
     val exact = Queries.rollingDau(s, dir)
     exact.join(est, "day")
@@ -1218,8 +1220,8 @@ object LlmQueries {
     val e = t(s, dir, "events")
       .select(col("user_id"), pmod(col("event_id"), lit(2)).as("par"))
     val sk = e.agg(
-      expr("cms_sketch(CASE WHEN par = 0 THEN user_id END)").as("ska"),
-      expr("cms_sketch(CASE WHEN par = 1 THEN user_id END)").as("skb"),
+      call("cms_sketch", when(col("par") === 0, col("user_id"))).as("ska"),
+      call("cms_sketch", when(col("par") === 1, col("user_id"))).as("skb"),
       sum(when(col("par") === 0, 1L).otherwise(0L)).as("na"),
       sum(when(col("par") === 1, 1L).otherwise(0L)).as("nb"))
     val exact = e.groupBy("user_id").agg(
@@ -1227,7 +1229,7 @@ object LlmQueries {
         sum(when(col("par") === 1, 1L).otherwise(0L)).as("fb"))
       .agg(sum(col("fa") * col("fb")).as("exact_join_size"))
     sk.crossJoin(exact)
-      .withColumn("_est", expr("cms_join_size(ska, skb)"))
+      .withColumn("_est", call("cms_join_size", col("ska"), col("skb")))
       .select(col("exact_join_size"),
         (col("_est") >= col("exact_join_size")).as("est_at_least_exact"),
         (col("_est") <= col("exact_join_size") + lit(3L) * col("na") *
@@ -1247,7 +1249,7 @@ object LlmQueries {
       // count the VECTORS summed, not all rows: vec_sum_micros skips
       // null embeddings, so a null row must not deflate the centroid
       .agg(count(col("embedding")).as("n"),
-        expr("vec_sum_micros(embedding)").as("sm"))
+        call("vec_sum_micros", col("embedding")).as("sm"))
       .select(col("label"), col("n"),
         posexplode(col("sm")).as(Seq("dim", "sum_micros")))
       .select(col("label"), col("dim"), col("n"), col("sum_micros"),

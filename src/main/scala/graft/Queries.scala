@@ -9,6 +9,7 @@ import graft.sources.Discovery
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.GraftFunctions.call
 
 /** The operator-coverage query suite (SURVEY §2): each entry exercises
   * one implemented operator against the synthetic testdata tables and
@@ -126,8 +127,7 @@ object Queries {
   /** F1 via the native codegen'd [[graft.expr.ExtractDatesExpr]] —
     * must hash-match the same oracle as the declarative cascade. */
   def f1DatesNative(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
-    val dt = call_function("extract_dates",
+    val dt = call("extract_dates",
       orderFname(col("o_orderdate")), lit("month"))
     t(s, dir, "orders").select(col("o_orderkey"),
       dt.getField("start_datetime").as("start_datetime"),

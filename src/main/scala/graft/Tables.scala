@@ -21,7 +21,6 @@ object Tables {
     * epoch micros DuckDB sees — and keeps every downstream operator on
     * one timestamp type). */
   def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    GraftFunctions.register(s) // graft SQL functions ride along everywhere
     val df = s.read.parquet(s"$dir/$name.parquet")
     df.schema.fields.foldLeft(df) {
       case (acc, f) if f.dataType == org.apache.spark.sql.types.LongType &&

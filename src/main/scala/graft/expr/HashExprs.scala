@@ -46,18 +46,6 @@ object HashCore extends Serializable {
   }
 }
 
-/** Column-level entry point — wraps the expression directly (no
-  * session-registry dependency), so operator code can use it like any
-  * `functions._` builtin. */
-object Md5Prefix {
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.catalyst.expressions.Literal
-  import org.apache.spark.sql.graftbridge.ExprColumn
-  def apply(str: Column, nHex: Int): Column =
-    ExprColumn.column(
-      Md5PrefixExpr(ExprColumn.expression(str), Literal(nHex)))
-}
-
 case class Md5PrefixExpr(left: Expression, right: Expression)
   extends BinaryExpression {
 

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.GraftFunctions.call
 
 /** F1 `extract_dates` — filename → (start, end, single) datetimes.
   *
@@ -30,7 +31,7 @@ object Dates {
     *                      to a range (`regex.py:24-27`).
     */
   def extractDates(filename: Column, datetimeRange: Column): Column =
-    call_function("extract_dates", filename, datetimeRange)
+    call("extract_dates", filename, datetimeRange)
 
   /** Convenience overload for a constant range config. */
   def extractDates(filename: Column, datetimeRange: Option[String]): Column =

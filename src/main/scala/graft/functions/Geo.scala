@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.GraftFunctions.call
 
 /** Geometry columns (G1 with F7, F8, F9; G2) over the native
   * `cmr_geometry` and `geometry_bbox` kernels ([[graft.expr.GeoCore]]);
@@ -19,10 +20,10 @@ object Geo {
     */
   def cmrGeometry(polygons: Column, boxes: Column,
                   reverseCoords: Column): Column =
-    call_function("cmr_geometry", polygons, boxes, reverseCoords)
+    call("cmr_geometry", polygons, boxes, reverseCoords)
 
   /** bbox of a Polygon geometry struct produced by [[cmrGeometry]] —
     * native [[graft.expr.GeometryBboxExpr]]. */
   def geometryBbox(geometry: Column): Column =
-    call_function("geometry_bbox", geometry)
+    call("geometry_bbox", geometry)
 }

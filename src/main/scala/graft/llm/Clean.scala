@@ -100,7 +100,6 @@ object Clean {
   def contaminationReport(train: DataFrame, test: DataFrame,
                           idCol: String, textCol: String,
                           k: Int = 8): DataFrame = {
-    graft.GraftFunctions.register(train.sparkSession)
     val testGrams = test
       .select(explode(Dedup.shingleHashes(col(textCol), k)).as("__g"))
       .distinct()
@@ -132,7 +131,6 @@ object Clean {
     * 64-bit collision; training pipelines accept that rate. */
   def decontaminate(train: DataFrame, test: DataFrame, idCol: String,
                     textCol: String, k: Int = 8): DataFrame = {
-    graft.GraftFunctions.register(train.sparkSession)
     val testGrams = test
       .select(explode(Dedup.shingleHashes(col(textCol), k)).as("__g"))
       .distinct()

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Materializer.MaterializeOps
+import graft.GraftFunctions.call
 
 /** Deduplication operators for training-data pipelines.
   *
@@ -14,12 +15,6 @@ import graft.Materializer.MaterializeOps
   * and compares only within buckets.
   */
 object Dedup {
-
-  /** The native dedup expressions resolve through the session function
-    * registry — make sure they're registered before analysis. */
-  private def reg(df: DataFrame): DataFrame = {
-    graft.GraftFunctions.register(df.sparkSession); df
-  }
 
   /** Decouple expensive per-row projections (shingle/minhash/simhash/
     * fingerprint chains) from the scan partitioning. A small corpus
@@ -152,13 +147,13 @@ object Dedup {
     * and was ~10x slower). Set semantics (distinct) match [[shingles]]
     * up to 64-bit collisions (~2^-40 per doc pair). */
   def shingleHashes(text: Column, k: Int): Column =
-    call_function("shingle_hashes", text, lit(k))
+    call("shingle_hashes", text, lit(k))
 
   /** MinHash signature: for each permutation i, min over shingle hashes
     * of `a_i*h + b_i` (64-bit wrap-around arithmetic) — native
     * [[graft.expr.MinhashSigExpr]]. */
   def minhashSignature(hashes: Column, numHashes: Int): Column =
-    call_function("minhash_sig", hashes, lit(numHashes))
+    call("minhash_sig", hashes, lit(numHashes))
 
   /** Banded-LSH keys: signature split into `bands` bands of
     * `numHashes/bands` rows each; key = (band index, hash of band slice). */
@@ -217,7 +212,7 @@ object Dedup {
       // interpreted zip_with twin was the hot path when borderline
       // families make candidate counts quadratic
       val est = (a: Column, b: Column) =>
-        call_function("sig_agree", a, b).cast("double") / numHashes
+        call("sig_agree", a, b).cast("double") / numHashes
       buckets
         .select(explode(bucketPairs(col("members"), (x, y) => struct(
           x.getField("doc_id").as("id_a"),
@@ -266,14 +261,14 @@ object Dedup {
     // without this the normalize+tokenize+hash kernel ran over the
     // full corpus twice (the same reason nearDuplicates persists its
     // shingle frame)
-    val sh = reg(docs).select(col(idCol).as("jid"),
+    val sh = docs.select(col(idCol).as("jid"),
       shingleHashes(col(textCol), k).as("sh"))
       .materialized("ngram_jaccard_shingles", eager = true)
     pairs
       .join(sh.withColumnRenamed("jid", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
       .join(sh.withColumnRenamed("jid", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
       .withColumn("jaccard",
-        call_function("set_jaccard", col("sh_a"), col("sh_b")))
+        call("set_jaccard", col("sh_a"), col("sh_b")))
       .drop("sh_a", "sh_b")
   }
 
@@ -289,7 +284,7 @@ object Dedup {
   def editDistanceVerify(pairs: DataFrame, docs: DataFrame, idCol: String,
                          textCol: String,
                          maxDist: Option[Int] = None): DataFrame = {
-    val txt = reg(docs).select(col(idCol).as("jid"),
+    val txt = docs.select(col(idCol).as("jid"),
       col(textCol).as("jtxt"))
     val joined = pairs
       .join(txt.withColumnRenamed("jid", "id_a")
@@ -403,7 +398,7 @@ object Dedup {
   def nearDuplicates(docs: DataFrame, idCol: String, textCol: String,
                      threshold: Double = 0.8, k: Int = 5,
                      numHashes: Int = 128, bands: Int = 32): DataFrame = {
-    val sh = spread(reg(docs), col(idCol)).select(col(idCol).as("jid"),
+    val sh = spread(docs, col(idCol)).select(col(idCol).as("jid"),
       shingleHashes(col(textCol), k).as("sh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -417,7 +412,7 @@ object Dedup {
         .join(sh.select(col("jid").as("id_a"), col("sh").as("sh_a")), "id_a")
         .join(sh.select(col("jid").as("id_b"), col("sh").as("sh_b")), "id_b")
         .withColumn("jaccard",
-          call_function("set_jaccard", col("sh_a"), col("sh_b")))
+          call("set_jaccard", col("sh_a"), col("sh_b")))
         .filter(col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
         .materialized("near_dup_pairs", eager = true)
@@ -433,7 +428,7 @@ object Dedup {
     * generation. */
   def signatureCatalog(docs: DataFrame, idCol: String, textCol: String,
                        k: Int = 5, numHashes: Int = 128): DataFrame =
-    spread(reg(docs), col(idCol)).select(col(idCol).as("doc_id"),
+    spread(docs, col(idCol)).select(col(idCol).as("doc_id"),
       minhashSignature(shingleHashes(col(textCol), k), numHashes).as("sig"))
 
   /** Candidate `(id_new, id_cat)` pairs whose signatures share an LSH
@@ -484,7 +479,7 @@ object Dedup {
     // The returned frame stays lazy (its plan — incl. the semi-join
     // prune — stays inspectable); only the candidate-sized corpus
     // shingle tail recomputes per action.
-    val bsh = spread(reg(batch), col(idCol)).select(col(idCol).as("jid"),
+    val bsh = spread(batch, col(idCol)).select(col(idCol).as("jid"),
       shingleHashes(col(textCol), k).as("sh"))
       .materialized("catalog_dedup_batch_shingles", eager = true)
     val bsig = bsh.select(col("jid").as("doc_id"),
@@ -498,7 +493,7 @@ object Dedup {
     // in executedPlan) and dies in doExecuteBroadcast. The pruned
     // frame is candidate-sized, so the fixed-width shuffle is cheap
     // and decouples the shingle chain from the semi-join's width.
-    val csh = reg(corpus).join(needed, Seq(idCol), "left_semi")
+    val csh = corpus.join(needed, Seq(idCol), "left_semi")
       .repartition(corpus.sparkSession.sparkContext.defaultParallelism,
         col(idCol))
       .select(col(idCol).as("cid"), shingleHashes(col(textCol), k).as("csh"))
@@ -508,7 +503,7 @@ object Dedup {
       .join(csh.select(col("cid").as("id_cat"), col("csh").as("sh_cat")),
         "id_cat")
       .withColumn("jaccard",
-        call_function("set_jaccard", col("sh_new"), col("sh_cat")))
+        call("set_jaccard", col("sh_new"), col("sh_cat")))
       .filter(col("jaccard") >= threshold)
       .select("id_new", "id_cat", "jaccard")
   }
@@ -707,12 +702,12 @@ object Dedup {
                                         w: Int): DataFrame = {
     require(spanChars >= 1, s"spanChars must be >= 1, got $spanChars")
     require(w >= 1, s"winnow window must be >= 1, got $w")
-    reg(docs)
+    docs
       .select(col(idCol).as("doc_id"),
         Text.normalize(col(textCol)).as("__norm"))
       .filter(length(col("__norm")) >= spanChars)
       .select(col("doc_id"), col("__norm"),
-        explode(call_function("span_anchors", col("__norm"),
+        explode(call("span_anchors", col("__norm"),
           lit(spanChars), lit(w))).as("pos"))
       .select(col("doc_id"), col("pos"),
         md5(call_function("substring", col("__norm"), col("pos"),
@@ -913,7 +908,7 @@ object Dedup {
   /** 64-bit SimHash over normalized word hashes: bit j of the result is
     * the sign of the sum over tokens of ±1 for that token-hash bit.
     * Pure per-row work, no shuffle — native [[graft.expr.SimhashExpr]]. */
-  def simhash(text: Column): Column = call_function("simhash64", text)
+  def simhash(text: Column): Column = call("simhash64", text)
 
   /** Hamming distance between two 64-bit simhashes. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
@@ -926,7 +921,7 @@ object Dedup {
                       maxDist: Int = 3,
                       maxBucketSize: Int = 1000): DataFrame =
     simhashNearDupsFromHashes(
-      spread(reg(docs), col(idCol)).select(col(idCol).as("doc_id"),
+      spread(docs, col(idCol)).select(col(idCol).as("doc_id"),
         simhash(col(textCol)).as("sh")),
       maxDist, maxBucketSize)
 

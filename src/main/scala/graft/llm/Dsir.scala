@@ -3,6 +3,7 @@ package graft.llm
 import graft.Materializer.MaterializeOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.GraftFunctions.call
 
 /** DSIR-style importance scoring for data selection (Xie et al. 2023,
   * "Data Selection for Language Models via Importance Resampling"):
@@ -38,7 +39,7 @@ object Dsir {
   /** Bucket id (0..nBuckets-1) of one n-gram string: first 8 hex
     * digits of md5, mod nBuckets — engine-replayable, no xxhash. */
   def bucketOf(ngram: Column, nBuckets: Int): Column =
-    pmod(graft.expr.Md5Prefix(ngram, 8), lit(nBuckets.toLong))
+    pmod(call("md5_prefix", ngram, lit(8)), lit(nBuckets.toLong))
 
   /** All hashed n-gram occurrences from a MATERIALIZED token-array
     * column (unigrams + space-joined bigrams), row-local. `ws` must

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.GraftFunctions.call
 
 /** The full Gopher quality-rule battery (Rae et al. 2021, "Scaling
   * Language Models: Methods, Analysis & Insights from Training
@@ -76,10 +77,9 @@ object Gopher {
     * Resolves to the native [[graft.expr.GopherReportExpr]] (one
     * tokenize + one JVM pass per n-gram size; the nine interpreted
     * HOF folds of its twin `SpecTwins.reportHof` measured ~2 ms/doc —
-    * 9.6 s warm for the sf0.1 corpus vs ~0.5 s native). Callers must have
-    * [[graft.GraftFunctions.register]]ed the session (filterCorpus
-    * and the query registry do). */
-  def report(text: Column): Column = call_function("gopher_report", text)
+    * 9.6 s warm for the sf0.1 corpus vs ~0.5 s native). Works on any
+    * session: no function registration is needed. */
+  def report(text: Column): Column = call("gopher_report", text)
 
   /** Verdict over a [[report]] struct: true iff NO rule fires. All
     * comparisons are integer cross-multiplications of the exact
@@ -162,8 +162,7 @@ object Gopher {
     * GopherSpec pins gopher_keep == keep(report(...)) bit-for-bit. */
   def filterCorpus(docs: DataFrame, textCol: String,
                    cfg: Config = Config()): DataFrame = {
-    graft.GraftFunctions.register(docs.sparkSession)
-    docs.filter(call_function("gopher_keep", col(textCol),
+    docs.filter(call("gopher_keep", col(textCol),
       typedlit(thresholds(cfg))))
   }
 }

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.GraftFunctions.call
 
 /** Corpus-level set similarity from mergeable MinHash sketches — the
   * production use of [[graft.expr.MinhashUnionAgg]]: estimate
@@ -24,22 +25,18 @@ import org.apache.spark.sql.functions._
   */
 object GroupSimilarity {
 
-  private def reg(df: DataFrame): DataFrame = {
-    graft.GraftFunctions.register(df.sparkSession); df
-  }
-
   /** One MinHash signature + distinct-element count per group.
     * `elem` may repeat within a group (min is idempotent); the count
     * is over distinct elements. One keyed shuffle. */
   def groupSignatures(elems: DataFrame, groupCol: String, elemCol: String,
                       numHashes: Int = 128): DataFrame =
-    reg(elems)
+    elems
       .select(col(groupCol).as("group"),
-        call_function("minhash_sig",
+        call("minhash_sig",
           array(xxhash64(col(elemCol))), lit(numHashes)).as("sig"),
         col(elemCol).as("elem"))
       .groupBy("group")
-      .agg(call_function("minhash_union", col("sig")).as("sig"),
+      .agg(call("minhash_union", col("sig")).as("sig"),
         countDistinct(col("elem")).cast("bigint").as("n_distinct"))
 
   /** Jaccard estimate for every unordered group pair from the group
@@ -51,10 +48,9 @@ object GroupSimilarity {
       col("n_distinct").as("n_a"))
     val b = sigs.select(col("group").as("group_b"), col("sig").as("sig_b"),
       col("n_distinct").as("n_b"))
-    reg(sigs)
     a.join(b, col("group_a") < col("group_b"))
       .select(col("group_a"), col("group_b"), col("n_a"), col("n_b"),
-        (call_function("sig_agree", col("sig_a"), col("sig_b"))
+        (call("sig_agree", col("sig_a"), col("sig_b"))
           .cast("double") / numHashes).as("jaccard_est"))
   }
 

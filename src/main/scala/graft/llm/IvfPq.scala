@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.GraftFunctions.call
 
 /** IVF-PQ — the composed billion-scale ANN index (FAISS's
   * `IndexIVFPQ`): a coarse quantizer partitions the corpus into
@@ -95,15 +96,14 @@ object IvfPq {
              residualCb: Seq[Seq[Seq[Double]]],
              idCol: String = "vec_id",
              vecCol: String = "embedding"): DataFrame = {
-    graft.GraftFunctions.register(corpus.sparkSession)
     val v = col(vecCol)
     val cellCol = element_at(
-      call_function("pq_encode", v, typedlit(Seq(coarse)),
+      call("pq_encode", v, typedlit(Seq(coarse)),
         typedlit(Pq.plainBias(Seq(coarse))), lit(0)), 1)
     corpus.select(col(idCol).as("vec_id"), v.as("v"),
         cellCol.as("cell"))
       .select(col("vec_id"), col("cell"),
-        call_function("pq_encode", col("v"), typedlit(residualCb),
+        call("pq_encode", col("v"), typedlit(residualCb),
           typedlit(residualBias(coarse, residualCb)), col("cell"))
           .as("codes"))
   }
@@ -115,7 +115,6 @@ object IvfPq {
                         residualCb: Seq[Seq[Seq[Double]]],
                         idCol: String = "vec_id",
                         vecCol: String = "embedding"): DataFrame = {
-    graft.GraftFunctions.register(corpus.sparkSession)
     val m = residualCb.length
     val dsub = residualCb.head.head.length
     val v = transform(col(vecCol), _.cast("double"))
@@ -155,7 +154,6 @@ object IvfPq {
                  nProbe: Int = 4, shortlist: Int = 32,
                  idCol: String = "vec_id",
                  vecCol: String = "embedding"): DataFrame = {
-    graft.GraftFunctions.register(codes.sparkSession)
     val m = residualCb.length
     val dsub = residualCb.head.head.length
     val q = queries.select(col(idCol).cast("long").as("qid"),

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.GraftFunctions.call
 
 /** Domain-mixture materialization — turn per-source target weights
   * into an actual training corpus with deterministic, reproducible
@@ -31,7 +32,7 @@ object Mixing {
     * md5(key): 2^32 buckets, exactly representable in a double —
     * DuckDB and Spark compute the identical value. */
   def frac32(key: Column): Column =
-    graft.expr.Md5Prefix(key.cast("string"), 8)
+    call("md5_prefix", key.cast("string"), lit(8))
       .cast("double") / 4294967296.0
 
   /** Materialize the mixture. Output = input columns + `copy`

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.GraftFunctions.call
 
 /** Product quantization (Jégou et al., "Product Quantization for
   * Nearest Neighbor Search", TPAMI 2011) — the memory-compression
@@ -160,9 +161,8 @@ object Pq {
   def encode(corpus: DataFrame, cb: Seq[Seq[Seq[Double]]],
              idCol: String = "vec_id",
              vecCol: String = "embedding"): DataFrame = {
-    graft.GraftFunctions.register(corpus.sparkSession)
     corpus.select(col(idCol).as("vec_id"),
-      call_function("pq_encode", col(vecCol), typedlit(cb),
+      call("pq_encode", col(vecCol), typedlit(cb),
         typedlit(plainBias(cb)), lit(0)).as("codes"))
   }
 
@@ -172,7 +172,6 @@ object Pq {
   def encodeDeclarative(corpus: DataFrame, cb: Seq[Seq[Seq[Double]]],
                         idCol: String = "vec_id",
                         vecCol: String = "embedding"): DataFrame = {
-    graft.GraftFunctions.register(corpus.sparkSession)
     val m = cb.length
     val dsub = cb.head.head.length
     val v = transform(col(vecCol), _.cast("double"))
@@ -192,9 +191,6 @@ object Pq {
                  cb: Seq[Seq[Seq[Double]]], kTop: Int,
                  shortlist: Int = 32, idCol: String = "vec_id",
                  vecCol: String = "embedding"): DataFrame = {
-    // self-contained for the persist-codes / fresh-session path, like
-    // encode (the rerank uses native cosine_sim)
-    graft.GraftFunctions.register(codes.sparkSession)
     val m = cb.length
     val dsub = cb.head.head.length
     // per-query tables: dot(q_sub, centroid) for every (sub, code) —

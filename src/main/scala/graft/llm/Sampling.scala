@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.GraftFunctions.call
 
 /** Deterministic, engine-independent sampling and dataset splits —
   * the reproducibility primitive a training-data pipeline needs:
@@ -23,10 +24,10 @@ import org.apache.spark.sql.functions._
 object Sampling {
 
   /** Bucket 0..255 from the first two hex digits of md5(key) —
-    * native [[graft.expr.Md5Prefix]], value-identical to the
+    * native [[graft.expr.Md5PrefixExpr]], value-identical to the
     * conv/substring/md5 chain without the hex-string round-trip. */
   def bucket256(key: Column): Column =
-    graft.expr.Md5Prefix(key.cast("string"), 2).cast("int")
+    call("md5_prefix", key.cast("string"), lit(2)).cast("int")
 
   /** Keep ~`num`/256 of rows, deterministically by key. */
   def deterministicSample(df: DataFrame, key: Column, num: Int): DataFrame = {
@@ -63,7 +64,7 @@ object Sampling {
                      n: Int): DataFrame = {
     require(n > 0, s"weightedSample needs n > 0, got $n")
     // uniform from the first 8 md5 hex digits, offset to avoid ln(0)
-    val u = (graft.expr.Md5Prefix(key.cast("string"), 8)
+    val u = (call("md5_prefix", key.cast("string"), lit(8))
       .cast("double") + 0.5) / 4294967296.0
     df.filter(weight > 0)
       .withColumn("__wk", log(u) / weight.cast("double"))
@@ -86,7 +87,7 @@ object Sampling {
   def logWeightedSample(df: DataFrame, key: Column, logWeight: Column,
                         n: Int): DataFrame = {
     require(n > 0, s"logWeightedSample needs n > 0, got $n")
-    val u = (graft.expr.Md5Prefix(key.cast("string"), 8)
+    val u = (call("md5_prefix", key.cast("string"), lit(8))
       .cast("double") + 0.5) / 4294967296.0
     df.withColumn("__gk", logWeight.cast("double") - log(-log(u)))
       .orderBy(col("__gk").desc, key.cast("string"))

@@ -4,6 +4,7 @@ import graft.Materializer.MaterializeOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.GraftFunctions.call
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -22,14 +23,14 @@ object Similarity {
 
   /** Dot product, left-to-right fold — native
     * [[graft.expr.VecDotExpr]]. */
-  def dot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
+  def dot(a: Column, b: Column): Column = call("vec_dot", a, b)
 
   def norm(a: Column): Column =
     sqrt(aggregate(asDouble(a), lit(0.0), (acc, v) => acc + v * v))
 
   /** Cosine similarity — native [[graft.expr.CosineSimExpr]]. */
   def cosine(a: Column, b: Column): Column =
-    call_function("cosine_sim", a, b)
+    call("cosine_sim", a, b)
 
   /** Global top-k per query over a (query_id, nn_id, sim) frame, with
     * a per-partition bounded-heap pre-pass: each input partition emits
@@ -111,7 +112,7 @@ object Similarity {
     * planes = deterministic seed-7 gaussians — native
     * [[graft.expr.LshBucketExpr]]. */
   def lshBucket(vec: Column, nBits: Int, dim: Int): Column =
-    call_function("lsh_bucket", vec, lit(nBits), lit(dim))
+    call("lsh_bucket", vec, lit(nBits), lit(dim))
 
   /** Approximate top-k: bucket the corpus on `nBits` hyperplane signs,
     * join queries to their bucket, rank by exact cosine inside the
@@ -181,7 +182,6 @@ object Similarity {
       s"assignTop must be in [1, $nCentroids], got $assignTop")
     val spark = corpus.sparkSession
     import spark.implicits._
-    graft.GraftFunctions.register(spark)
     // centroids from the engine's deterministic sample-trained Lloyd
     // kernel (the [[semanticDedup]] lesson applied here too): Spark
     // ML's k-means|| pays ~20 scheduler-bound jobs and samples
@@ -204,7 +204,7 @@ object Similarity {
       if (assignTop == 1) {
         val zeroBias = Seq(Seq(cents.map(_ => 0.0)))
         c0.withColumn("cell", element_at(
-          call_function("pq_encode", col("nn_vec"), typedlit(Seq(cents)),
+          call("pq_encode", col("nn_vec"), typedlit(Seq(cents)),
             typedlit(zeroBias), lit(0)), 1))
       } else {
         val scoredCells = transform(cbLit, e => struct(
@@ -319,7 +319,6 @@ object Similarity {
                     vecCol: String = "embedding"): DataFrame = {
     require(assignTop >= 1 && assignTop <= nCentroids,
       s"assignTop must be in [1, $nCentroids], got $assignTop")
-    graft.GraftFunctions.register(corpus.sparkSession)
     val c0 = corpus.select(col(idCol).as("id"),
       asDouble(col(vecCol)).as("vec"))
     // EXACT-COLLAPSE pre-pass (r13): byte-identical non-degenerate
@@ -359,7 +358,7 @@ object Similarity {
     val (cand, memberEdges) =
       if (!collapse) (c0, None)
       else {
-        val selfDot = call_function("vec_dot", col("vec"), col("vec"))
+        val selfDot = call("vec_dot", col("vec"), col("vec"))
         val degenerate =
           selfDot.isNull || isnan(selfDot) || selfDot <= 0.0
         // min-agg + join-back (the Dedup.dropExactDuplicates idiom):
@@ -414,17 +413,11 @@ object Similarity {
         // cell), probe the 2 nearest coarse, take assignTop fine.
         val router = buildRouter(corpus, nCentroids, assignTop,
           idCol, vecCol)
-        // expressions with non-Expression params can't ride through
-        // call_function's fixed registrations — build the Column
-        // DIRECTLY around the expression (ExprColumn bridge) instead
-        // of registering a per-router session function: the r13
-        // registry scheme retained one entry (closure pinning the
-        // ~k·dim-double tensors) per distinct router for the
-        // session's lifetime, an unbounded leak for a long-lived
-        // driver cycling corpora. The direct expression produces the
-        // IDENTICAL resolved plan (same SemRouteExpr node) with
-        // nothing to deregister — the tensors' lifetime is the
-        // plan's, exactly as it should be
+        // SemRouteExpr carries the router's tensors, not Expressions,
+        // so it has no builder in GraftFunctions' table: build its
+        // Column directly (ExprColumn bridge). A per-router session
+        // function would pin the ~k·dim-double tensors for the
+        // session's lifetime; here they live as long as the plan
         import org.apache.spark.sql.graftbridge.ExprColumn
         val routeCol = ExprColumn.column(graft.expr.SemRouteExpr(
           ExprColumn.expression(col("vec")), router))

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.GraftFunctions.call
 
 /** Text-analysis pack for large-scale training-data pipelines: token
   * counting, quality scoring, language ID, fingerprinting. All per-row
@@ -113,7 +114,7 @@ object Text {
     * Collision-free in practice at catalog scale for dedup pre-keys.
     * Native [[graft.expr.FingerprintExpr]]. */
   def fingerprint(text: Column): Column =
-    call_function("text_fingerprint", text)
+    call("text_fingerprint", text)
 
   /** PII redaction: emails, IPv4 addresses and long digit runs
     * (phone-ish) replaced with fixed tokens. Patterns stay in the
@@ -159,10 +160,9 @@ object Text {
     * stay in integer cross-multiplication:
     * `H >= t  <=>  round(ln(n) x 1e6) x n - sum >= t x n x 1e6`.
     * Entropy itself = `ln(n) - sum / (n x 1e6)` nats. Native
-    * [[graft.expr.CharEntropyExpr]]; callers must have registered
-    * [[graft.GraftFunctions]]. */
+    * [[graft.expr.CharEntropyExpr]]. */
   def charEntropy(text: Column): Column =
-    call_function("char_entropy_stats", text)
+    call("char_entropy_stats", text)
 
   /** All http(s) URLs in the text (RE2-safe pattern — the oracle runs
     * the identical regex). The domain blocklist/stat primitive of

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Materializer.MaterializeOps
+import graft.GraftFunctions.call
 
 /** Winnowing document fingerprints — Schleimer, Wilkerson & Aiken,
   * "Winnowing: Local Algorithms for Document Fingerprinting" (SIGMOD
@@ -93,7 +94,7 @@ object Winnow {
     // no 32-char hex string materialized per gram (the HOF twin
     // `SpecTwins.fingerprintsHof` keeps the declarative chain as the
     // equivalence reference)
-    val hash32 = graft.expr.Md5Prefix(col("gram"), 8)
+    val hash32 = call("md5_prefix", col("gram"), lit(8))
     val g = exploded
       .select(col(idCol), col("pos"), gram.as("gram"),
         greatest(count(lit(1)).over(byDoc) - (k - 1), lit(1)).as("mg"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.GraftFunctions.call
 
 /** J1 — multi-asset grouping ("product join"), the reference's only
   * real join (`cmr-query/handler.py:10-101`).
@@ -78,10 +79,6 @@ object MultiAsset {
   }
 
   def attach(objs: DataFrame, dataFile: String, dataFileRegex: String): DataFrame = {
-    // library consumers may call this on a fresh session (also via
-    // sources/Cmr) before any other operator has registered the graft
-    // functions — multi_asset_parts must resolve here regardless
-    graft.GraftFunctions.register(objs.sparkSession)
     // payload = every input column except the two this operator
     // (re)defines; carried through the shuffle as one struct
     val payload = objs.columns.filterNot(c => c == "assets" || c == "product_id").toSeq
@@ -93,7 +90,7 @@ object MultiAsset {
     val wide = graft.llm.Dedup.spread(objs, col("remote_fileurl"))
     val matched = wide
       .select(
-        call_function("multi_asset_parts", col("remote_fileurl"),
+        call("multi_asset_parts", col("remote_fileurl"),
           lit(dataFileRegex), lit(dataFile)).as("__ma"),
         struct(payload.map(col): _*).as("__row"))
       .filter(col("__ma").isNotNull)

@@ -111,7 +111,6 @@ object StacBuilder {
     * caller splits on). */
   def regexItems(objs: DataFrame, ev: PipelineEvent,
                  keep: Seq[String] = Nil): DataFrame = {
-    graft.GraftFunctions.register(objs.sparkSession)
     val url = col("remote_fileurl")
     val dt = datetimes(ev)
     val start = dt.getField("start_datetime")

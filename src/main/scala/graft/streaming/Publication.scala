@@ -59,7 +59,6 @@ object Publication {
                    catalogDir: String, quarantineDir: String,
                    maxAttempts: Int, batchId: Long = 0L): Unit = {
     if (batch0.isEmpty) return
-    graft.GraftFunctions.register(batch0.sparkSession)
     // one source read + datetime-extraction pass, not one per action:
     // this method runs up to 6 actions over the batch frame
     val batch = batch0.persist()

@@ -4,6 +4,7 @@ import graft.llm.Dedup
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.GraftFunctions.call
 
 /** Streaming near-duplicate detection: the batch MinHash-LSH pipeline
   * ([[graft.llm.Dedup]]) re-expressed as keyed state over an unbounded
@@ -45,11 +46,6 @@ object StreamingNearDup {
                  threshold: Double = 0.7, maxRepsPerBucket: Int = 8,
                  stateTtl: Option[String] = None): DataFrame = {
     require(numHashes % bands == 0, s"bands $bands must divide $numHashes")
-    // the signature/band expressions resolve through the session
-    // function registry — register here so this entry point works on
-    // a fresh session (flagAgainstCatalog already does; tests mask a
-    // missing registration by registering globally)
-    graft.GraftFunctions.register(docs.sparkSession)
     val exploded = docs.select(
       col(idCol).cast("string").as("id"),
       Dedup.minhashSignature(
@@ -199,7 +195,6 @@ object StreamingNearDup {
   def flagAgainstCatalog(stream: DataFrame, idCol: String, textCol: String,
                          buckets: DataFrame,
                          threshold: Double = 0.7, k: Int = 5): DataFrame = {
-    graft.GraftFunctions.register(stream.sparkSession)
     // driver probe of the STATIC side (never the stream): signature
     // width must be uniform, band count = max band index + 1
     val hdr = buckets.agg(
@@ -240,7 +235,7 @@ object StreamingNearDup {
           "catalog swap")))
       .drop("__w")
       .withColumn("est",
-        call_function("sig_agree", col("sig"), col("cat_sig"))
+        call("sig_agree", col("sig"), col("cat_sig"))
           .cast("double") / numHashes)
       .filter(col("est") >= threshold)
       .select(col("id"), col("cat_id"), col("est"),

@@ -7,11 +7,12 @@ import org.apache.spark.sql.classic.ExpressionUtils
 /** The one `private[sql]` doorway the engine needs: wrap a Catalyst
   * [[Expression]] as a user-facing [[Column]] (and back). Lives inside
   * Spark's `sql` package purely for access — no Spark internals are
-  * modified. This lets expressions whose constructor takes
-  * non-Expression state (e.g. [[graft.expr.SemRouteExpr]]'s router
-  * tensors) ride into a plan directly, without registering a
-  * per-instance session function whose registry entry would pin the
-  * state for the session's lifetime (round-13 ADVICE item). */
+  * modified. [[graft.GraftFunctions.call]] builds every named kernel
+  * through it, so no session function registry is involved; it also
+  * lets expressions whose constructor takes non-Expression state
+  * (e.g. [[graft.expr.SemRouteExpr]]'s router tensors) ride into a
+  * plan without a per-instance session function pinning that state
+  * for the session's lifetime. */
 object ExprColumn {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)

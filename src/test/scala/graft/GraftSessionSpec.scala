@@ -1,8 +1,13 @@
 package graft
 
+import graft.functions.{Dates, Geo}
+import graft.llm.{Dedup, Gopher, GroupSimilarity, Similarity, Text}
+import graft.pipeline.{EventJson, Runner}
 import java.lang.management.ManagementFactory
-import java.nio.file.Paths
+import java.nio.file.{Files, Paths}
 import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.spark.sql.{AnalysisException, Row, SparkSession}
+import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
 /** The shared test session is built by [[GraftSession.builder]], so the
@@ -23,6 +28,43 @@ class GraftSessionSpec extends SparkSuite {
     assert(sc.getConf.get("spark.log.level") == "WARN")
     assert(LogManager.getRootLogger.getLevel == Level.WARN)
     assert(sc.appName == "graft-tests")
+  }
+
+  test("Scala helpers reach their kernels on a session nobody registered") {
+    // a new session shares the context but not the function registry
+    val fresh = spark.newSession()
+    def rows(s: SparkSession): Seq[Row] = {
+      val docs = s.createDataFrame(Seq(
+        ("g1", "MOD09_2020-03-14_tile.tif",
+          "The cat sat on the mat and then the cat went to sleep."),
+        ("g2", "S2_20190701.tif",
+          "A quick brown fox jumps over the lazy dog near the river.")))
+        .toDF("g", "f", "text")
+      docs.select(
+        Dates.extractDates(col("f"), Option.empty[String]),
+        Geo.cmrGeometry(array(array(lit("1 2 3 4 5 6 1 2"))),
+          lit(null).cast("array<string>"), lit(false)),
+        Dedup.simhash(col("text")),
+        Text.fingerprint(col("text")),
+        Gopher.report(col("text")),
+        Similarity.cosine(array(lit(1.0), lit(2.0)), array(lit(2.0), lit(1.0))))
+        .orderBy("f").collect().toSeq ++
+        GroupSimilarity.groupSignatures(docs, "g", "text", 16)
+          .orderBy("group").collect().toSeq
+    }
+    assert(rows(fresh) == rows(spark))
+
+    val csv = Files.createTempFile("fresh", ".csv")
+    Files.writeString(csv, "s3_path\ns3://b/file_2020.tif\n")
+    val ev = EventJson.parse(
+      s"""{"collection": "c", "discovery": "inventory",
+         | "inventory_url": "$csv"}""".stripMargin)
+    assert(Runner.run(fresh, ev).items.count() == 1)
+
+    // no helper registered the session on the way
+    val err = intercept[AnalysisException](
+      fresh.sql("SELECT extract_dates('file_2020.tif')").collect())
+    assert(err.getMessage.contains("UNRESOLVED_ROUTINE"), err.getMessage)
   }
 
   test("launch-conf master and shuffle width beat the builder's defaults") {

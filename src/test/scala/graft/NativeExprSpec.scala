@@ -124,14 +124,14 @@ class NativeExprSpec extends SparkSuite {
       .toDF("t")
     for (n <- Seq(1, 2, 8, 15)) {
       val bad = edge.select(
-        graft.expr.Md5Prefix(col("t"), n).as("nat"),
+        GraftFunctions.call("md5_prefix", col("t"), lit(n)).as("nat"),
         conv(substring(md5(col("t")), 1, n), 16, 10).cast("long").as("hof"))
         .filter(col("nat") =!= col("hof")).count()
       assert(bad == 0, s"nHex=$n edge mismatch")
     }
     val docs = Tables.t(spark, "/root/testdata/sf0.001", "documents")
     val bad = docs.select(
-      graft.expr.Md5Prefix(col("text"), 8).as("nat"),
+      GraftFunctions.call("md5_prefix", col("text"), lit(8)).as("nat"),
       conv(substring(md5(col("text")), 1, 8), 16, 10).cast("long").as("hof"))
       .filter(col("nat") =!= col("hof")).count()
     assert(bad == 0)

@@ -28,7 +28,7 @@ class PlanSpec extends SparkSuite {
   private val counts: Seq[(String, Shape => Int)] = Seq(
     "cartesian" -> (_.cartesian), "exchanges" -> (_.exchanges),
     "kernels" -> (_.kernels), "lambdas" -> (_.lambdas),
-    "nested_loop" -> (_.nestedLoop))
+    "nested_loop" -> (_.nestedLoop), "reuse_points" -> (_.reusePoints))
 
   private def planOf(name: String): String =
     SparkEntry.queries(name)(spark, dir)
@@ -115,13 +115,19 @@ class PlanSpec extends SparkSuite {
     // merged-sketch aggregate crossed back over the data) is O(n)
     // work, not quadratic; any other non-equi join is a scale
     // regression. A why on an entry without such a join is stale.
+    // A reuse point's lineage is cut from the query's plan, so each
+    // `materialized(...)` site the query builds adds its own plan's
+    // counts to the query's line.
     val file = mapper.readTree(shapeFile.toFile)
     val listed = file.fieldNames.asScala.toSet
     val why = (q: String) => Option(file.get(q)).flatMap(e =>
       Option(e.get("why"))).map(_.asText)
-    val seen = SparkEntry.queries.keys.toSeq.sorted.map { q =>
-      q -> shape(SparkEntry.queries(q)(spark, dir))
-    }
+    val reuse = new ReuseShapes
+    Materializer.set(reuse)
+    val seen = try SparkEntry.queries.keys.toSeq.sorted.map { q =>
+      val own = shape(SparkEntry.queries(q)(spark, dir))
+      q -> reuse.drain().foldLeft(own)(_ + _)
+    } finally Materializer.reset()
     val text = seen.map { case (q, s) =>
       val fields = counts.map { case (k, f) => s""""$k": ${f(s)}""" } ++
         why(q).map(w => s""""why": ${mapper.writeValueAsString(w)}""")
@@ -174,9 +180,27 @@ object PlanSpec {
   /** Operator counts of one physical plan: exchanges (shuffle,
     * broadcast, reused), expression nodes of a `graft.expr` class
     * (native kernels), HOF lambdas, cartesian products and broadcast
-    * nested-loop joins. */
+    * nested-loop joins; `reusePoints` counts the reuse-point plans
+    * summed into it with `+`. */
   case class Shape(exchanges: Int, kernels: Int, lambdas: Int,
-                   cartesian: Int, nestedLoop: Int)
+                   cartesian: Int, nestedLoop: Int, reusePoints: Int = 0) {
+    def +(o: Shape): Shape = Shape(exchanges + o.exchanges,
+      kernels + o.kernels, lambdas + o.lambdas, cartesian + o.cartesian,
+      nestedLoop + o.nestedLoop, reusePoints + o.reusePoints)
+  }
+
+  /** Records the [[Shape]] of every reuse point built while installed
+    * (one `reusePoints` each), then checkpoints as the default does. */
+  final class ReuseShapes extends Materializer.Strategy {
+    private val built = scala.collection.mutable.ArrayBuffer.empty[Shape]
+    override def materialize(df: DataFrame, site: String,
+                             eager: Boolean): DataFrame = {
+      built += shape(df).copy(reusePoints = 1)
+      Materializer.LocalCheckpoint.materialize(df, site, eager)
+    }
+    /** The shapes recorded since the last call. */
+    def drain(): Seq[Shape] = { val s = built.toList; built.clear(); s }
+  }
 
   /** The [[Shape]] of `df`'s physical plan, through the AQE wrapper's
     * initial plan and into subqueries. Every evaluated occurrence

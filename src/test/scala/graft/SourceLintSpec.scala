@@ -121,6 +121,32 @@ class SourceLintSpec extends AnyFunSuite {
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 
+  test("kernels are reached through GraftFunctions.call, not the " +
+    "session registry") {
+    // A call_function or expr string resolves a kernel name only on a
+    // session someone registered; GraftFunctions.call builds the same
+    // expression from the registration table on any session. register
+    // stays the SQL-text surface for users, so nothing in src/main
+    // calls it.
+    assert(Files.isDirectory(mainSrc), s"run from the repo root: $mainSrc")
+    val allowed = mainSrc.resolve("graft/GraftFunctions.scala")
+    val names = GraftFunctions.registrations.map(_._1.funcName)
+      .mkString("(", "|", ")")
+    val banned = Seq(
+      "GraftFunctions\\.register\\(".r,
+      s"""call_function\\(\\s*"$names"""".r,
+      s"""\\bexpr\\(s?"[^"]*\\b$names\\(""".r)
+    val hits = Files.walk(mainSrc).iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") && p != allowed)
+      .toSeq.sorted
+      .flatMap { p =>
+        val src = code(p)
+        banned.flatMap(_.findAllIn(src)
+          .map(m => s"${mainSrc.relativize(p)}: $m"))
+      }
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
   test("README's Registered SQL functions table names exactly the " +
     "registered functions") {
     val readme = Files.readString(Paths.get("README.md"))
